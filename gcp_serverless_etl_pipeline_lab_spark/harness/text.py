@@ -642,8 +642,8 @@ def a0h_hybrid_multi_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a0i_lex_doc_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doc-membership probe of the persisted lexical index (round 12:
     operators/lexindex.indexed_doc_ids) — the primitive behind the
-    nightly retrieval loop's cross-increment dedup guard and the
-    hybrid-consistency invariant (streaming/retrieval_stream.py). The
+    nightly driver's cross-increment dedup guard and the
+    hybrid-consistency invariant (streaming/nightly.run_nightly). The
     asked set mixes every indexed doc_id with a shifted copy guaranteed
     absent, so both answers are exercised; the probe reads only the
     asked ids' ``db`` bucket partitions of the doclist artifact (plan

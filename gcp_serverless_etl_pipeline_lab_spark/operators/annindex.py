@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 
 from ..functions.local_frames import literal_frame
 
+from .incremental import _load_manifest, _write_manifest
 from .similarity import (
     _assign_cell,
     _dot,
@@ -58,8 +59,6 @@ from .similarity import (
     _sq_dist_expr,
     kmeans_centroids,
 )
-
-_MANIFEST = "_MANIFEST.json"
 
 # the ANN membership artifact (round-12 verdict task 6): one row per
 # indexed vector, hive-partitioned by vb = pmod(vec_id, VEC_BUCKETS) —
@@ -176,7 +175,7 @@ def build_ann_index(
         )
         trained_sr = float(sample_rate)
     cell_counts = _write_vectors_gen(corpus, path, 0, model)
-    _write_ann_manifest(
+    _write_manifest(
         path,
         {
             "version": 2,
@@ -263,25 +262,6 @@ def _write_veclist_gen(vectors: DataFrame, path: str, gen: int) -> None:
     )
 
 
-def _write_ann_manifest(path: str, man: dict) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, _MANIFEST + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(man, fh)
-    os.replace(tmp, os.path.join(path, _MANIFEST))
-
-
-def _load_ann_manifest(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, _MANIFEST)) as fh:
-        return json.load(fh)
-
-
 def append_ann_index(
     spark,
     increment: DataFrame,
@@ -313,7 +293,7 @@ def append_ann_index(
 
     from .incremental import _GENCLAIM_PREFIX, _claim_generation, _manifest_lock
 
-    man = _load_ann_manifest(path)
+    man = _load_manifest(path)
     if man.get("version", 1) < 2:
         raise ValueError(
             f"ANN index at {path} predates generations; rebuild with "
@@ -337,7 +317,7 @@ def append_ann_index(
     # otherwise; the model is never retrained by appends)
     drift_msd = _mean_assign_msd(increment, model)
     with _manifest_lock(path):
-        cur = _load_ann_manifest(path)
+        cur = _load_manifest(path)
         applied_now = {
             g.get("increment_id") for g in cur["generations"]
         } | set(cur.get("compacted_increments", []))
@@ -372,7 +352,7 @@ def append_ann_index(
                 "cell_counts": cell_counts,
             }
         )
-        _write_ann_manifest(path, cur)
+        _write_manifest(path, cur)
     try:
         os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
     except OSError:
@@ -382,7 +362,7 @@ def append_ann_index(
 
 def load_ann_model(path: str) -> tuple[int, list[tuple[int, list[float]]]]:
     """(dim, centroid model) from the index manifest."""
-    man = _load_ann_manifest(path)
+    man = _load_manifest(path)
     return int(man["dim"]), [
         (int(cid), [float(x) for x in vec]) for cid, vec in man["model"]
     ]
@@ -472,7 +452,7 @@ def delete_from_ann_index(
 
     from .incremental import _GENCLAIM_PREFIX, _claim_generation, _manifest_lock
 
-    man = _load_ann_manifest(path)
+    man = _load_manifest(path)
     if man.get("version", 1) < 2:
         raise ValueError(
             f"ANN index at {path} predates generations; rebuild with "
@@ -498,7 +478,7 @@ def delete_from_ann_index(
         .parquet(os.path.join(path, "tombstones", f"gen={gen}"))
     )
     with _manifest_lock(path):
-        cur = _load_ann_manifest(path)
+        cur = _load_manifest(path)
         applied_now = {
             t.get("increment_id") for t in cur.get("tombstones", [])
         } | set(cur.get("applied_deletes", []))
@@ -527,7 +507,7 @@ def delete_from_ann_index(
                 "max_gen": max(g["gen"] for g in cur["generations"]),
             }
         )
-        _write_ann_manifest(path, cur)
+        _write_manifest(path, cur)
     try:
         os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
     except OSError:
@@ -571,7 +551,7 @@ def _materialize_missing_veclists(spark, path: str) -> list[int]:
     from .incremental import _manifest_lock
 
     with _manifest_lock(path):
-        man = _load_ann_manifest(path)
+        man = _load_manifest(path)
         missing = [
             g["gen"]
             for g in man["generations"]
@@ -614,7 +594,7 @@ def indexed_vec_ids(
     ``generations`` restricts the probe to an explicit entry subset
     (the nightly consistency check scopes to tonight's generations);
     entries must come from this index's manifest."""
-    man = _load_ann_manifest(path)
+    man = _load_manifest(path)
     if man.get("version", 1) < 2:
         raise ValueError(
             f"ANN index at {path} predates generations; rebuild with "
@@ -692,7 +672,7 @@ def query_ann_index(
     ANDs with the per-query one)."""
     from pyspark.sql import Window
 
-    man = _load_ann_manifest(path)
+    man = _load_manifest(path)
     dim, model = load_ann_model(path)
     nprobe_eff = _effective_nprobe(man, nprobe, auto_escalate)
     q = queries.select(
@@ -816,7 +796,7 @@ def compact_ann_index(
         _split_fold_slice,
     )
 
-    man = _load_ann_manifest(path)
+    man = _load_manifest(path)
     if man.get("version", 1) < 2:
         raise ValueError(
             f"ANN index at {path} predates generations; rebuild with "
@@ -895,7 +875,7 @@ def compact_ann_index(
         if g.get("increment_id") is not None
     ]
     with _manifest_lock(path):
-        cur = _load_ann_manifest(path)
+        cur = _load_manifest(path)
         if {g["gen"] for g in cur["generations"]} != set(old_gens):
             raise RuntimeError(
                 f"concurrent append landed during compaction of {path}; "
@@ -927,7 +907,7 @@ def compact_ann_index(
         if carried:
             entry["carried_max_drift_msd"] = max(carried)
         cur["generations"] = keep_entries + [entry]
-        _write_ann_manifest(path, cur)
+        _write_manifest(path, cur)
     try:
         os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
     except OSError:
@@ -976,7 +956,7 @@ def serving_overlap_probe(
     never on the serving path. Returns None for an empty index."""
     from .similarity import brute_force_topk
 
-    man = _load_ann_manifest(path)
+    man = _load_manifest(path)
     dim = int(man["dim"])
     # ground truth over the LIVE population only (tombstone mask) — the
     # served probe masks identically, so overlap measures the probe, not
@@ -1029,7 +1009,7 @@ def record_serving_overlap(
     from .incremental import _manifest_lock
 
     with _manifest_lock(path):
-        man = _load_ann_manifest(path)
+        man = _load_manifest(path)
         tel = list(man.get("telemetry", []))
         tel.append(
             {
@@ -1042,7 +1022,7 @@ def record_serving_overlap(
             }
         )
         man["telemetry"] = tel[-keep_last:]
-        _write_ann_manifest(path, man)
+        _write_manifest(path, man)
 
 
 def ann_drift_report(path: str, ratio_threshold: float = DRIFT_REBUILD_RATIO) -> dict:
@@ -1065,7 +1045,7 @@ def ann_drift_report(path: str, ratio_threshold: float = DRIFT_REBUILD_RATIO) ->
     maintenance can never silently clear ``rebuild_recommended`` by
     diluting a drifted increment into a well-fitted base — only
     ``rebuild_ann_index``'s baseline reset clears it."""
-    man = _load_ann_manifest(path)
+    man = _load_manifest(path)
     baseline = man.get("baseline_msd")
     gens = []
     max_ratio = None
@@ -1097,7 +1077,7 @@ def ann_drift_report(path: str, ratio_threshold: float = DRIFT_REBUILD_RATIO) ->
         gens.append(entry)
     sr = man.get("train_sample_rate")
     # OBSERVED serving recall (serving_overlap_probe, recorded by the
-    # nightly loops) — only readings taken under the CURRENT model
+    # nightly driver) — only readings taken under the CURRENT model
     # epoch count, so a reading that triggered a rebuild cannot keep the
     # flag up after the rebuild fixed it. The epoch's FIRST reading is
     # its fresh-model baseline; decay = the latest reading dropping
@@ -1168,7 +1148,7 @@ def ann_index_stats(spark, path: str) -> "DataFrame":
     tombstones, model_epoch). Manifest-only in the common case; oracling
     the vector count against a fresh recount of the source embeddings
     (a0m_index_stats) parity-checks the append accounting."""
-    man = _load_ann_manifest(path)
+    man = _load_manifest(path)
     gens = man["generations"]
     if gens and all(g.get("cell_counts") for g in gens):
         nv = sum(
@@ -1225,7 +1205,7 @@ def rebuild_ann_index(
         _manifest_lock,
     )
 
-    man = _load_ann_manifest(path)
+    man = _load_manifest(path)
     if man.get("version", 1) < 2:
         raise ValueError(
             f"ANN index at {path} predates generations; rebuild with "
@@ -1255,7 +1235,7 @@ def rebuild_ann_index(
         if g.get("increment_id") is not None
     ]
     with _manifest_lock(path):
-        cur = _load_ann_manifest(path)
+        cur = _load_manifest(path)
         if {g["gen"] for g in cur["generations"]} != set(old_gens):
             raise RuntimeError(
                 f"concurrent append landed during retrain of {path}; "
@@ -1298,7 +1278,7 @@ def rebuild_ann_index(
                 "cell_counts": rebuild_cell_counts,
             }
         ]
-        _write_ann_manifest(path, cur)
+        _write_manifest(path, cur)
     try:
         os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
     except OSError:

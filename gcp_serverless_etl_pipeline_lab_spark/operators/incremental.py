@@ -415,7 +415,8 @@ def _split_fold_slice(
     ``protect_increments`` (round-12 advice on the one-legged-increment
     hazard): entries whose ``increment_id`` is in the set are PULLED OUT
     of the fold slice and kept listed under their own generation — the
-    nightly retrieval loop passes the lex-applied-but-ANN-pending ids so
+    nightly driver (streaming/nightly.run_nightly) passes the lex-applied
+    ids still pending in a sibling (ANN or text) leg so
     a compaction between a mid-night crash and its replay can never fold
     an increment whose sibling leg still needs ``exclude_increment_id``
     to find it. Protected entries keep their relative order ahead of the

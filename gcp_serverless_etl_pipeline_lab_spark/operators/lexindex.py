@@ -22,8 +22,8 @@ manifest replace as the one commit point, crash orphans invisible,
   The membership artifact: "are these doc_ids already indexed?" probes
   read only the asked ids' buckets — never the postings, whose doc_id
   column is |postings|-sized and term-bucketed (every bucket would
-  scan). Feeds the nightly loop's cross-increment dedup guard and the
-  hybrid-consistency check (streaming/retrieval_stream.py); includes
+  scan). Feeds the nightly driver's cross-increment dedup guard and the
+  hybrid-consistency check (streaming/nightly.run_nightly); includes
   tokenless docs (zero postings but counted in ``n_docs``). Pre-round-12
   indexes lack it — readers fall back to a postings scan.
 - ``doclist`` rows carry ``dl`` from round 13 (v3) so DELETES subtract
@@ -73,12 +73,13 @@ def _literal_terms(spark, terms):
 
 from .incremental import (
     _claim_generation,
+    _load_manifest,
     _manifest_lock,
+    _write_manifest,
 )
 
 TERM_BUCKETS = 64
 DOC_BUCKETS = 64
-_MANIFEST = "_MANIFEST.json"
 
 _POSTINGS_SCHEMA = "term string, doc_id bigint, tf bigint, dl int, tb int"
 # positions (round-14 verdict task 4 — phrase queries): one row per
@@ -216,25 +217,6 @@ def _write_doclist_gen(
     )
 
 
-def _write_lex_manifest(path: str, man: dict) -> None:
-    import json
-    import os
-
-    os.makedirs(path, exist_ok=True)
-    tmp = os.path.join(path, _MANIFEST + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(man, fh)
-    os.replace(tmp, os.path.join(path, _MANIFEST))
-
-
-def _load_lex_manifest(path: str) -> dict:
-    import json
-    import os
-
-    with open(os.path.join(path, _MANIFEST)) as fh:
-        return json.load(fh)
-
-
 def build_lexical_index(
     docs: DataFrame,
     path: str,
@@ -256,7 +238,7 @@ def build_lexical_index(
     if positions:
         _write_positions_gen(_positions_of(docs, id_col, text_col), path, 0)
     n_docs, sum_dl = _corpus_stats(docs, text_col)
-    _write_lex_manifest(
+    _write_manifest(
         path,
         {
             # version 2 = the shared generational layout contract: the
@@ -301,13 +283,13 @@ def append_lexical_index(
     score. The ledger makes whole-increment replays no-ops, but a doc_id
     arriving inside TWO DIFFERENT increments is the caller's to exclude —
     ``indexed_doc_ids`` is the bounded probe for exactly this, and
-    ``streaming/retrieval_stream.run_nightly_retrieval_loop`` applies it
+    ``streaming/nightly.run_nightly`` applies it
     before every append. ``assert_new_doc_ids=True`` makes this append
     verify the contract itself (one doc-bucket-pruned anti-probe; off by
     default — the loop already guards, and a double probe buys nothing)."""
     import os
 
-    man = _load_lex_manifest(path)
+    man = _load_manifest(path)
     applied = {
         g.get("increment_id") for g in man["generations"]
     } | set(man.get("compacted_increments", []))
@@ -338,7 +320,7 @@ def append_lexical_index(
     from .incremental import _GENCLAIM_PREFIX
 
     with _manifest_lock(path):
-        cur = _load_lex_manifest(path)
+        cur = _load_manifest(path)
         applied_now = {
             g.get("increment_id") for g in cur["generations"]
         } | set(cur.get("compacted_increments", []))
@@ -361,7 +343,7 @@ def append_lexical_index(
                 "sum_dl": sum_dl,
             }
         )
-        _write_lex_manifest(path, cur)
+        _write_manifest(path, cur)
     try:
         os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
     except OSError:
@@ -399,8 +381,8 @@ def compact_lexical_index(
 
     ``protect_increments`` (round-12 advice): generation entries whose
     ``increment_id`` is in this set are pulled out of the fold slice and
-    stay listed under their own generation — the nightly retrieval loop
-    passes its lex-applied-but-ANN-pending ids so a fold can never
+    stay listed under their own generation — the nightly driver passes
+    its lex-applied ids still pending in a sibling leg so a fold can never
     absorb an increment whose crash-replay still needs
     ``indexed_doc_ids(..., exclude_increment_id=...)`` to match it (a
     folded entry's id moves to ``compacted_increments`` and the
@@ -411,7 +393,7 @@ def compact_lexical_index(
 
     from .incremental import _GENCLAIM_PREFIX, _split_fold_slice
 
-    man = _load_lex_manifest(path)
+    man = _load_manifest(path)
     entries = list(man["generations"])
     old_gens = [g["gen"] for g in entries]
     fold_entries, keep_entries = _split_fold_slice(
@@ -488,7 +470,7 @@ def compact_lexical_index(
         if g.get("increment_id") is not None
     ]
     with _manifest_lock(path):
-        cur = _load_lex_manifest(path)
+        cur = _load_manifest(path)
         if {g["gen"] for g in cur["generations"]} != set(old_gens):
             raise RuntimeError(
                 f"concurrent append landed during compaction of {path}; "
@@ -527,7 +509,7 @@ def compact_lexical_index(
                 "sum_dl": sum_dl,
             }
         ]
-        _write_lex_manifest(path, cur)
+        _write_manifest(path, cur)
     try:
         os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
     except OSError:
@@ -668,7 +650,7 @@ def delete_from_lexical_index(
 
     from .incremental import _GENCLAIM_PREFIX
 
-    man = _load_lex_manifest(path)
+    man = _load_manifest(path)
     applied = {
         t.get("increment_id") for t in man.get("tombstones", [])
     } | set(man.get("applied_deletes", []))
@@ -719,7 +701,7 @@ def delete_from_lexical_index(
         .parquet(os.path.join(path, "tombstones", f"gen={gen}"))
     )
     with _manifest_lock(path):
-        cur = _load_lex_manifest(path)
+        cur = _load_manifest(path)
         applied_now = {
             t.get("increment_id") for t in cur.get("tombstones", [])
         } | set(cur.get("applied_deletes", []))
@@ -754,7 +736,7 @@ def delete_from_lexical_index(
                 "sum_dl_removed": d_s,
             }
         )
-        _write_lex_manifest(path, cur)
+        _write_manifest(path, cur)
     try:
         os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))
     except OSError:
@@ -781,7 +763,7 @@ def _materialize_missing_doclists(spark, path: str) -> list[int]:
     import shutil
 
     with _manifest_lock(path):
-        man = _load_lex_manifest(path)
+        man = _load_manifest(path)
         missing = [
             g["gen"]
             for g in man["generations"]
@@ -820,7 +802,7 @@ def indexed_doc_ids(
     exclude_increment_id: str | None = None,
 ) -> DataFrame:
     """Which of ``ids`` (a 1-column (doc_id) frame) are ALREADY indexed —
-    the nightly loop's cross-increment dedup guard and the hybrid-
+    the nightly driver's cross-increment dedup guard and the hybrid-
     consistency probe. Reads only the asked ids' ``db`` bucket partitions
     of the doclist (the bucket list is a ≤DOC_BUCKETS-value driver-side
     collect over the IDS, the same bounded-gate class as the term-bucket
@@ -830,11 +812,11 @@ def indexed_doc_ids(
     itself committed — a crash-replay re-resolves an increment whose lex
     append already landed, and without the exclusion the guard would see
     the increment's own docs as "already indexed" and starve the ANN leg
-    (the retrieval loop's replay contract depends on this). The
+    (the nightly driver's replay contract depends on this). The
     exclusion requires that generation to still be LISTED: a compaction
     folds it into an ``increment_id=None`` entry and the exclusion stops
-    matching. The nightly loop guarantees the ordering (every pending
-    increment's BOTH legs are appended before it ever compacts); do not
+    matching. The nightly driver guarantees the ordering (its lex fold
+    protects every increment a sibling leg still lacks); do not
     hand-run ``compact_lexical_index`` between a mid-night crash and its
     replay.
 
@@ -845,7 +827,7 @@ def indexed_doc_ids(
     post-upgrade generations are always visible (the deleted fallback
     scanned ALL generations' postings, so one legacy generation made the
     probe blind to every later generation's tokenless docs too)."""
-    man = _load_lex_manifest(path)
+    man = _load_manifest(path)
     gens = [
         g for g in man["generations"]
         if exclude_increment_id is None
@@ -901,7 +883,7 @@ def bm25_topk_from_index(
     docs whose postings match EVERY distinct query term rank; scores
     unchanged, candidate set narrowed before top-k (identical to the
     scan twin's flag; oracled by a0j_bm25_conjunctive)."""
-    man = _load_lex_manifest(path)
+    man = _load_manifest(path)
     # live stats: generation sums minus active-tombstone removals — so
     # after a delete, N/avgdl are exactly what a rebuild-without would
     # compute (round 13)
@@ -1008,7 +990,7 @@ def phrase_matching_docs(
     terms = [t for t in terms if t != ""]
     if not terms:
         raise ValueError("phrase_matching_docs needs a non-empty phrase")
-    man = _load_lex_manifest(path)
+    man = _load_manifest(path)
     if not man.get("positions"):
         raise ValueError(
             f"lexical index at {path} was built without positions=True; "
@@ -1056,7 +1038,7 @@ def lexical_index_stats(spark, path: str) -> DataFrame:
     append/delete/fold accounting chain."""
     import math
 
-    man = _load_lex_manifest(path)
+    man = _load_manifest(path)
     n, s = _live_stats(man)
     avgdl = (
         # half-up at 1e-4, matching F.round/DuckDB ROUND (Python's
@@ -1109,7 +1091,7 @@ def proximity_matching_docs(
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
     n_terms = len(set(terms))
-    man = _load_lex_manifest(path)
+    man = _load_manifest(path)
     if not man.get("positions"):
         raise ValueError(
             f"lexical index at {path} was built without positions=True; "
@@ -1154,7 +1136,7 @@ def proximity_matching_docs_batch(
     tests/test_phrase.py."""
     if window < 1:
         raise ValueError(f"window must be >= 1, got {window}")
-    man = _load_lex_manifest(path)
+    man = _load_manifest(path)
     if not man.get("positions"):
         raise ValueError(
             f"lexical index at {path} was built without positions=True; "
@@ -1237,11 +1219,11 @@ def add_positions_to_index(
 
     Returns the generation numbers backfilled ([] if the index already
     serves positions)."""
-    man = _load_lex_manifest(path)
+    man = _load_manifest(path)
     if man.get("positions"):
         return []
     _materialize_missing_doclists(spark, path)
-    man = _load_lex_manifest(path)
+    man = _load_manifest(path)
     dl = _read_doclist(spark, path, man)
     if dl is None:
         raise ValueError(f"lexical index at {path} has no readable doclist")
@@ -1275,14 +1257,14 @@ def add_positions_to_index(
                 gen,
             )
         with _manifest_lock(path):
-            cur = _load_lex_manifest(path)
+            cur = _load_manifest(path)
             if {g["gen"] for g in cur["generations"]} != set(gens):
                 raise RuntimeError(
                     f"concurrent append landed during positions backfill "
                     f"of {path}; re-run add_positions_to_index"
                 )
             cur["positions"] = True
-            _write_lex_manifest(path, cur)
+            _write_manifest(path, cur)
         return gens
     finally:
         from .bpetrain import _checkpointed_rdd_id, _unpersist_rdd_ids
@@ -1311,7 +1293,7 @@ def phrase_matching_docs_batch(
     instead of once per phrase. Slot numbering compacts empty tokens
     exactly as the single-phrase spelling (``phrase_matching_docs``), so
     batch==single parity is exact — pinned in tests/test_phrase.py."""
-    man = _load_lex_manifest(path)
+    man = _load_manifest(path)
     if not man.get("positions"):
         raise ValueError(
             f"lexical index at {path} was built without positions=True; "
@@ -1638,7 +1620,7 @@ def hybrid_topk_rrf_batch(
                 "left_semi",
             )
         filter_pairs = nm
-    man = _load_lex_manifest(lex_path)
+    man = _load_manifest(lex_path)
     n_docs, sum_dl = _live_stats(man)
     if n_docs == 0:
         raise ValueError(f"lexical index at {lex_path} is empty")

@@ -79,7 +79,7 @@ def verify_forgotten(
     if lex_index_path is not None:
         from . import lexindex as lx
 
-        man = lx._load_lex_manifest(lex_index_path)
+        man = lx._load_manifest(lex_index_path)
         tomb = lx._active_tombstones(spark, lex_index_path, man) if served else None
         post = lx._read_postings(spark, lex_index_path, man)
         parts.append(
@@ -100,7 +100,7 @@ def verify_forgotten(
     if ann_index_path is not None:
         from . import annindex as ax
 
-        man = ax._load_ann_manifest(ann_index_path)
+        man = ax._load_manifest(ann_index_path)
         tomb = (
             ax._active_vec_tombstones(spark, ann_index_path, man)
             if served

@@ -2,17 +2,16 @@
 
 Reference DAG (`composer/sales_etl_dag.py:118-119`):
 sensor → ETL → quality gate → summary report (+ alert on failure).
-Here that's one driver function: wait-for-file (S4) → transform →
-gate (Q1) → report (A4), with the DAG's retry policy (Q3,
+Here that's one driver function: transform → gate (Q1) → report (A4);
+the file-arrival sensor (S4) is the streaming pickup in
+``streaming.file_stream``. The DAG's retry policy (Q3,
 `sales_etl_dag.py:27-28`: retries=2, retry_delay=5 min) and failure
 alerting (Q4, `sales_etl_dag.py:109-119`: a trigger_rule='one_failed'
-task) available via ``run_sales_etl_with_policy``. The streaming variant
-of the same transform lives in ``streaming.file_stream``.
+task) are available via ``run_sales_etl_with_policy``.
 """
 
 from __future__ import annotations
 
-import os
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -26,17 +25,6 @@ from .plans.quality import quality_gate
 from .plans.reports import summary_report
 from .sinks import write_dead_letter, write_warehouse
 from .sources.text_csv import read_raw_lines
-
-
-def wait_for_file(path: str, poke_interval_s: float = 60, timeout_s: float = 3600) -> bool:
-    """S4 file-arrival sensor (`composer/sales_etl_dag.py:42-48`):
-    poke every ``poke_interval_s`` up to ``timeout_s``."""
-    deadline = time.monotonic() + timeout_s
-    while time.monotonic() < deadline:
-        if os.path.exists(path):
-            return True
-        time.sleep(poke_interval_s)
-    return False
 
 
 @dataclass

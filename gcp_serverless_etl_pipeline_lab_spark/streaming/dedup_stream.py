@@ -96,9 +96,9 @@ def run_incremental_classify(
       replay-stable, so a crash between write and checkpoint commit
       re-OVERWRITES the same dir instead of appending a second copy —
       same discipline as file_stream.run_available_now);
-    - after merging accepted docs into the base, rebuild or extend the
-      index (append postings into existing ``gb=`` dirs) and keep
-      streaming — the index is immutable per base snapshot.
+    - the 'new' docs reach the index through ``nightly.run_nightly``
+      (the classify → run_nightly recipe in its docstring), one
+      immutable generation per epoch, and the stream keeps going.
 
     ``classify_batch_vs_index``'s driver-side gram-bucket gate (a <=64
     value collect) runs once per micro-batch inside foreachBatch, where
@@ -132,163 +132,3 @@ def run_incremental_classify(
         .start()
         .awaitTermination()
     )
-
-
-def run_nightly_loop(
-    spark,
-    input_dir: str,
-    index_path: str,
-    merged_dir: str,
-    out_path: str,
-    checkpoint_dir: str,
-    threshold: float = 0.8,
-    compact_every: int | None = None,
-    vacuum_min_age_seconds: float | None = None,
-    max_generations_to_fold: int | None = None,
-) -> dict:
-    """One iteration of the FULL nightly dedup loop — the composition
-    tests/test_nightly_loop.py drives by hand, as one idempotent call:
-
-    1. stream-classify every newly arrived batch file against the
-       persisted index (``run_incremental_classify``: checkpointed
-       pickup, exactly-once ``epoch=`` category dirs under
-       ``out_path``);
-    2. for each epoch not yet absorbed: join its 'new' doc_ids back to
-       their text, land them in ``merged_dir/epoch=<id>`` (overwrite —
-       replay-stable), and ``append_to_index`` keyed ``epoch-<id>``.
-
-    Crash anywhere and re-call: the stream's checkpoint skips classified
-    files, the corpus epoch dir re-OVERWRITES identically, and the
-    append's increment-id ledger makes the index commit exactly-once.
-    Order matters: the corpus write precedes the append commit, so an
-    epoch whose id is already in the index ledger is GUARANTEED to have
-    its corpus dir complete — the ledger is the loop's progress marker.
-    The merged corpus (base table plus ``read_warehouse(merged_dir)``)
-    stays equivalent to what a full rebuild would index — pinned by the
-    integration test.
-
-    ``compact_every`` closes the loop's maintenance gap (round-10
-    verdict task 6): appending forever grows one generation per night,
-    and probes union one scan per generation — when the manifest lists
-    at least ``compact_every`` generations after this night's merges,
-    the loop runs ``compact_index`` before returning. Compaction is
-    crash-safe by the same ledger discipline as the appends: applied
-    epoch ids move into ``compacted_increments``, so a replay across
-    the compact boundary still skips every absorbed epoch, and a crash
-    DURING compaction leaves an orphan fold no reader sees (the next
-    loop call simply compacts again).
-
-    ``max_generations_to_fold`` bounds the policy's maintenance window
-    (round-11 verdict task 5): a full fold rewrites the whole index —
-    at 100 TB that grows with INDEX size — while folding only the
-    newest K generations (LSM-style; the previous fold is itself the
-    newest generation next time, so tiers merge geometrically) costs
-    recent-increment volume. Probe parity is exact either way
-    (compact_index's contract). None = full fold.
-
-    ``vacuum_min_age_seconds`` completes the hygiene side: after the
-    merges (and any compaction), ``vacuum_index`` sweeps generation
-    debris older than the horizon — crashed appends' orphans and the
-    pre-compaction dirs compact deliberately leaves for in-flight
-    readers. Size the horizon beyond the longest probe/append the
-    deployment can run (the reader-grace contract in vacuum_index's
-    docstring); None (default) skips vacuuming.
-
-    Returns {"classified_epochs": [...], "merged_epochs": [...],
-    "new_docs": n, "compacted_generation": gen-or-None,
-    "vacuumed": [relpaths]} for observability.
-
-    The text join-back reads the whole inbox (new docs' text lives only
-    there) — archive absorbed inbox files on whatever cadence keeps that
-    scan bounded; the stream's checkpoint is unaffected by archival.
-    """
-    import os
-    import re
-
-    from ..operators.incremental import (
-        _load_manifest,
-        append_to_index,
-        compact_index,
-        exact_dups_vs_index,
-        vacuum_index,
-    )
-
-    run_incremental_classify(
-        spark, input_dir, index_path, out_path, checkpoint_dir, threshold
-    )
-    man = _load_manifest(index_path)
-    applied = {
-        g.get("increment_id") for g in man["generations"]
-    } | set(man.get("compacted_increments", []))
-    epochs = sorted(
-        int(m.group(1))
-        for m in (
-            re.fullmatch(r"epoch=(\d+)", name)
-            for name in (
-                os.listdir(out_path) if os.path.isdir(out_path) else []
-            )
-        )
-        if m
-    )
-    merged, n_new = [], 0
-    for eid in epochs:
-        if f"epoch-{eid}" in applied:
-            continue
-        cls = spark.read.parquet(os.path.join(out_path, f"epoch={eid}"))
-        new_ids = cls.filter(F.col("category") == "new").select("doc_id")
-        # the inbox is at-least-once: a doc_id retransmitted into TWO
-        # inbox files would otherwise join back twice and the append
-        # would index duplicate postings/size rows for that base_id,
-        # inflating every later probe's intersection counts — one row
-        # per doc_id enters the corpus and the index, ever. The pick is
-        # DETERMINISTIC (min_by content hash), not dropDuplicates'
-        # arbitrary first-seen: `inc` is lazily re-executed by the count,
-        # the corpus write, and the index append below, and a
-        # retransmission carrying DIFFERENT text must resolve to the
-        # same row in all three jobs or the merged corpus text diverges
-        # from the indexed postings (ADVICE round 10).
-        inc = (
-            spark.read.parquet(input_dir)
-            .select("doc_id", "text")
-            .join(new_ids, "doc_id")
-            .groupBy("doc_id")
-            .agg(F.expr("min_by(text, md5(text))").alias("text"))
-        )
-        # ...and the retransmission can also straddle EPOCHS: both copies
-        # classified 'new' in the same stream run (classification all
-        # happens before any merge), the first epoch's merge extends the
-        # index, and the second epoch would append the same content
-        # again. Re-probe the hash column at merge time — it reflects
-        # every epoch merged so far, making the whole run exactly-once
-        # regardless of how the files split into micro-batches. One
-        # narrow parquet-column semi-join per epoch.
-        seen = exact_dups_vs_index(spark, inc, index_path)
-        inc = inc.join(seen, "doc_id", "left_anti")
-        n = inc.count()
-        if n > 0:
-            # corpus BEFORE index commit: replay-stable overwrite, and
-            # the ledger then proves the corpus dir is complete
-            inc.write.mode("overwrite").parquet(
-                os.path.join(merged_dir, f"epoch={eid}")
-            )
-        append_to_index(spark, inc, index_path, increment_id=f"epoch-{eid}")
-        merged.append(eid)
-        n_new += n
-    compacted = None
-    if (
-        compact_every is not None
-        and len(_load_manifest(index_path)["generations"]) >= compact_every
-    ):
-        compacted = compact_index(
-            spark, index_path, max_generations_to_fold=max_generations_to_fold
-        )
-    vacuumed: list[str] = []
-    if vacuum_min_age_seconds is not None:
-        vacuumed = vacuum_index(index_path, vacuum_min_age_seconds)
-    return {
-        "classified_epochs": epochs,
-        "merged_epochs": merged,
-        "new_docs": n_new,
-        "compacted_generation": compacted,
-        "vacuumed": vacuumed,
-    }

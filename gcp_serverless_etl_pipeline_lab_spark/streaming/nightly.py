@@ -1,14 +1,13 @@
-"""ONE nightly driver for the whole index family (round-12 verdict
-task 5): three idempotent loops existed — ``dedup_stream.
-run_nightly_loop`` (text near-dup index), ``ann_stream.
-run_nightly_ann_loop`` (vectors), ``retrieval_stream.
-run_nightly_retrieval_loop`` (lex + ANN) — each with its own inbox.
-An operator feeding the same corpus increments to all of them ran three
-pickups, three resolutions, and three cross-increment guards over the
-same files. ``run_nightly`` is the composition: ONE inbox scan, ONE
-deterministic resolution and dedup guard per increment, then every
-configured index appended under the SAME increment_id — the per-index
-manifest ledgers remain the only checkpoint, so a crash between any two
+"""The nightly maintenance driver for the whole index family:
+``run_nightly`` is the one entry point that keeps the lexical (BM25),
+ANN and text near-dup indexes and the merged corpus fresh. ONE inbox
+scan, ONE deterministic resolution and dedup guard per increment, then
+every configured index appended under the SAME increment_id; delete
+increments, compaction, drift telemetry, the hybrid consistency check
+and vacuum follow. Any subset of the three indexes can be configured
+(lex+ANN is the retrieval stack, ``text_index_path`` alone the near-dup
+text index, ``ann_index_path`` alone the vector index). The per-index
+manifest ledgers are the only checkpoint, so a crash between any two
 appends and a re-call fills in exactly the missing legs.
 
 Crash-stable order per increment: **lexical → ANN → text**. Lex-first
@@ -21,8 +20,7 @@ dedup guard excludes the increment's own committed lex generation
 (``indexed_doc_ids(..., exclude_increment_id=...)``), and lex
 compaction PROTECTS increments any sibling leg hasn't applied yet
 (``protect_increments``) so that exclusion can never stop matching
-while a leg is pending — the round-12 advice hazard, closed
-structurally.
+while a leg is pending.
 
 The per-leg ledgers stay per-index deliberately: a shared external
 ledger would be a second source of truth to keep consistent with three
@@ -32,6 +30,39 @@ driver derives "pending" by set difference at run time."""
 from __future__ import annotations
 
 from pyspark.sql import functions as F
+
+
+def _resolve_increment(raw, id_col, text_col, embedding_col, has_vec):
+    """Deterministic one-row-per-doc resolution of an at-least-once
+    inbox increment: ``min_by`` of the whole row over a content key, so
+    every leg and every replay picks the same survivor — the key
+    tie-breaks on the embedding's rendering too (identical text
+    retransmitted with a re-embedded vector must not resolve arbitrarily
+    between legs or runs)."""
+    if has_vec:
+        key = f"struct(md5({text_col}), cast({embedding_col} AS string))"
+        row = F.expr(
+            f"min_by(struct({text_col} AS t, {embedding_col} AS e), {key})"
+        ).alias("_r")
+        return (
+            raw.select(
+                F.col(id_col).cast("long").alias(id_col),
+                text_col,
+                embedding_col,
+            )
+            .groupBy(id_col)
+            .agg(row)
+            .select(
+                id_col,
+                F.col("_r.t").alias(text_col),
+                F.col("_r.e").alias(embedding_col),
+            )
+        )
+    return (
+        raw.select(F.col(id_col).cast("long").alias(id_col), text_col)
+        .groupBy(id_col)
+        .agg(F.expr(f"min_by({text_col}, md5({text_col}))").alias(text_col))
+    )
 
 
 def _merged_children(merged_dir: str) -> list[str]:
@@ -298,19 +329,48 @@ def run_nightly(
     Per increment, in crash-stable order:
 
     1. resolve deterministically (one row per doc_id, min_by content
-       key — ``retrieval_stream._resolve_increment``);
+       key — ``_resolve_increment``);
     2. cross-increment dedup guard against the LEXICAL index's doclist
        when a lex index is configured (doc-bucket-pruned probe,
        excluding the increment's own committed generation so replays
        re-resolve identically); with no lex index, against the TEXT
-       index's stored hashes (content-exact guard — the dedup loop's
-       discipline);
+       index's stored hashes (content-exact guard);
     3. land the resolved rows in ``merged_dir/<increment_id>`` when
        given (overwrite — replay-stable; the merged corpus is what a
        full index rebuild would consume), then append: lexical, ANN
        (vec_id = doc_id; one retry across the benign model-epoch
        fence), text near-dup — each skipped when its ledger already
        holds the id.
+
+    Configure any non-empty subset of the three indexes. Lex + ANN is
+    the hybrid retrieval stack. ANN alone maintains vectors from the
+    same (doc_id, text, embedding) children (vec_id = doc_id; the ANN
+    leg skips a child without the embedding column).
+    ``text_index_path`` alone maintains the near-dup text index under the
+    content-exact guard.
+
+    Threshold near-dup filtering is not a leg; it composes in front of
+    the text-only configuration:
+
+    1. ``dedup_stream.run_incremental_classify(spark, raw_inbox,
+       text_index_path, out_path, checkpoint_dir, threshold)`` classifies
+       every newly arrived batch file against the text index into
+       ``out_path/epoch=<id>`` (checkpointed pickup);
+    2. for each ``epoch=<id>`` whose ``epoch-<id>`` the text index's
+       ledger does not hold yet, the ``category == 'new'`` doc_ids,
+       joined back to their (doc_id, text) rows in ``raw_inbox``, are
+       written (overwrite) as child ``epoch-<id>`` of a second inbox;
+    3. ``run_nightly(spark, second_inbox, text_index_path=...,
+       merged_dir=...)`` resolves each child with ``min_by(text,
+       md5(text))``, re-probes it with ``exact_dups_vs_index`` (a
+       retransmission that straddles two epochs is appended once), lands
+       it in ``merged_dir/epoch-<id>`` and only then commits it to the
+       text index's ledger as ``epoch-<id>``.
+
+    Re-running all three steps after a crash anywhere is exactly-once:
+    the stream checkpoint skips classified files, step 2 re-lands only
+    epochs the ledger lacks, and the ledger skips committed children
+    (tests/test_nightly_loop.py drives this composition).
 
     ``deletes_dir`` (round-14 verdict task 1 — takedown as a pipeline
     stage): every immediate child is ONE delete increment, a parquet
@@ -335,8 +395,13 @@ def run_nightly(
     3: a delete-heavy, append-quiet index otherwise accumulates
     tombstone generations without bound and every probe pays a growing
     mask union); the lexical fold protects increments pending in ANY
-    sibling leg; the ANN drift flag and the hybrid consistency check
-    run exactly as in the retrieval loop. Crash-matrix pytest:
+    sibling leg. With an ANN index, ``telemetry_queries`` held-out
+    queries measure tonight's served recall into the ANN manifest
+    before the drift report is read. With lex + ANN, the hybrid
+    consistency check anti-joins the ANN vec_ids against the lexical
+    doclist (``consistency_scope``: ``"new"`` checks only tonight's
+    generations, ``"full"`` every listed one, ``"off"`` none) and raises
+    on any vector the BM25 leg cannot see. Crash-matrix pytest:
     tests/test_unified_nightly.py replays after a kill between every
     adjacent pair of per-increment commits; tests/test_nightly_deletes.py
     does the same between every adjacent pair of per-delete legs.
@@ -355,35 +420,25 @@ def run_nightly(
     "compacted": {"lex": gen|None,
     "ann": gen|None, "text": gen|None}, "ann_docs_missing_from_lex": 0,
     "rebuild_recommended": bool|None, "max_drift_ratio": float|None,
-    "vacuumed": [relpaths]}."""
+    "served_overlap": float|None, "vacuumed": [relpaths]}."""
     import os
 
-    from .retrieval_stream import _resolve_increment
+    from ..operators.incremental import _load_manifest
 
     if lex_index_path is None and ann_index_path is None and text_index_path is None:
         raise ValueError("run_nightly needs at least one index path")
 
-    def _applied(load, path):
-        man = load(path)
+    def _applied(path):
+        if path is None:
+            return set()
+        man = _load_manifest(path)
         return {
             g.get("increment_id") for g in man["generations"]
         } | set(man.get("compacted_increments", []))
 
-    lex_applied: set = set()
-    ann_applied: set = set()
-    text_applied: set = set()
-    if lex_index_path is not None:
-        from ..operators.lexindex import _load_lex_manifest
-
-        lex_applied = _applied(_load_lex_manifest, lex_index_path)
-    if ann_index_path is not None:
-        from ..operators.annindex import _load_ann_manifest
-
-        ann_applied = _applied(_load_ann_manifest, ann_index_path)
-    if text_index_path is not None:
-        from ..operators.incremental import _load_manifest
-
-        text_applied = _applied(_load_manifest, text_index_path)
+    lex_applied = _applied(lex_index_path)
+    ann_applied = _applied(ann_index_path)
+    text_applied = _applied(text_index_path)
 
     appended_lex: list[str] = []
     appended_ann: list[str] = []
@@ -447,7 +502,7 @@ def run_nightly(
         ):
             # merged corpus BEFORE any index commit (replay-stable
             # overwrite): an id present in any ledger is guaranteed to
-            # have its corpus rows landed — the dedup loop's ordering
+            # have its corpus rows landed
             inc.write.mode("overwrite").parquet(os.path.join(merged_dir, name))
             # child id stats (round-15 task 2): one tiny aggregate on the
             # checkpointed increment so future delete-night purges can
@@ -667,14 +722,11 @@ def run_nightly(
     vacuumed: list[str] = []
     if lex_index_path is not None:
         from ..operators.incremental import _split_fold_slice
-        from ..operators.lexindex import (
-            _load_lex_manifest,
-            compact_lexical_index,
-        )
+        from ..operators.lexindex import compact_lexical_index
 
         # protect lex-applied increments pending in ANY sibling leg —
         # the replay guard's exclusion must keep matching them
-        lex_now = _load_lex_manifest(lex_index_path)
+        lex_now = _load_manifest(lex_index_path)
         lex_ids = {
             g.get("increment_id")
             for g in lex_now["generations"]
@@ -682,13 +734,9 @@ def run_nightly(
         }
         pending: set = set()
         if ann_index_path is not None:
-            from ..operators.annindex import _load_ann_manifest
-
-            pending |= lex_ids - _applied(_load_ann_manifest, ann_index_path)
+            pending |= lex_ids - _applied(ann_index_path)
         if text_index_path is not None:
-            from ..operators.incremental import _load_manifest
-
-            pending |= lex_ids - _applied(_load_manifest, text_index_path)
+            pending |= lex_ids - _applied(text_index_path)
         # fold on generation count OR on tombstone pressure (round-14
         # verdict task 3): a delete-heavy, append-quiet index never hits
         # compact_every, so its tombstone list — and every probe's mask
@@ -714,13 +762,9 @@ def run_nightly(
                     protect_increments=pending,
                 )
     if ann_index_path is not None:
-        from ..operators.annindex import (
-            _load_ann_manifest,
-            ann_drift_report,
-            compact_ann_index,
-        )
+        from ..operators.annindex import ann_drift_report, compact_ann_index
 
-        ann_now = _load_ann_manifest(ann_index_path)
+        ann_now = _load_manifest(ann_index_path)
         if (
             compact_tombstones_over is not None
             and len(ann_now.get("tombstones", [])) >= compact_tombstones_over
@@ -754,7 +798,7 @@ def run_nightly(
         rebuild = rep["rebuild_recommended"]
         drift = rep["max_ratio"]
     if text_index_path is not None:
-        from ..operators.incremental import _load_manifest, compact_index
+        from ..operators.incremental import compact_index
 
         text_now = _load_manifest(text_index_path)
         if (
@@ -771,14 +815,13 @@ def run_nightly(
     if ann_index_path is not None and lex_index_path is not None:
         from ..operators.annindex import (
             _active_vec_tombstones,
-            _load_ann_manifest,
             _mask_deleted_vecs,
             _materialize_missing_veclists,
             _read_veclist,
         )
         from ..operators.lexindex import indexed_doc_ids
 
-        ann_man = _load_ann_manifest(ann_index_path)
+        ann_man = _load_manifest(ann_index_path)
         if consistency_scope == "full":
             check_gens = ann_man["generations"]
         elif consistency_scope == "new":

@@ -118,3 +118,30 @@ def test_cc_matches_union_find(spark, edges):
     cc = connected_components(_pairs(spark, edges))
     got = {r.doc_id: r.cluster_id for r in cc.collect()}
     assert got == expected
+
+
+def test_loop_session_resyncs_caller_conf(spark):
+    """The CC loop's cached clone session re-reads the mirrored confs
+    from the caller on every call: a conf changed on the caller after
+    the first connected_components run reaches the next loop instead of
+    the clone keeping its first-use snapshot."""
+    from gcp_serverless_etl_pipeline_lab_spark.operators.cluster import (
+        _loop_session,
+    )
+
+    connected_components(_pairs(spark, [(1, 2)])).collect()
+    tz, parts = "spark.sql.session.timeZone", "spark.sql.shuffle.partitions"
+    old = {k: spark.conf.get(k) for k in (tz, parts)}
+    new_parts = str(int(old[parts]) + 3)
+    try:
+        spark.conf.set(tz, "America/New_York")
+        spark.conf.set(parts, new_parts)
+        iso = _loop_session(spark)
+        assert iso is not spark
+        assert iso.conf.get(tz) == "America/New_York"
+        assert iso.conf.get(parts) == new_parts
+        assert iso.conf.get("spark.sql.adaptive.enabled") == "false"
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+        _loop_session(spark)

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from gcp_serverless_etl_pipeline_lab_spark.operators import (
     annindex,
+    incremental,
     lexindex,
     retrieval,
 )
@@ -58,7 +59,7 @@ def test_delete_probe_equals_rebuild_without(spark, tmp_path):
         r["doc_id"] for r in survivors.select("doc_id").collect()
     }
     # live stats match the survivor corpus exactly
-    man = lexindex._load_lex_manifest(idx)
+    man = incremental._load_manifest(idx)
     n, s = lexindex._live_stats(man)
     srow = survivors.agg(
         F.count(F.lit(1)).alias("n"),
@@ -73,8 +74,8 @@ def test_delete_nonmember_is_noop(spark, tmp_path):
     lexindex.build_lexical_index(docs, idx)
     ghost = _ids(spark, [987_654_321, 987_654_322])
     assert lexindex.delete_from_lexical_index(spark, ghost, idx, "ghost") is False
-    assert "tombstones" not in lexindex._load_lex_manifest(idx) or not (
-        lexindex._load_lex_manifest(idx)["tombstones"]
+    assert "tombstones" not in incremental._load_manifest(idx) or not (
+        incremental._load_manifest(idx)["tombstones"]
     )
 
 
@@ -137,10 +138,10 @@ def test_full_fold_absorbs_tombstones_and_vacuum_sweeps(spark, tmp_path):
     )
     doomed = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id")
     assert lexindex.delete_from_lexical_index(spark, doomed, idx, "take") is True
-    tomb_gen = lexindex._load_lex_manifest(idx)["tombstones"][0]["gen"]
+    tomb_gen = incremental._load_manifest(idx)["tombstones"][0]["gen"]
     before = _rows(lexindex.bm25_topk_from_index(spark, idx, TERMS, k=10))
     gen = lexindex.compact_lexical_index(spark, idx)
-    man = lexindex._load_lex_manifest(idx)
+    man = incremental._load_manifest(idx)
     # fully absorbed: no active tombstones, ledger id preserved
     assert man.get("tombstones", []) == []
     assert man["applied_deletes"] == ["take"]
@@ -176,12 +177,12 @@ def test_partial_fold_keeps_covering_tombstone_active(spark, tmp_path):
     # fold only the two newest generations: gen 0 (the covered one) is
     # KEPT, so the tombstone must stay active and keep masking it
     lexindex.compact_lexical_index(spark, idx, max_generations_to_fold=2)
-    man = lexindex._load_lex_manifest(idx)
+    man = incremental._load_manifest(idx)
     assert len(man["tombstones"]) == 1
     assert _rows(lexindex.bm25_topk_from_index(spark, idx, TERMS, k=10)) == before
     # a later FULL fold absorbs it
     lexindex.compact_lexical_index(spark, idx)
-    man2 = lexindex._load_lex_manifest(idx)
+    man2 = incremental._load_manifest(idx)
     assert man2.get("tombstones", []) == []
     survivors = docs.subtract(
         docs.join(doomed, "doc_id", "left_semi")
@@ -258,9 +259,9 @@ def test_ann_delete_then_reappend_and_compact_retires(spark, tmp_path):
         )
     )
     # full fold applies the tombstone physically and retires it
-    tomb_gen = annindex._load_ann_manifest(idx)["tombstones"][0]["gen"]
+    tomb_gen = incremental._load_manifest(idx)["tombstones"][0]["gen"]
     annindex.compact_ann_index(spark, idx)
-    man = annindex._load_ann_manifest(idx)
+    man = incremental._load_manifest(idx)
     assert man.get("tombstones", []) == []
     assert man["applied_deletes"] == ["take"]
     assert annindex.delete_from_ann_index(
@@ -286,7 +287,7 @@ def test_ann_rebuild_drops_deleted_from_retrain(spark, tmp_path):
     doomed = emb.filter(F.col("vec_id") % 3 == 0).select("vec_id")
     assert annindex.delete_from_ann_index(spark, doomed, idx, "take") is True
     annindex.rebuild_ann_index(spark, idx, sample_rate=1.0)
-    man = annindex._load_ann_manifest(idx)
+    man = incremental._load_manifest(idx)
     assert man.get("tombstones", []) == []
     assert man["applied_deletes"] == ["take"]
     vecs = annindex._read_vectors(spark, idx, man)

@@ -9,7 +9,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from gcp_serverless_etl_pipeline_lab_spark.operators import lexindex, retrieval
+from gcp_serverless_etl_pipeline_lab_spark.operators import incremental, lexindex, retrieval
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
@@ -70,7 +70,7 @@ def test_compact_folds_generations_pure_rewrite(spark, tmp_path):
     )
     before = _rows(lexindex.bm25_topk_from_index(spark, idx, TERMS, k=10))
     gen = lexindex.compact_lexical_index(spark, idx)
-    man = lexindex._load_lex_manifest(idx)
+    man = incremental._load_manifest(idx)
     (fold,) = man["generations"]
     assert fold["gen"] == gen and man["compacted_increments"] == ["odd"]
     # stats preserved exactly through the fold

@@ -1,8 +1,9 @@
-"""ANN nightly maintenance loop (streaming/ann_stream.run_nightly_ann_loop,
-round-11 verdict task 4): ledger-driven inbox pickup, append idempotence
-across replays AND across the compact boundary, the compact_every
-policy, drift surfaced (and surviving compaction), crash-during-compact
-replay, and vacuum hygiene."""
+"""ANN nightly maintenance through ``run_nightly`` in its ANN-only
+configuration (``ann_index_path=`` alone; inbox children carry
+(doc_id, text, embedding), vec_id = doc_id): ledger-driven inbox pickup,
+append idempotence across replays AND across the compact boundary, the
+compact_every policy, drift surfaced (and surviving compaction),
+crash-during-compact replay, and vacuum hygiene."""
 
 from __future__ import annotations
 
@@ -13,9 +14,7 @@ from pyspark.sql import functions as F
 
 from gcp_serverless_etl_pipeline_lab_spark.operators import annindex, incremental
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
-from gcp_serverless_etl_pipeline_lab_spark.streaming.ann_stream import (
-    run_nightly_ann_loop,
-)
+from gcp_serverless_etl_pipeline_lab_spark.streaming.nightly import run_nightly
 
 from conftest import SF_SMOKE
 
@@ -25,7 +24,17 @@ def _emb(spark):
 
 
 def _write_epoch(df, inbox: str, name: str) -> None:
-    df.coalesce(1).write.mode("overwrite").parquet(os.path.join(inbox, name))
+    """Land (vec_id, embedding) rows as one nightly inbox child of
+    (doc_id, text, embedding)."""
+    df.select(
+        F.col("vec_id").alias("doc_id"),
+        F.concat(F.lit("vec "), F.col("vec_id").cast("string")).alias("text"),
+        "embedding",
+    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(inbox, name))
+
+
+def _nightly(spark, inbox, idx, **kw):
+    return run_nightly(spark, inbox, ann_index_path=idx, **kw)
 
 
 def test_ann_loop_ingests_idempotently_and_compacts_on_policy(spark, tmp_path):
@@ -36,35 +45,33 @@ def test_ann_loop_ingests_idempotently_and_compacts_on_policy(spark, tmp_path):
     annindex.build_ann_index(base, idx, 64, cells=8, iters=2, sample_rate=1.0)
 
     _write_epoch(emb.filter(F.col("vec_id") % 3 == 1), inbox, "epoch=1")
-    r1 = run_nightly_ann_loop(spark, inbox, idx)
-    assert r1["appended"] == ["epoch=1"] and r1["compacted_generation"] is None
-    assert r1["new_vectors"] > 0
+    r1 = _nightly(spark, inbox, idx)
+    assert r1["appended_ann"] == ["epoch=1"] and r1["compacted"]["ann"] is None
+    assert r1["new_docs"] > 0
 
     # replay: the ledger is the checkpoint — nothing re-appends
-    r2 = run_nightly_ann_loop(spark, inbox, idx)
-    assert r2["appended"] == [] and r2["skipped"] == ["epoch=1"]
+    r2 = _nightly(spark, inbox, idx)
+    assert r2["appended_ann"] == [] and r2["skipped"] == ["epoch=1"]
 
     # second night + compact policy: 3 generations listed -> fold;
     # telemetry on — the observed serving recall is measured over a
     # well-fitted full-coverage model, so it clears the floor and the
     # reading lands in the manifest
     _write_epoch(emb.filter(F.col("vec_id") % 3 == 2), inbox, "epoch=2")
-    r3 = run_nightly_ann_loop(
-        spark, inbox, idx, compact_every=3, telemetry_queries=4
-    )
-    assert r3["appended"] == ["epoch=2"]
-    assert r3["compacted_generation"] is not None
+    r3 = _nightly(spark, inbox, idx, compact_every=3, telemetry_queries=4)
+    assert r3["appended_ann"] == ["epoch=2"]
+    assert r3["compacted"]["ann"] is not None
     assert r3["served_overlap"] is not None
     assert r3["rebuild_recommended"] is False
-    tel = annindex._load_ann_manifest(idx)["telemetry"]
+    tel = incremental._load_manifest(idx)["telemetry"]
     assert tel[-1]["served_overlap"] == r3["served_overlap"]
-    man = annindex._load_ann_manifest(idx)
+    man = incremental._load_manifest(idx)
     assert len(man["generations"]) == 1
     assert set(man["compacted_increments"]) == {"epoch=1", "epoch=2"}
 
     # replay ACROSS the compact boundary: absorbed epochs still skipped
-    r4 = run_nightly_ann_loop(spark, inbox, idx)
-    assert r4["appended"] == [] and set(r4["skipped"]) == {"epoch=1", "epoch=2"}
+    r4 = _nightly(spark, inbox, idx)
+    assert r4["appended_ann"] == [] and set(r4["skipped"]) == {"epoch=1", "epoch=2"}
 
     # the maintained index queries identically to a single-writer build
     # over the same vectors under the same pinned model
@@ -87,7 +94,7 @@ def test_ann_loop_surfaces_drift_through_fold_and_vacuums(spark, tmp_path):
     idx = str(tmp_path / "ann")
     inbox = str(tmp_path / "inbox")
     annindex.build_ann_index(base, idx, 64, cells=8, iters=2, sample_rate=1.0)
-    baseline = annindex._load_ann_manifest(idx)["baseline_msd"]
+    baseline = incremental._load_manifest(idx)["baseline_msd"]
     s = (5.0 * baseline / 64.0) ** 0.5
     shifted = (
         emb.filter(F.col("vec_id") % 2 == 1)
@@ -102,14 +109,12 @@ def test_ann_loop_surfaces_drift_through_fold_and_vacuums(spark, tmp_path):
     _write_epoch(shifted, inbox, "epoch=1")
     # the night's fold (compact_every=2) must NOT clear the drift flag,
     # and the vacuum sweeps the pre-fold generation dirs
-    r = run_nightly_ann_loop(
-        spark, inbox, idx, compact_every=2, vacuum_min_age_seconds=0.0
-    )
-    assert r["compacted_generation"] is not None
+    r = _nightly(spark, inbox, idx, compact_every=2, vacuum_min_age_seconds=0.0)
+    assert r["compacted"]["ann"] is not None
     assert r["rebuild_recommended"] is True
     assert r["max_drift_ratio"] >= annindex.DRIFT_REBUILD_RATIO
     assert r["vacuumed"], "pre-fold generations were not swept"
-    live = {g["gen"] for g in annindex._load_ann_manifest(idx)["generations"]}
+    live = {g["gen"] for g in incremental._load_manifest(idx)["generations"]}
     assert set(os.listdir(os.path.join(idx, "vectors"))) == {
         f"gen={g}" for g in live
     }
@@ -128,7 +133,7 @@ def test_ann_loop_crash_during_compact_replays_clean(spark, tmp_path, monkeypatc
     )
     _write_epoch(emb.filter(F.col("vec_id") % 3 == 1), inbox, "epoch=1")
     _write_epoch(emb.filter(F.col("vec_id") % 3 == 2), inbox, "epoch=2")
-    run_nightly_ann_loop(spark, inbox, idx)  # appends committed
+    _nightly(spark, inbox, idx)  # appends committed
 
     real_lock = incremental._manifest_lock
 
@@ -137,11 +142,11 @@ def test_ann_loop_crash_during_compact_replays_clean(spark, tmp_path, monkeypatc
 
     monkeypatch.setattr(incremental, "_manifest_lock", crash_at_commit)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        run_nightly_ann_loop(spark, inbox, idx, compact_every=3)
+        _nightly(spark, inbox, idx, compact_every=3)
     monkeypatch.setattr(incremental, "_manifest_lock", real_lock)
 
     # manifest untouched by the crashed fold; its dir is an orphan
-    man = annindex._load_ann_manifest(idx)
+    man = incremental._load_manifest(idx)
     assert len(man["generations"]) == 3
     orphans = set(os.listdir(os.path.join(idx, "vectors"))) - {
         f"gen={g['gen']}" for g in man["generations"]
@@ -152,14 +157,12 @@ def test_ann_loop_crash_during_compact_replays_clean(spark, tmp_path, monkeypatc
     before = sorted(
         map(tuple, annindex.query_ann_index(spark, queries, idx, 5, 2).collect())
     )
-    r = run_nightly_ann_loop(
-        spark, inbox, idx, compact_every=3, vacuum_min_age_seconds=0.0
-    )
-    assert r["appended"] == [] and r["compacted_generation"] is not None
+    r = _nightly(spark, inbox, idx, compact_every=3, vacuum_min_age_seconds=0.0)
+    assert r["appended_ann"] == [] and r["compacted"]["ann"] is not None
     assert sorted(
         map(tuple, annindex.query_ann_index(spark, queries, idx, 5, 2).collect())
     ) == before
-    live = {g["gen"] for g in annindex._load_ann_manifest(idx)["generations"]}
+    live = {g["gen"] for g in incremental._load_manifest(idx)["generations"]}
     assert set(os.listdir(os.path.join(idx, "vectors"))) == {
         f"gen={g}" for g in live
     }

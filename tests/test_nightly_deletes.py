@@ -214,8 +214,8 @@ def test_tombstone_pressure_triggers_fold(spark, tmp_path):
     assert r["compacted"]["lex"] is not None
     assert r["compacted"]["ann"] is not None
     assert r["compacted"]["text"] is not None
-    assert not lexindex._load_lex_manifest(lex).get("tombstones", [])
-    assert not annindex._load_ann_manifest(ann).get("tombstones", [])
+    assert not incremental._load_manifest(lex).get("tombstones", [])
+    assert not incremental._load_manifest(ann).get("tombstones", [])
     assert not incremental._load_manifest(text).get("tombstones", [])
     # probes unchanged through the physical application
     _assert_forgotten(spark, corpus, indexed, vids, lex, ann, text, merged)

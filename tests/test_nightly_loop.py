@@ -7,11 +7,14 @@ manifest commit) and replay: convergence, no reclassification drift.
 This is the composition the 100 TB operating mode runs forever: per-batch
 cost tracks batch size (probe prunes to the batch's gram buckets; append
 cost tracks increment size), and every step is exactly-once (epoch dirs
-for the stream, increment_id ledger for the append)."""
+for the stream, increment_id ledger for the append). The packaged form
+is the classify -> run_nightly recipe in streaming/nightly.run_nightly's
+docstring, driven here by ``_classify_then_nightly``."""
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import functions as F
 
@@ -21,6 +24,7 @@ from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 from gcp_serverless_etl_pipeline_lab_spark.streaming.dedup_stream import (
     run_incremental_classify,
 )
+from gcp_serverless_etl_pipeline_lab_spark.streaming.nightly import run_nightly
 
 from conftest import SF_SMOKE
 
@@ -157,46 +161,103 @@ def test_nightly_loop_converges_across_crash(spark, tmp_path):
     assert os.path.isdir(os.path.join(idx, "grams", "gen=2"))
 
 
-def test_run_nightly_loop_api_is_idempotent_and_converges(spark, tmp_path):
-    """The packaged loop (streaming/dedup_stream.run_nightly_loop): two
-    nights through ONE call each, a crash-replay call in between (no-op),
-    and the final index equals a rebuild over base + everything merged."""
-    from gcp_serverless_etl_pipeline_lab_spark.streaming.dedup_stream import (
-        run_nightly_loop,
+def _classify_then_nightly(spark, tmp_path, idx, **kw):
+    """One night of the near-dup recipe (run_nightly's docstring):
+    stream-classify the raw inbox against the text index, land every
+    epoch the index's ledger lacks as child ``epoch-<id>`` of the
+    landing inbox (its 'new' doc_ids joined back to their text), then
+    ``run_nightly`` in its text-only configuration on that inbox."""
+    inbox, out = str(tmp_path / "inbox"), str(tmp_path / "out")
+    landing = str(tmp_path / "landing")
+    run_incremental_classify(
+        spark, inbox, idx, out, str(tmp_path / "ckpt"), threshold=THRESH
+    )
+    man = incremental._load_manifest(idx)
+    applied = {
+        g.get("increment_id") for g in man["generations"]
+    } | set(man.get("compacted_increments", []))
+    for name in sorted(os.listdir(out)):
+        m = re.fullmatch(r"epoch=(\d+)", name)
+        if m is None or f"epoch-{m.group(1)}" in applied:
+            continue
+        new_ids = (
+            spark.read.parquet(os.path.join(out, name))
+            .filter(F.col("category") == "new")
+            .select("doc_id")
+        )
+        spark.read.parquet(inbox).select("doc_id", "text").join(
+            new_ids, "doc_id"
+        ).write.mode("overwrite").parquet(
+            os.path.join(landing, f"epoch-{m.group(1)}")
+        )
+    return run_nightly(
+        spark, landing, text_index_path=idx,
+        merged_dir=str(tmp_path / "merged"), **kw,
     )
 
+
+def _merged(spark, tmp_path):
+    """The merged corpus: one parquet child per landed increment."""
+    return spark.read.option("recursiveFileLookup", "true").parquet(
+        str(tmp_path / "merged")
+    )
+
+
+def _probe_matches_rebuild(spark, tmp_path, base, idx):
+    """The maintained index probes exactly like a rebuild over base +
+    everything the nights merged."""
+    full = base.unionAll(_merged(spark, tmp_path).select("doc_id", "text"))
+    rebuilt = str(tmp_path / "rebuilt")
+    incremental.build_base_index(full, rebuilt, max_df=MAX_DF)
+    probe = base.filter(F.col("doc_id") % 7 == 0).select(
+        (F.col("doc_id") + 50_000_000).alias("doc_id"), "text"
+    )
+    via_loop = incremental.classify_batch_vs_index(spark, probe, idx)
+    via_rebuilt = incremental.classify_batch_vs_index(spark, probe, rebuilt)
+    assert sorted(map(tuple, via_loop.collect())) == sorted(
+        map(tuple, via_rebuilt.collect())
+    )
+
+
+def _land(df, tmp_path):
+    df.coalesce(1).write.mode("append").parquet(str(tmp_path / "inbox"))
+
+
+def test_classify_then_run_nightly_is_idempotent_and_converges(spark, tmp_path):
+    """The classify -> run_nightly composition: two nights through ONE
+    call each, a crash-replay call in between (no-op), and the final
+    index equals a rebuild over base + everything merged."""
     base, pool1, pool2 = _pools(spark)
     idx = str(tmp_path / "idx")
-    merged_dir = str(tmp_path / "merged")
-    inbox = str(tmp_path / "inbox")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
     incremental.build_base_index(base, idx, max_df=MAX_DF)
 
     # night 1: fresh docs + resubmissions
-    night1 = pool1.unionAll(
-        base.filter(F.col("doc_id") % 5 == 0).select(
-            (F.col("doc_id") + 30_000_000).alias("doc_id"), "text"
-        )
+    _land(
+        pool1.unionAll(
+            base.filter(F.col("doc_id") % 5 == 0).select(
+                (F.col("doc_id") + 30_000_000).alias("doc_id"), "text"
+            )
+        ),
+        tmp_path,
     )
-    night1.coalesce(1).write.mode("append").parquet(inbox)
-    s1 = run_nightly_loop(spark, inbox, idx, merged_dir, out, ckpt, THRESH)
-    assert s1["merged_epochs"] == [0] and s1["new_docs"] > 0
+    s1 = _classify_then_nightly(spark, tmp_path, idx)
+    assert s1["appended_text"] == ["epoch-0"] and s1["new_docs"] > 0
 
     # crash-replay: nothing new arrived; everything is a committed no-op
-    s_replay = run_nightly_loop(spark, inbox, idx, merged_dir, out, ckpt, THRESH)
-    assert s_replay["merged_epochs"] == [] and s_replay["new_docs"] == 0
+    s_replay = _classify_then_nightly(spark, tmp_path, idx)
+    assert s_replay["appended_text"] == [] and s_replay["new_docs"] == 0
+    assert s_replay["skipped"] == ["epoch-0"]
 
     # night 2: re-keyed copies of night-1 merges (must be exact_dup now)
-    merged1 = read_warehouse(spark, merged_dir)
+    merged1 = _merged(spark, tmp_path)
     resub2 = merged1.select(
         (F.col("doc_id") + 40_000_000).alias("doc_id"), "text"
     )
-    resub2.unionAll(pool2).coalesce(1).write.mode("append").parquet(inbox)
-    s2 = run_nightly_loop(spark, inbox, idx, merged_dir, out, ckpt, THRESH)
-    assert s2["merged_epochs"] == [1]
+    _land(resub2.unionAll(pool2), tmp_path)
+    s2 = _classify_then_nightly(spark, tmp_path, idx)
+    assert s2["appended_text"] == ["epoch-1"]
 
-    got2 = spark.read.parquet(os.path.join(out, "epoch=1"))
+    got2 = spark.read.parquet(str(tmp_path / "out" / "epoch=1"))
     resub_cats = {
         r.category
         for r in got2.join(resub2.select("doc_id"), "doc_id", "left_semi").collect()
@@ -204,83 +265,47 @@ def test_run_nightly_loop_api_is_idempotent_and_converges(spark, tmp_path):
     assert resub_cats == {"exact_dup"}, resub_cats
 
     # convergence: appended index == rebuild over base + merged corpus
-    full = base.unionAll(read_warehouse(spark, merged_dir).select("doc_id", "text"))
-    rebuilt = str(tmp_path / "rebuilt")
-    incremental.build_base_index(full, rebuilt, max_df=MAX_DF)
-    probe = base.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 50_000_000).alias("doc_id"), "text"
-    )
-    via_loop = incremental.classify_batch_vs_index(spark, probe, idx)
-    via_rebuilt = incremental.classify_batch_vs_index(spark, probe, rebuilt)
-    assert sorted(map(tuple, via_loop.collect())) == sorted(
-        map(tuple, via_rebuilt.collect())
-    )
+    _probe_matches_rebuild(spark, tmp_path, base, idx)
 
 
 def test_nightly_loop_compact_every_policy(spark, tmp_path):
-    """compact_every (round-10 verdict task 6): the loop compacts once
-    the manifest lists that many generations, replays across the compact
-    boundary stay no-ops (epoch ledger moves to compacted_increments),
-    and post-compaction nights keep converging to a rebuild."""
-    from gcp_serverless_etl_pipeline_lab_spark.streaming.dedup_stream import (
-        run_nightly_loop,
-    )
-
+    """compact_every: the text leg compacts once the manifest lists that
+    many generations, replays across the compact boundary stay no-ops
+    (epoch ledger moves to compacted_increments), and post-compaction
+    nights keep converging to a rebuild."""
     base, pool1, pool2 = _pools(spark)
     idx = str(tmp_path / "idx")
-    merged_dir = str(tmp_path / "merged")
-    inbox = str(tmp_path / "inbox")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
     incremental.build_base_index(base, idx, max_df=MAX_DF)
 
     # night 1: below the policy (gen0 + epoch-0 = 2 generations < 3)
-    pool1.coalesce(1).write.mode("append").parquet(inbox)
-    s1 = run_nightly_loop(
-        spark, inbox, idx, merged_dir, out, ckpt, THRESH, compact_every=3
-    )
-    assert s1["compacted_generation"] is None
+    _land(pool1, tmp_path)
+    s1 = _classify_then_nightly(spark, tmp_path, idx, compact_every=3)
+    assert s1["compacted"]["text"] is None
     assert len(incremental._load_manifest(idx)["generations"]) == 2
 
     # night 2 crosses the policy: 3 generations -> compact fires; the
     # zero-horizon vacuum then sweeps the unlisted pre-compaction dirs
-    pool2.coalesce(1).write.mode("append").parquet(inbox)
-    s2 = run_nightly_loop(
-        spark, inbox, idx, merged_dir, out, ckpt, THRESH,
-        compact_every=3, vacuum_min_age_seconds=0.0,
+    _land(pool2, tmp_path)
+    s2 = _classify_then_nightly(
+        spark, tmp_path, idx, compact_every=3, vacuum_min_age_seconds=0.0
     )
-    assert s2["compacted_generation"] is not None
+    gen = s2["compacted"]["text"]
+    assert gen is not None
     man = incremental._load_manifest(idx)
     assert len(man["generations"]) == 1
     assert set(man["compacted_increments"]) == {"epoch-0", "epoch-1"}
-    assert any(s.startswith("grams/gen=") for s in s2["vacuumed"]), s2
+    assert any(s.startswith("text:grams/gen=") for s in s2["vacuumed"]), s2
     gens_on_disk = sorted(os.listdir(os.path.join(idx, "grams")))
-    assert gens_on_disk == [f"gen={s2['compacted_generation']}"]
+    assert gens_on_disk == [f"gen={gen}"]
 
     # replay across the compact boundary: nothing re-merges, no re-compact
-    s3 = run_nightly_loop(
-        spark, inbox, idx, merged_dir, out, ckpt, THRESH, compact_every=3
-    )
-    assert s3["merged_epochs"] == [] and s3["compacted_generation"] is None
+    s3 = _classify_then_nightly(spark, tmp_path, idx, compact_every=3)
+    assert s3["appended_text"] == [] and s3["compacted"]["text"] is None
     assert s3["vacuumed"] == []
 
     # convergence after compaction: loop index == rebuild over the
     # merged corpus
-    from gcp_serverless_etl_pipeline_lab_spark.sinks import read_warehouse
-
-    full = base.unionAll(
-        read_warehouse(spark, merged_dir).select("doc_id", "text")
-    )
-    rebuilt = str(tmp_path / "rebuilt")
-    incremental.build_base_index(full, rebuilt, max_df=MAX_DF)
-    probe = base.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 50_000_000).alias("doc_id"), "text"
-    )
-    via_loop = incremental.classify_batch_vs_index(spark, probe, idx)
-    via_rebuilt = incremental.classify_batch_vs_index(spark, probe, rebuilt)
-    assert sorted(map(tuple, via_loop.collect())) == sorted(
-        map(tuple, via_rebuilt.collect())
-    )
+    _probe_matches_rebuild(spark, tmp_path, base, idx)
 
 
 def test_nightly_loop_at_least_once_inbox_indexes_once(spark, tmp_path):
@@ -290,28 +315,20 @@ def test_nightly_loop_at_least_once_inbox_indexes_once(spark, tmp_path):
     duplicate increment rows and append_to_index would double every
     posting/size row for that base_id, corrupting Jaccard for all later
     probes."""
-    from gcp_serverless_etl_pipeline_lab_spark.streaming.dedup_stream import (
-        run_nightly_loop,
-    )
-
     base, pool1, _ = _pools(spark)
     idx = str(tmp_path / "idx")
-    merged_dir = str(tmp_path / "merged")
-    inbox = str(tmp_path / "inbox")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
     incremental.build_base_index(base, idx, max_df=MAX_DF)
 
     fresh = pool1.limit(20)
     # the producer retries: the same rows land in TWO inbox files
-    fresh.coalesce(1).write.mode("append").parquet(inbox)
-    fresh.coalesce(1).write.mode("append").parquet(inbox)
-    s = run_nightly_loop(spark, inbox, idx, merged_dir, out, ckpt, THRESH)
+    _land(fresh, tmp_path)
+    _land(fresh, tmp_path)
+    s = _classify_then_nightly(spark, tmp_path, idx)
 
     # exactly one merged row per retransmitted doc_id (some of the 20 are
     # planted dups of the base and correctly classify away — what matters
     # is that NO doc_id entered twice)
-    got = read_warehouse(spark, merged_dir)
+    got = _merged(spark, tmp_path)
     assert 0 < got.count() == got.select("doc_id").distinct().count()
     assert s["new_docs"] == got.count()
 
@@ -328,35 +345,24 @@ def test_nightly_loop_at_least_once_inbox_indexes_once(spark, tmp_path):
 
 
 def test_nightly_loop_partial_fold_policy(spark, tmp_path):
-    """max_generations_to_fold in the loop (round-11 verdict task 5):
-    the policy's compaction folds only the newest K generations — the
-    base generation is left untouched (bounded maintenance window) —
-    and the loop keeps converging to a rebuild afterwards."""
-    from gcp_serverless_etl_pipeline_lab_spark.streaming.dedup_stream import (
-        run_nightly_loop,
-    )
-
+    """max_generations_to_fold: the policy's compaction folds only the
+    newest K generations — the base generation is left untouched
+    (bounded maintenance window) — and the nights keep converging to a
+    rebuild afterwards."""
     base, pool1, pool2 = _pools(spark)
     idx = str(tmp_path / "idx")
-    merged_dir = str(tmp_path / "merged")
-    inbox = str(tmp_path / "inbox")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
     incremental.build_base_index(base, idx, max_df=MAX_DF)
     gen0_mtime = os.path.getmtime(
         os.path.join(idx, "grams", "gen=0", "_SUCCESS")
     )
 
-    pool1.coalesce(1).write.mode("append").parquet(inbox)
-    run_nightly_loop(
-        spark, inbox, idx, merged_dir, out, ckpt, THRESH
+    _land(pool1, tmp_path)
+    _classify_then_nightly(spark, tmp_path, idx)
+    _land(pool2, tmp_path)
+    s2 = _classify_then_nightly(
+        spark, tmp_path, idx, compact_every=3, max_generations_to_fold=2
     )
-    pool2.coalesce(1).write.mode("append").parquet(inbox)
-    s2 = run_nightly_loop(
-        spark, inbox, idx, merged_dir, out, ckpt, THRESH,
-        compact_every=3, max_generations_to_fold=2,
-    )
-    assert s2["compacted_generation"] is not None
+    assert s2["compacted"]["text"] is not None
     man = incremental._load_manifest(idx)
     # base gen stays listed and physically untouched; the two epoch
     # generations folded into one
@@ -369,23 +375,8 @@ def test_nightly_loop_partial_fold_policy(spark, tmp_path):
     ), "partial fold rewrote the base generation"
 
     # replays stay no-ops; probes converge to the rebuild
-    s3 = run_nightly_loop(
-        spark, inbox, idx, merged_dir, out, ckpt, THRESH,
-        compact_every=3, max_generations_to_fold=2,
+    s3 = _classify_then_nightly(
+        spark, tmp_path, idx, compact_every=3, max_generations_to_fold=2
     )
-    assert s3["merged_epochs"] == [] and s3["compacted_generation"] is None
-    from gcp_serverless_etl_pipeline_lab_spark.sinks import read_warehouse
-
-    full = base.unionAll(
-        read_warehouse(spark, merged_dir).select("doc_id", "text")
-    )
-    rebuilt = str(tmp_path / "rebuilt")
-    incremental.build_base_index(full, rebuilt, max_df=MAX_DF)
-    probe = base.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + 50_000_000).alias("doc_id"), "text"
-    )
-    via_loop = incremental.classify_batch_vs_index(spark, probe, idx)
-    via_rebuilt = incremental.classify_batch_vs_index(spark, probe, rebuilt)
-    assert sorted(map(tuple, via_loop.collect())) == sorted(
-        map(tuple, via_rebuilt.collect())
-    )
+    assert s3["appended_text"] == [] and s3["compacted"]["text"] is None
+    _probe_matches_rebuild(spark, tmp_path, base, idx)

@@ -1,9 +1,9 @@
-"""Retrieval-stack nightly maintenance
-(streaming/retrieval_stream.run_nightly_retrieval_loop, round-12 verdict
-task 1): dual-ledger inbox pickup, lex-before-ann ordering, the
-cross-increment dedup guard (round-11 advice), crash-replay across a
-leg boundary AND the compact boundary, appended-corpus probe parity,
-and the hybrid-consistency invariant (ANN ⊆ doclist)."""
+"""Retrieval-stack nightly maintenance through ``run_nightly`` in its
+lex+ANN configuration: dual-ledger inbox pickup, lex-before-ann
+ordering, the cross-increment dedup guard (round-11 advice),
+crash-replay across a leg boundary AND the compact boundary,
+appended-corpus probe parity, and the hybrid-consistency invariant
+(ANN ⊆ doclist)."""
 
 from __future__ import annotations
 
@@ -14,14 +14,12 @@ from pyspark.sql import functions as F
 
 from gcp_serverless_etl_pipeline_lab_spark.operators import (
     annindex,
+    incremental,
     lexindex,
     retrieval,
 )
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
-from gcp_serverless_etl_pipeline_lab_spark.streaming import retrieval_stream
-from gcp_serverless_etl_pipeline_lab_spark.streaming.retrieval_stream import (
-    run_nightly_retrieval_loop,
-)
+from gcp_serverless_etl_pipeline_lab_spark.streaming.nightly import run_nightly
 
 from conftest import SF_SMOKE
 
@@ -57,20 +55,24 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
+def _nightly(spark, inbox, lex, ann, **kw):
+    return run_nightly(spark, inbox, lex_index_path=lex, ann_index_path=ann, **kw)
+
+
 def test_loop_ingests_both_legs_and_probe_matches_scan(spark, tmp_path):
     corpus = _corpus(spark)
     base, lex, ann = _build_base(spark, tmp_path, corpus)
     inbox = str(tmp_path / "inbox")
     _write_epoch(corpus.filter(F.col("doc_id") % 3 == 1), inbox, "epoch=1")
 
-    r1 = run_nightly_retrieval_loop(spark, inbox, lex, ann)
+    r1 = _nightly(spark, inbox, lex, ann)
     assert r1["appended_lex"] == ["epoch=1"]
     assert r1["appended_ann"] == ["epoch=1"]
     assert r1["new_docs"] > 0 and r1["duplicate_docs"] == 0
     assert r1["ann_docs_missing_from_lex"] == 0
 
     # replay: both ledgers are the checkpoint — nothing re-appends
-    r2 = run_nightly_retrieval_loop(spark, inbox, lex, ann)
+    r2 = _nightly(spark, inbox, lex, ann)
     assert r2["appended_lex"] == [] and r2["appended_ann"] == []
     assert r2["skipped"] == ["epoch=1"]
 
@@ -101,11 +103,11 @@ def test_loop_dedup_guard_drops_cross_increment_replays(spark, tmp_path):
     ones = corpus.filter(F.col("doc_id") % 3 == 1)
     twos = corpus.filter(F.col("doc_id") % 3 == 2)
     _write_epoch(ones, inbox, "epoch=1")
-    run_nightly_retrieval_loop(spark, inbox, lex, ann)
+    _nightly(spark, inbox, lex, ann)
 
     # epoch=2 retransmits every epoch=1 doc alongside the new ones
     _write_epoch(ones.unionByName(twos), inbox, "epoch=2")
-    r = run_nightly_retrieval_loop(spark, inbox, lex, ann)
+    r = _nightly(spark, inbox, lex, ann)
     assert r["appended_lex"] == ["epoch=2"]
     assert r["duplicate_docs"] == ones.count()
     assert r["ann_docs_missing_from_lex"] == 0
@@ -117,7 +119,7 @@ def test_loop_dedup_guard_drops_cross_increment_replays(spark, tmp_path):
     )
     assert got == want and got
     # and n_docs counted each doc once
-    man = lexindex._load_lex_manifest(lex)
+    man = incremental._load_manifest(lex)
     assert sum(g["n_docs"] for g in man["generations"]) == corpus.count()
 
 
@@ -139,19 +141,19 @@ def test_loop_crash_between_legs_replays_the_ann_leg(spark, tmp_path, monkeypatc
 
     monkeypatch.setattr(_ann_mod, "append_ann_index", crash)
     with pytest.raises(RuntimeError, match="simulated crash"):
-        run_nightly_retrieval_loop(spark, inbox, lex, ann)
+        _nightly(spark, inbox, lex, ann)
     monkeypatch.setattr(_ann_mod, "append_ann_index", real_append)
 
     # lex committed, ann didn't — invariant (ANN ⊆ doclist) still holds
-    lex_man = lexindex._load_lex_manifest(lex)
+    lex_man = incremental._load_manifest(lex)
     assert "epoch=1" in {g.get("increment_id") for g in lex_man["generations"]}
-    ann_man = annindex._load_ann_manifest(ann)
+    ann_man = incremental._load_manifest(ann)
     assert "epoch=1" not in {
         g.get("increment_id") for g in ann_man["generations"]
     }
 
     # replay fills exactly the missing leg with the SAME resolved rows
-    r = run_nightly_retrieval_loop(spark, inbox, lex, ann)
+    r = _nightly(spark, inbox, lex, ann)
     assert r["appended_lex"] == [] and r["appended_ann"] == ["epoch=1"]
     assert r["ann_docs_missing_from_lex"] == 0
 
@@ -159,7 +161,7 @@ def test_loop_crash_between_legs_replays_the_ann_leg(spark, tmp_path, monkeypatc
     ann_ids = {
         row["vec_id"]
         for row in annindex._read_vectors(
-            spark, ann, annindex._load_ann_manifest(ann)
+            spark, ann, incremental._load_manifest(ann)
         ).select("vec_id").collect()
     }
     want_ids = {
@@ -176,21 +178,21 @@ def test_loop_compacts_on_policy_and_replays_across_fold(spark, tmp_path):
     inbox = str(tmp_path / "inbox")
     _write_epoch(corpus.filter(F.col("doc_id") % 3 == 1), inbox, "epoch=1")
     _write_epoch(corpus.filter(F.col("doc_id") % 3 == 2), inbox, "epoch=2")
-    r = run_nightly_retrieval_loop(
+    r = _nightly(
         spark, inbox, lex, ann, compact_every=3, vacuum_min_age_seconds=0.0
     )
     assert set(r["appended_lex"]) == {"epoch=1", "epoch=2"}
-    assert r["compacted_lex"] is not None and r["compacted_ann"] is not None
+    assert r["compacted"]["lex"] is not None and r["compacted"]["ann"] is not None
     assert r["ann_docs_missing_from_lex"] == 0
     for p, man in (
-        (lex, lexindex._load_lex_manifest(lex)),
-        (ann, annindex._load_ann_manifest(ann)),
+        (lex, incremental._load_manifest(lex)),
+        (ann, incremental._load_manifest(ann)),
     ):
         assert len(man["generations"]) == 1
         assert set(man["compacted_increments"]) == {"epoch=1", "epoch=2"}
 
     # replay ACROSS the fold: absorbed increments stay skipped
-    r2 = run_nightly_retrieval_loop(spark, inbox, lex, ann)
+    r2 = _nightly(spark, inbox, lex, ann)
     assert r2["appended_lex"] == [] and r2["appended_ann"] == []
     assert set(r2["skipped"]) == {"epoch=1", "epoch=2"}
 
@@ -215,11 +217,11 @@ def test_consistency_check_raises_on_orphan_ann_docs(spark, tmp_path):
     assert annindex.append_ann_index(spark, rogue, ann, "rogue") is True
     os.makedirs(inbox, exist_ok=True)
     with pytest.raises(RuntimeError, match="hybrid consistency violated"):
-        run_nightly_retrieval_loop(
+        _nightly(
             spark, inbox, lex, ann, consistency_scope="full"
         )
     # default scope ("new") only audits what THIS call appended
-    r = run_nightly_retrieval_loop(spark, inbox, lex, ann)
+    r = _nightly(spark, inbox, lex, ann)
     assert r["ann_docs_missing_from_lex"] == 0
 
 
@@ -287,7 +289,7 @@ def test_telemetry_observes_decay_and_rebuild_restores(spark, tmp_path):
 
     # night 0 (nothing arrived): the fresh model's baseline reading —
     # base clusters align with cells, so observed recall is high
-    r0 = run_nightly_retrieval_loop(
+    r0 = _nightly(
         spark, inbox, lex, ann, telemetry_queries=8
     )
     assert r0["served_overlap"] is not None and r0["served_overlap"] >= 0.9, r0
@@ -295,7 +297,7 @@ def test_telemetry_observes_decay_and_rebuild_restores(spark, tmp_path):
 
     # night 1: the scattering clusters arrive; observed recall collapses
     _write_epoch(as_docs(inc), inbox, "epoch=1")
-    r1 = run_nightly_retrieval_loop(
+    r1 = _nightly(
         spark, inbox, lex, ann, telemetry_queries=8
     )
     assert r1["appended_ann"] == ["epoch=1"]
@@ -305,14 +307,14 @@ def test_telemetry_observes_decay_and_rebuild_restores(spark, tmp_path):
     rep = annindex.ann_drift_report(ann)
     assert rep["served_overlap_low"] is True
     assert rep["served_overlap_baseline"] == r0["served_overlap"]
-    tel = annindex._load_ann_manifest(ann)["telemetry"]
+    tel = incremental._load_manifest(ann)["telemetry"]
     assert tel and tel[-1]["served_overlap"] == r1["served_overlap"]
 
     # the recommended retrain, then the next night's loop re-measures —
     # the new epoch's first reading is its own fresh baseline, and the
     # decayed pre-rebuild reading (stale epoch) no longer counts
     annindex.rebuild_ann_index(spark, ann, sample_rate=1.0)
-    r2 = run_nightly_retrieval_loop(
+    r2 = _nightly(
         spark, inbox, lex, ann, telemetry_queries=8
     )
     assert r2["skipped"] == ["epoch=1"]

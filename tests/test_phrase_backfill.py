@@ -10,7 +10,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from gcp_serverless_etl_pipeline_lab_spark.operators import lexindex
+from gcp_serverless_etl_pipeline_lab_spark.operators import incremental, lexindex
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
@@ -63,7 +63,7 @@ def test_backfill_requires_full_corpus_coverage(spark, tmp_path):
     with pytest.raises(ValueError, match="missing .* live indexed docs"):
         lexindex.add_positions_to_index(spark, idx, partial)
     # refusal is clean: flag still off, a full-corpus retry completes
-    assert not lexindex._load_lex_manifest(idx).get("positions")
+    assert not incremental._load_manifest(idx).get("positions")
     assert len(lexindex.add_positions_to_index(spark, idx, docs)) == 2
 
 
@@ -85,7 +85,7 @@ def test_backfill_crash_before_flip_is_replayable(spark, tmp_path, monkeypatch):
         lexindex.add_positions_to_index(spark, idx, docs)
     monkeypatch.undo()
     # the flag never flipped: probes still refuse, orphans invisible
-    assert not lexindex._load_lex_manifest(idx).get("positions")
+    assert not incremental._load_manifest(idx).get("positions")
     with pytest.raises(ValueError, match="positions=True"):
         lexindex.phrase_matching_docs(spark, idx, PHRASE).count()
     # replay completes to the exact positional answer
@@ -125,7 +125,7 @@ def test_backfill_concurrent_append_fence(spark, tmp_path, monkeypatch):
         lexindex.add_positions_to_index(spark, idx, docs)
     monkeypatch.undo()
     # the append survived; the re-run backfills BOTH generations
-    assert not lexindex._load_lex_manifest(idx).get("positions")
+    assert not incremental._load_manifest(idx).get("positions")
     gens = lexindex.add_positions_to_index(spark, idx, docs)
     assert len(gens) == 2
     got = _rows(lexindex.phrase_topk_from_index(spark, idx, PHRASE, k=10))

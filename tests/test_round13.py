@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from gcp_serverless_etl_pipeline_lab_spark.operators import (
     annindex,
+    incremental,
     lexindex,
 )
 from gcp_serverless_etl_pipeline_lab_spark.operators.incremental import (
@@ -84,7 +85,7 @@ def test_compact_lexical_protect_keeps_increment_listed(spark, tmp_path):
     gen = lexindex.compact_lexical_index(
         spark, idx, protect_increments={"night2"}
     )
-    man = lexindex._load_lex_manifest(idx)
+    man = incremental._load_manifest(idx)
     ids = [g.get("increment_id") for g in man["generations"]]
     assert ids == ["night2", None], man["generations"]
     assert man["generations"][-1]["gen"] == gen
@@ -129,7 +130,7 @@ def test_sampled_index_probe_equals_explicit_double_nprobe(spark, tmp_path):
     annindex.build_ann_index(
         emb, idx, EMB_DIM, cells=8, iters=2, sample_rate=0.1
     )
-    man = annindex._load_ann_manifest(idx)
+    man = incremental._load_manifest(idx)
     assert man["train_sample_rate"] == 0.1
     rep = annindex.ann_drift_report(idx)
     assert rep["low_training_coverage"] is True
@@ -322,7 +323,7 @@ def test_indexed_vec_ids_membership(spark, tmp_path):
     # compaction folds the veclist alongside the vectors
     annindex.compact_ann_index(spark, idx)
     assert annindex.indexed_vec_ids(spark, idx, asked).count() == emb.count()
-    gen = annindex._load_ann_manifest(idx)["generations"][-1]["gen"]
+    gen = incremental._load_manifest(idx)["generations"][-1]["gen"]
     assert os.path.isdir(os.path.join(idx, "veclist", f"gen={gen}"))
 
 

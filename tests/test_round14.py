@@ -3,8 +3,8 @@
 1. HIGH — full-scope hybrid consistency check must mask ANN tombstones:
    after a documented takedown (delete ANN first, then lex) every
    ``consistency_scope="full"`` run raised a FALSE "hybrid consistency
-   violated" until ANN compaction retired the tombstone. Both sites
-   (streaming/nightly.py and streaming/retrieval_stream.py) regressed.
+   violated" until ANN compaction retired the tombstone
+   (streaming/nightly.py).
 2. MEDIUM — delete_from_{lexical,ann}_index concurrent-append fence:
    an append landing between membership resolution and the tombstone's
    manifest commit was covered by the tombstone's commit-time max_gen
@@ -27,9 +27,6 @@ from gcp_serverless_etl_pipeline_lab_spark.operators import (
 )
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 from gcp_serverless_etl_pipeline_lab_spark.streaming.nightly import run_nightly
-from gcp_serverless_etl_pipeline_lab_spark.streaming.retrieval_stream import (
-    run_nightly_retrieval_loop,
-)
 
 from conftest import SF_SMOKE
 
@@ -80,19 +77,6 @@ def test_full_scope_consistency_survives_takedown_unified(spark, tmp_path):
         consistency_scope="full",
     )
     assert r["ann_docs_missing_from_lex"] == 0
-
-
-def test_full_scope_consistency_survives_takedown_retrieval(spark, tmp_path):
-    corpus = _corpus(spark)
-    lex, ann = _build_pair(spark, tmp_path, corpus)
-    inbox = str(tmp_path / "inbox")
-    os.makedirs(inbox)
-    victims = [r["doc_id"] for r in corpus.select("doc_id").limit(2).collect()]
-    _takedown(spark, lex, ann, _ids(spark, victims))
-    r = run_nightly_retrieval_loop(
-        spark, inbox, lex, ann_index_path=ann, consistency_scope="full"
-    )
-    assert r["ann_docs_missing_from_lex"] == 0
     # a REAL violation still raises: delete lex-only (wrong order on
     # purpose) leaves a served ANN vector with no lexical membership
     other = [
@@ -104,8 +88,9 @@ def test_full_scope_consistency_survives_takedown_retrieval(spark, tmp_path):
         spark, _ids(spark, other), lex, "wrongorder"
     ) is True
     with pytest.raises(RuntimeError, match="hybrid consistency violated"):
-        run_nightly_retrieval_loop(
-            spark, inbox, lex, ann_index_path=ann, consistency_scope="full"
+        run_nightly(
+            spark, inbox, lex_index_path=lex, ann_index_path=ann,
+            consistency_scope="full",
         )
 
 
@@ -139,14 +124,14 @@ def test_lex_delete_concurrent_append_fence(spark, tmp_path):
             )
     finally:
         lexindex._claim_generation = real_claim
-    man = lexindex._load_lex_manifest(lex)
+    man = incremental._load_manifest(lex)
     # no tombstone committed; stats untouched (append counted, no subtraction)
     assert not man.get("tombstones", [])
     # the retry succeeds against the settled manifest
     assert lexindex.delete_from_lexical_index(
         spark, _ids(spark, victim), lex, "take"
     ) is True
-    n, s = lexindex._live_stats(lexindex._load_lex_manifest(lex))
+    n, s = lexindex._live_stats(incremental._load_manifest(lex))
     want = corpus.filter(~F.col("doc_id").isin(victim)).unionByName(extra)
     row = want.agg(
         F.count(F.lit(1)).alias("n"),
@@ -182,7 +167,7 @@ def test_ann_delete_concurrent_append_fence(spark, tmp_path):
             )
     finally:
         incremental._claim_generation = real_claim
-    assert not annindex._load_ann_manifest(ann).get("tombstones", [])
+    assert not incremental._load_manifest(ann).get("tombstones", [])
     assert annindex.delete_from_ann_index(
         spark, _ids(spark, victim), ann, "take"
     ) is True
@@ -266,11 +251,11 @@ def test_cell_counts_recorded_through_lifecycle(spark, tmp_path):
     base = vecs.filter(F.col("vec_id") % 3 == 0)
     inc = vecs.filter(F.col("vec_id") % 3 == 1)
     annindex.build_ann_index(base, ann, 64, cells=8, iters=2, sample_rate=1.0)
-    man = annindex._load_ann_manifest(ann)
+    man = incremental._load_manifest(ann)
     counts = annindex._total_cell_counts(man)
     assert counts is not None and sum(counts.values()) == base.count()
     assert annindex.append_ann_index(spark, inc, ann, "inc1") is True
-    man = annindex._load_ann_manifest(ann)
+    man = incremental._load_manifest(ann)
     assert sum(annindex._total_cell_counts(man).values()) == (
         base.count() + inc.count()
     )
@@ -278,13 +263,13 @@ def test_cell_counts_recorded_through_lifecycle(spark, tmp_path):
     doomed = base.limit(3).select("vec_id")
     assert annindex.delete_from_ann_index(spark, doomed, ann, "take") is True
     annindex.compact_ann_index(spark, ann)
-    man = annindex._load_ann_manifest(ann)
+    man = incremental._load_manifest(ann)
     assert sum(annindex._total_cell_counts(man).values()) == (
         base.count() + inc.count() - 3
     )
     # rebuild: fresh counts over the live population
     annindex.rebuild_ann_index(spark, ann, sample_rate=1.0)
-    man = annindex._load_ann_manifest(ann)
+    man = incremental._load_manifest(ann)
     assert sum(annindex._total_cell_counts(man).values()) == (
         base.count() + inc.count() - 3
     )
@@ -294,11 +279,11 @@ def test_cell_counts_recorded_through_lifecycle(spark, tmp_path):
     )
 
     with _manifest_lock(ann):
-        man = annindex._load_ann_manifest(ann)
+        man = incremental._load_manifest(ann)
         for g in man["generations"]:
             g.pop("cell_counts", None)
-        annindex._write_ann_manifest(ann, man)
-    assert annindex._total_cell_counts(annindex._load_ann_manifest(ann)) is None
+        incremental._write_manifest(ann, man)
+    assert annindex._total_cell_counts(incremental._load_manifest(ann)) is None
 
 
 def test_drift_baseline_ignores_param_mismatched_readings(spark, tmp_path):

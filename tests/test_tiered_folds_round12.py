@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from gcp_serverless_etl_pipeline_lab_spark.harness._corpora import EMB_DIM
 from gcp_serverless_etl_pipeline_lab_spark.operators import (
     annindex,
+    incremental,
     lexindex,
     retrieval,
 )
@@ -58,7 +59,7 @@ def test_lex_tiered_fold_parity_and_ledger(spark, tmp_path):
 
     # fold newest 2 -> [base, inc-0, fold]; stats stay manifest-exact
     lexindex.compact_lexical_index(spark, idx, max_generations_to_fold=2)
-    man = lexindex._load_lex_manifest(idx)
+    man = incremental._load_manifest(idx)
     assert len(man["generations"]) == 3
     assert [g.get("increment_id") for g in man["generations"][:2]] == [None, "inc-0"]
     assert set(man["compacted_increments"]) == {"inc-1", "inc-2"}
@@ -76,10 +77,10 @@ def test_lex_tiered_fold_parity_and_ledger(spark, tmp_path):
 
     # geometric convergence, then full fold to one generation
     lexindex.compact_lexical_index(spark, idx, max_generations_to_fold=2)
-    assert len(lexindex._load_lex_manifest(idx)["generations"]) == 2
+    assert len(incremental._load_manifest(idx)["generations"]) == 2
     assert _lex_probe(spark, idx) == before
     lexindex.compact_lexical_index(spark, idx)
-    assert len(lexindex._load_lex_manifest(idx)["generations"]) == 1
+    assert len(incremental._load_manifest(idx)["generations"]) == 1
     assert _lex_probe(spark, idx) == before
 
 
@@ -122,7 +123,7 @@ def test_ann_tiered_fold_parity_and_drift_survival(spark, tmp_path):
     # fold newest 2 (inc-0, inc-1) -> [base, drift, fold]; the KEPT
     # drifted generation's flag must survive untouched
     annindex.compact_ann_index(spark, idx, max_generations_to_fold=2)
-    man = annindex._load_ann_manifest(idx)
+    man = incremental._load_manifest(idx)
     assert len(man["generations"]) == 3
     assert [g.get("increment_id") for g in man["generations"][:2]] == [None, "drift"]
     assert set(man["compacted_increments"]) == {"inc-0", "inc-1"}
@@ -136,7 +137,7 @@ def test_ann_tiered_fold_parity_and_drift_survival(spark, tmp_path):
     # next tiered fold absorbs the drifted generation — its flag must
     # ride carried_max_drift_msd through the fold
     annindex.compact_ann_index(spark, idx, max_generations_to_fold=2)
-    man = annindex._load_ann_manifest(idx)
+    man = incremental._load_manifest(idx)
     assert len(man["generations"]) == 2
     assert man["generations"][-1].get("carried_max_drift_msd") is not None
     assert _ann_probe(spark, idx, queries) == before
@@ -144,7 +145,7 @@ def test_ann_tiered_fold_parity_and_drift_survival(spark, tmp_path):
 
     # full fold converges to one generation; flag still set
     annindex.compact_ann_index(spark, idx)
-    assert len(annindex._load_ann_manifest(idx)["generations"]) == 1
+    assert len(incremental._load_manifest(idx)["generations"]) == 1
     assert _ann_probe(spark, idx, queries) == before
     assert annindex.ann_drift_report(idx)["rebuild_recommended"] is True
 
@@ -157,15 +158,15 @@ def test_ann_tiered_fold_rejects_k_below_two(spark, tmp_path):
         annindex.compact_ann_index(spark, idx, max_generations_to_fold=1)
 
 
-def test_retrieval_loop_tiered_fold_passthrough(spark, tmp_path):
-    """The nightly retrieval loop forwards max_generations_to_fold to
-    BOTH compactors: after a night with compact_every hit, the manifests
-    keep their unfolded prefix (partial fold), and the consistency
-    invariant still holds."""
+def test_nightly_tiered_fold_passthrough(spark, tmp_path):
+    """run_nightly (lex + ANN) forwards max_generations_to_fold to BOTH
+    compactors: after a night with compact_every hit, the manifests keep
+    their unfolded prefix (partial fold), and the consistency invariant
+    still holds."""
     import os
 
-    from gcp_serverless_etl_pipeline_lab_spark.streaming.retrieval_stream import (
-        run_nightly_retrieval_loop,
+    from gcp_serverless_etl_pipeline_lab_spark.streaming.nightly import (
+        run_nightly,
     )
 
     docs = _docs(spark)
@@ -186,21 +187,21 @@ def test_retrieval_loop_tiered_fold_passthrough(spark, tmp_path):
         joined.filter(F.col("doc_id") % 4 == r).write.parquet(
             os.path.join(str(inbox), f"night-{i}")
         )
-    res = run_nightly_retrieval_loop(
+    res = run_nightly(
         spark,
         str(inbox),
-        lex,
-        ann,
+        lex_index_path=lex,
+        ann_index_path=ann,
         compact_every=3,
         max_generations_to_fold=2,
     )
     assert sorted(res["appended_lex"]) == [f"night-{i}" for i in range(3)]
-    assert res["compacted_lex"] is not None
-    assert res["compacted_ann"] is not None
+    assert res["compacted"]["lex"] is not None
+    assert res["compacted"]["ann"] is not None
     assert res["ann_docs_missing_from_lex"] == 0
     # partial fold: the unfolded prefix survives in both manifests
-    assert len(lexindex._load_lex_manifest(lex)["generations"]) == 3
-    assert len(annindex._load_ann_manifest(ann)["generations"]) == 3
+    assert len(incremental._load_manifest(lex)["generations"]) == 3
+    assert len(incremental._load_manifest(ann)["generations"]) == 3
     # probe over the whole corpus still exact vs the scan spelling
     assert _lex_probe(spark, lex) == sorted(
         map(tuple, retrieval.bm25_topk(docs, TERMS, k=10).collect())

@@ -80,7 +80,7 @@ def test_one_call_feeds_all_three_and_replay_is_noop(spark, tmp_path):
     assert r["appended_text"] == ["epoch=1"]
     # serve-time telemetry ran and was recorded in the ANN manifest
     assert r["served_overlap"] is not None
-    tel = annindex._load_ann_manifest(ann)["telemetry"]
+    tel = incremental._load_manifest(ann)["telemetry"]
     assert tel[-1]["served_overlap"] == r["served_overlap"]
     assert r["new_docs"] == inc.count() and r["duplicate_docs"] == 0
     assert r["ann_docs_missing_from_lex"] == 0
@@ -137,13 +137,13 @@ def test_crash_matrix_between_commits(spark, tmp_path, monkeypatch, crash_leg):
     if crash_leg == "ann":
         monkeypatch.setattr(_ann, "append_ann_index", real)
         # lex committed, ann+text didn't — invariant holds
-        assert "epoch=1" in _applied(lexindex._load_lex_manifest(lex))
-        assert "epoch=1" not in _applied(annindex._load_ann_manifest(ann))
+        assert "epoch=1" in _applied(incremental._load_manifest(lex))
+        assert "epoch=1" not in _applied(incremental._load_manifest(ann))
         assert "epoch=1" not in _applied(incremental._load_manifest(text))
     else:
         monkeypatch.setattr(_inc, "append_to_index", real)
-        assert "epoch=1" in _applied(lexindex._load_lex_manifest(lex))
-        assert "epoch=1" in _applied(annindex._load_ann_manifest(ann))
+        assert "epoch=1" in _applied(incremental._load_manifest(lex))
+        assert "epoch=1" in _applied(incremental._load_manifest(ann))
         assert "epoch=1" not in _applied(incremental._load_manifest(text))
 
     r = run_nightly(
@@ -196,7 +196,7 @@ def test_compaction_protects_one_legged_increment(spark, tmp_path):
     assert set(r["appended_lex"]) == {"epoch=1", "epoch=2"}
     assert r["appended_ann"] == ["epoch=1"]
     assert r["compacted"]["lex"] is not None
-    man = lexindex._load_lex_manifest(lex)
+    man = incremental._load_manifest(lex)
     listed = [g.get("increment_id") for g in man["generations"]]
     # the pending one-legged increment survived the fold under its own id
     assert "epoch=2" in listed
