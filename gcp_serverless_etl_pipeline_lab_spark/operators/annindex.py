@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from ..functions.local_frames import literal_frame
 
-from .incremental import _load_manifest, _write_manifest
+from .incremental import _load_manifest, _read_artifact, _write_manifest
 from .similarity import (
     _assign_cell,
     _dot,
@@ -515,25 +515,19 @@ def delete_from_ann_index(
     return True
 
 
-def _read_veclist(spark, path: str, man: dict) -> DataFrame | None:
-    """Union of the committed veclist generations, or None when any
-    listed generation predates the artifact (pre-round-13 index) —
-    callers run ``_materialize_missing_veclists`` once and re-read."""
-    import os
-
-    out = None
-    for g in man["generations"]:
-        d = os.path.join(path, "veclist", f"gen={g['gen']}")
-        if not os.path.isdir(d):
-            return None
-        part = (
-            spark.read.schema(_VECLIST_SCHEMA)
-            .option("basePath", d)
-            .parquet(d)
-            .withColumn("_gen", F.lit(int(g["gen"])))
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
+def _veclist(
+    spark, path: str, man: dict, vbs: list[int] | None = None
+) -> DataFrame:
+    """The committed veclist generations of ``man`` — only the ``vbs``
+    vec buckets when given. A listed generation that predates the
+    artifact (pre-round-13 index) is upgraded in place first, once ever
+    (``_materialize_missing_veclists``)."""
+    buckets = None if vbs is None else ("vb", vbs)
+    vl = _read_artifact(spark, path, "veclist", man, _VECLIST_SCHEMA, buckets)
+    if vl is None:
+        _materialize_missing_veclists(spark, path)
+        vl = _read_artifact(spark, path, "veclist", man, _VECLIST_SCHEMA, buckets)
+    return vl
 
 
 def _materialize_missing_veclists(spark, path: str) -> list[int]:
@@ -609,14 +603,8 @@ def indexed_vec_ids(
     want = ids.select(F.col(ids.columns[0]).cast("long").alias("vec_id")).distinct()
     if not gens:
         return want.limit(0)
-    sub = dict(man, generations=gens)
-    vl = _read_veclist(spark, path, sub)
-    if vl is None:
-        _materialize_missing_veclists(spark, path)
-        vl = _read_veclist(spark, path, sub)
     vbs = [r["vb"] for r in want.select(_vb("vec_id").alias("vb")).distinct().collect()]
-    if len(vbs) < VEC_BUCKETS:
-        vl = vl.filter(F.col("vb").isin(vbs))
+    vl = _veclist(spark, path, dict(man, generations=gens), vbs)
     # deleted vectors are not members; the mask is generation-scoped so
     # a re-appended vec_id's new row stays a member (round 13)
     vl = _mask_deleted_vecs(vl, _active_vec_tombstones(spark, path, man))
@@ -838,10 +826,7 @@ def compact_ann_index(
     # fold the membership artifact alongside — from the folded slice's
     # own veclists (narrow scan; materialized first for pre-round-13
     # generations so the fold never propagates the legacy state)
-    vl = _read_veclist(spark, path, fold_man)
-    if vl is None:
-        _materialize_missing_veclists(spark, path)
-        vl = _read_veclist(spark, path, fold_man)
+    vl = _veclist(spark, path, fold_man)
     (
         _mask_deleted_vecs(vl, tomb)
         .select("vec_id", "vb")
@@ -1155,10 +1140,7 @@ def ann_index_stats(spark, path: str) -> "DataFrame":
             sum(int(c) for c in g["cell_counts"].values()) for g in gens
         )
     else:
-        vl = _read_veclist(spark, path, man)
-        if vl is None:
-            _materialize_missing_veclists(spark, path)
-            vl = _read_veclist(spark, path, man)
+        vl = _veclist(spark, path, man)
         vl = _mask_deleted_vecs(vl, _active_vec_tombstones(spark, path, man))
         nv = vl.count()
     # literal projection over range(1) — see lexical_index_stats: a

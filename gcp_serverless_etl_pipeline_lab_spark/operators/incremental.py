@@ -448,7 +448,14 @@ def _load_manifest(path: str) -> dict:
         return json.load(fh)
 
 
-def _read_artifact(spark, path: str, name: str, man: dict, schema: str) -> DataFrame:
+def _read_artifact(
+    spark,
+    path: str,
+    name: str,
+    man: dict,
+    schema: str,
+    buckets: tuple[str, list[int]] | None = None,
+) -> DataFrame | None:
     """Union of the artifact's COMMITTED generations (manifest-listed
     only — an orphaned gen dir from a crashed append is never read).
     v1 indexes (round-8 flat layout, no ``version`` key) read the bare
@@ -458,8 +465,23 @@ def _read_artifact(spark, path: str, name: str, man: dict, schema: str) -> DataF
     names as usual. Each slice carries its generation number as ``_gen``
     (a literal — free) so tombstone masking can scope a delete to the
     generations it covered (round 14; v1 reads as gen 0): writers that
-    persist an artifact back must select it away."""
+    persist an artifact back must select it away.
+
+    ``buckets=(col, values)`` reads only those hive-partition dirs of
+    each generation: one Hadoop ``FileSystem`` glob per generation finds
+    the ones that exist, ``basePath`` stays at the generation dir, and a
+    generation holding none of them is skipped (all skipped: an empty
+    frame). Reading a whole generation instead makes Spark list its
+    bucket dirs (64, above the 32-path parallel-discovery threshold) with
+    a job per generation, even though the ``col IN (values)`` filter,
+    which stays on the result, prunes most of them afterwards.
+
+    Returns None when a listed generation has no dir for the artifact at
+    all (an index that predates it — the callers' upgrade signal)."""
     import os
+    import re
+
+    from ..functions.local_frames import literal_frame
 
     if man.get("version", 1) < 2:
         gens = [(0, os.path.join(path, name))]
@@ -468,16 +490,36 @@ def _read_artifact(spark, path: str, name: str, man: dict, schema: str) -> DataF
             (int(g["gen"]), os.path.join(path, name, f"gen={g['gen']}"))
             for g in man["generations"]
         ]
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    conf = spark._jsc.hadoopConfiguration()
     out = None
     for gen, d in gens:
+        fs = hpath(d).getFileSystem(conf)
+        dirs = [d]
+        if buckets is not None:
+            col, vals = buckets
+            # escape glob metacharacters of the index path itself
+            pat = re.sub(r"([\\\[\]{}*?])", r"\\\1", d) + (
+                f"/{col}={{{','.join(str(v) for v in sorted(set(vals)))}}}"
+            )
+            hits = fs.globStatus(hpath(pat)) if vals else None
+            dirs = [os.path.join(d, h.getPath().getName()) for h in hits or []]
+        if (buckets is None or not dirs) and not fs.exists(hpath(d)):
+            return None
+        if not dirs:
+            continue
         part = (
             spark.read.schema(schema)
             .option("basePath", d)
-            .parquet(d)
+            .parquet(*dirs)
             .withColumn("_gen", F.lit(gen))
         )
         out = part if out is None else out.unionByName(part)
-    return out
+    if buckets is None:
+        return out
+    if out is None:
+        out = literal_frame(spark, f"{schema}, _gen int", [])
+    return out.filter(F.col(buckets[0]).isin(list(buckets[1])))
 
 
 def _active_text_tombstones(spark, path: str, man: dict) -> DataFrame | None:

@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .incremental import _read_artifact
+
 from ..functions.local_frames import literal_frame
 
 _REPORT_SCHEMA = "artifact string, doc_id bigint, n_rows bigint"
@@ -81,18 +83,24 @@ def verify_forgotten(
 
         man = lx._load_manifest(lex_index_path)
         tomb = lx._active_tombstones(spark, lex_index_path, man) if served else None
-        post = lx._read_postings(spark, lex_index_path, man)
+        post = _read_artifact(
+            spark, lex_index_path, "postings", man, lx._POSTINGS_SCHEMA
+        )
         parts.append(
             _residue(lx._mask_deleted(post, tomb), "doc_id", want, "lex:postings")
         )
         if man.get("positions"):
-            pos = lx._read_positions(spark, lex_index_path, man)
+            pos = _read_artifact(
+                spark, lex_index_path, "positions", man, lx._POSITIONS_SCHEMA
+            )
             parts.append(
                 _residue(
                     lx._mask_deleted(pos, tomb), "doc_id", want, "lex:positions"
                 )
             )
-        dl = lx._read_doclist(spark, lex_index_path, man)
+        dl = _read_artifact(
+            spark, lex_index_path, "doclist", man, lx._DOCLIST_SCHEMA
+        )
         if dl is not None:
             parts.append(
                 _residue(lx._mask_deleted(dl, tomb), "doc_id", want, "lex:doclist")
@@ -112,7 +120,9 @@ def verify_forgotten(
                 ax._mask_deleted_vecs(vecs, tomb), "vec_id", want, "ann:vectors"
             )
         )
-        vl = ax._read_veclist(spark, ann_index_path, man)
+        vl = _read_artifact(
+            spark, ann_index_path, "veclist", man, ax._VECLIST_SCHEMA
+        )
         if vl is not None:
             parts.append(
                 _residue(
@@ -128,13 +138,13 @@ def verify_forgotten(
             if served
             else None
         )
-        grams = inc._read_artifact(
+        grams = _read_artifact(
             spark, text_index_path, "grams", man, inc._GRAMS_SCHEMA
         )
-        sizes = inc._read_artifact(
+        sizes = _read_artifact(
             spark, text_index_path, "sizes", man, inc._SIZES_SCHEMA
         )
-        hashes = inc._read_artifact(
+        hashes = _read_artifact(
             spark, text_index_path, "hashes", man, inc._HASHES_SCHEMA
         )
         parts.append(

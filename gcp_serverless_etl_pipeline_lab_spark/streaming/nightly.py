@@ -816,8 +816,7 @@ def run_nightly(
         from ..operators.annindex import (
             _active_vec_tombstones,
             _mask_deleted_vecs,
-            _materialize_missing_veclists,
-            _read_veclist,
+            _veclist,
         )
         from ..operators.lexindex import indexed_doc_ids
 
@@ -835,11 +834,9 @@ def run_nightly(
         else:
             check_gens = []
         if check_gens:
-            sub = dict(ann_man, generations=check_gens)
-            vl = _read_veclist(spark, ann_index_path, sub)
-            if vl is None:
-                _materialize_missing_veclists(spark, ann_index_path)
-                vl = _read_veclist(spark, ann_index_path, sub)
+            vl = _veclist(
+                spark, ann_index_path, dict(ann_man, generations=check_gens)
+            )
             # mask ANN tombstones: a documented takedown deletes ANN
             # first, then lex — between that and ANN compaction the raw
             # veclist still carries the deleted vec_id while the lexical

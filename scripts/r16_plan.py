@@ -1,10 +1,11 @@
-"""Round-16 plan-evidence dumper.
+"""Plan-evidence dumper.
 
-Usage: python scripts/r16_plan.py --suffix before QUERY [QUERY...]
+Usage: python scripts/r16_plan.py [--round r17] --suffix before QUERY [QUERY...]
 
-Writes plans/r16/<query>_<suffix>.txt with the builder's
-``explain("formatted")`` output at $SPARK_GRAFT_SF_DIR (default sf0.1).
-No timing — see scripts/r15_measure.py for the measuring harness.
+Writes plans/<round>/<query>_<suffix>.txt (round default r16) with the
+builder's ``explain("formatted")`` output at $SPARK_GRAFT_SF_DIR
+(default sf0.1). No timing — see scripts/r15_measure.py for the
+measuring harness.
 """
 
 from __future__ import annotations
@@ -23,11 +24,15 @@ from gcp_serverless_etl_pipeline_lab_spark.session import get_session
 def main() -> None:
     args = sys.argv[1:]
     suffix = "before"
+    rnd = "r16"
     names = []
     i = 0
     while i < len(args):
         if args[i] == "--suffix":
             suffix = args[i + 1]
+            i += 2
+        elif args[i] == "--round":
+            rnd = args[i + 1]
             i += 2
         else:
             names.append(args[i])
@@ -36,7 +41,7 @@ def main() -> None:
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
         "plans",
-        "r16",
+        rnd,
     )
     os.makedirs(out_dir, exist_ok=True)
     spark = get_session(app_name="r16_plan")

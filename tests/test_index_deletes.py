@@ -156,7 +156,9 @@ def test_full_fold_absorbs_tombstones_and_vacuum_sweeps(spark, tmp_path):
     assert after == before
     assert after == _rows(retrieval.bm25_topk(survivors, TERMS, k=10))
     # the deleted docs are PHYSICALLY gone from the folded postings
-    post = lexindex._read_postings(spark, idx, man)
+    post = incremental._read_artifact(
+        spark, idx, "postings", man, lexindex._POSTINGS_SCHEMA
+    )
     assert post.filter(F.col("doc_id") % 5 == 0).count() == 0
     # the retired tombstone dir is unlisted debris — vacuum sweeps it
     swept = vacuum_index(idx, min_age_seconds=0.0)
