@@ -474,7 +474,8 @@ def _hybrid_indexes(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
         build_lexical_index(docs, stage)
 
     # tag v2: round 12 added the doclist membership artifact to the
-    # build — a bumped tag rebuilds stale pre-doclist caches once
+    # build; readers refuse a pre-doclist index instead of upgrading it,
+    # and the bumped tag keeps such a cache from ever being probed
     lex = _ensure_cached_index(
         sf_dir, "lexbm25v2", _build_lex, table="documents.parquet"
     )
@@ -1035,8 +1036,8 @@ def a0j_ann_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost the whole index). Feeds the nightly hybrid-consistency check,
     whose full-scope audit now costs asked-set size. The oracle is the
     closed-form truth: the index holds exactly the embeddings table.
-    A pre-round-13 cached index upgrades in place on first probe
-    (_materialize_missing_veclists)."""
+    A cached index built before the veclist existed (round 13) is
+    refused by the probe rather than upgraded in place."""
     from ..operators.annindex import indexed_vec_ids
 
     _, ann = _hybrid_indexes(spark, sf_dir)
@@ -2105,8 +2106,8 @@ def a0m_takedown_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions rows per doc = its distinct non-empty terms; doclist /
     vectors / veclist = one row each). If any family's reader, mask
     wiring, or row accounting drifted, counts would hash-mismatch. The
-    post-takedown semantics (served-empty, physical-until-fold, legacy
-    content hashes, partial-takedown naming) are pinned in
+    post-takedown semantics (served-empty, physical-until-fold,
+    partial-takedown naming) are pinned in
     tests/test_takedown_verify.py; ``run_nightly(verify_deletes=True)``
     runs this audit on each night's takedowns and fails loudly on
     residue."""

@@ -111,22 +111,25 @@ def _effective_nprobe(man: dict, nprobe: int, auto_escalate: bool) -> int:
     return nprobe
 
 
-def _total_cell_counts(man: dict) -> dict | None:
+def _total_cell_counts(man: dict) -> dict:
     """Per-cell occupancy summed across the listed generations (round
-    14), or None when any listed generation predates the artifact.
-    Observability: cell skew (a mega-cell forming under appends, a
-    starved cell) is readable from the manifest without scanning the
-    index. This was also the instrument for the task-8 selective-
+    14); a generation without ``cell_counts`` (written before round 14)
+    raises — rebuild such an index. Observability: cell skew (a
+    mega-cell forming under appends, a starved cell) is readable from
+    the manifest without scanning the index. This was also the instrument for the task-8 selective-
     escalation experiment — whose measured rejection is documented at
     the probe construction in ``query_ann_index``. Tombstoned vectors
     stay counted until their fold retires them (counts are occupancy
     bookkeeping, not membership truth)."""
     totals: dict[int, int] = {}
     for g in man["generations"]:
-        cc = g.get("cell_counts")
-        if cc is None:
-            return None
-        for c, n in cc.items():
+        if "cell_counts" not in g:
+            raise ValueError(
+                f"ANN index generation {g['gen']} records no cell_counts "
+                "(written before round 14); rebuild the index with "
+                "build_ann_index"
+            )
+        for c, n in g["cell_counts"].items():
             totals[int(c)] = totals.get(int(c), 0) + int(n)
     return totals
 
@@ -294,11 +297,6 @@ def append_ann_index(
     from .incremental import _GENCLAIM_PREFIX, _claim_generation, _manifest_lock
 
     man = _load_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"ANN index at {path} predates generations; rebuild with "
-            "build_ann_index to enable appends"
-        )
     applied = {
         g.get("increment_id") for g in man["generations"]
     } | set(man.get("compacted_increments", []))
@@ -370,20 +368,14 @@ def load_ann_model(path: str) -> tuple[int, list[tuple[int, list[float]]]]:
 
 def _read_vectors(spark, path: str, man: dict) -> DataFrame:
     """Union of the committed vector generations (manifest-listed only —
-    crashed appends' orphans are never read). v1 indexes (pre-append
-    flat layout) read the bare ``vectors/`` dir. Each v2 slice carries
-    its generation number as ``_gen`` (a literal) so tombstone masking
-    can scope deletes to the generations they covered (round 13 — a
-    vec_id re-appended after its delete lands in a higher generation
-    and serves unmasked)."""
+    crashed appends' orphans are never read). Each slice carries its
+    generation number as ``_gen`` (a literal) so tombstone masking can
+    scope deletes to the generations they covered (round 13 — a vec_id
+    re-appended after its delete lands in a higher generation and
+    serves unmasked)."""
     import os
 
     root = os.path.join(path, "vectors")
-    if man.get("version", 1) < 2:
-        d = root
-        return spark.read.option("basePath", d).parquet(d).withColumn(
-            "_gen", F.lit(0)
-        )
     out = None
     for g in man["generations"]:
         d = os.path.join(root, f"gen={g['gen']}")
@@ -453,11 +445,6 @@ def delete_from_ann_index(
     from .incremental import _GENCLAIM_PREFIX, _claim_generation, _manifest_lock
 
     man = _load_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"ANN index at {path} predates generations; rebuild with "
-            "build_ann_index to enable deletes"
-        )
     applied = {
         t.get("increment_id") for t in man.get("tombstones", [])
     } | set(man.get("applied_deletes", []))
@@ -515,60 +502,6 @@ def delete_from_ann_index(
     return True
 
 
-def _veclist(
-    spark, path: str, man: dict, vbs: list[int] | None = None
-) -> DataFrame:
-    """The committed veclist generations of ``man`` — only the ``vbs``
-    vec buckets when given. A listed generation that predates the
-    artifact (pre-round-13 index) is upgraded in place first, once ever
-    (``_materialize_missing_veclists``)."""
-    buckets = None if vbs is None else ("vb", vbs)
-    vl = _read_artifact(spark, path, "veclist", man, _VECLIST_SCHEMA, buckets)
-    if vl is None:
-        _materialize_missing_veclists(spark, path)
-        vl = _read_artifact(spark, path, "veclist", man, _VECLIST_SCHEMA, buckets)
-    return vl
-
-
-def _materialize_missing_veclists(spark, path: str) -> list[int]:
-    """One-time in-place upgrade of a pre-round-13 ANN index: derive the
-    veclist of every listed generation lacking one from that
-    generation's own vectors (distinct vec_id — one narrow-column scan
-    per legacy generation, once ever). Same discipline as the lexical
-    doclist upgrade: serialized under the manifest lock, temp + atomic
-    rename so a listed generation's dir is never readable half-written.
-    Unlike the doclist there is no blindness caveat — every indexed
-    vector has a vectors/ row, so the derived artifact is complete."""
-    import os
-    import shutil
-
-    from .incremental import _manifest_lock
-
-    with _manifest_lock(path):
-        man = _load_manifest(path)
-        missing = [
-            g["gen"]
-            for g in man["generations"]
-            if not os.path.isdir(os.path.join(path, "veclist", f"gen={g['gen']}"))
-        ]
-        for gen in missing:
-            d = os.path.join(path, "vectors", f"gen={gen}")
-            vec = spark.read.option("basePath", d).parquet(d)
-            tmp = os.path.join(path, "veclist", f".tmp-gen={gen}")
-            shutil.rmtree(tmp, ignore_errors=True)
-            (
-                vec.select(F.col("vec_id").cast("long").alias("vec_id"))
-                .distinct()
-                .withColumn("vb", _vb("vec_id"))
-                .repartition(VEC_BUCKETS, F.col("vb"))
-                .write.mode("overwrite")
-                .partitionBy("vb")
-                .parquet(tmp)
-            )
-            os.rename(tmp, os.path.join(path, "veclist", f"gen={gen}"))
-    return missing
-
-
 def indexed_vec_ids(
     spark,
     path: str,
@@ -589,11 +522,6 @@ def indexed_vec_ids(
     (the nightly consistency check scopes to tonight's generations);
     entries must come from this index's manifest."""
     man = _load_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"ANN index at {path} predates generations; rebuild with "
-            "build_ann_index to enable membership probes"
-        )
     gens = [
         g
         for g in (generations if generations is not None else man["generations"])
@@ -604,7 +532,10 @@ def indexed_vec_ids(
     if not gens:
         return want.limit(0)
     vbs = [r["vb"] for r in want.select(_vb("vec_id").alias("vb")).distinct().collect()]
-    vl = _veclist(spark, path, dict(man, generations=gens), vbs)
+    vl = _read_artifact(
+        spark, path, "veclist", dict(man, generations=gens), _VECLIST_SCHEMA,
+        ("vb", vbs),
+    )
     # deleted vectors are not members; the mask is generation-scoped so
     # a re-appended vec_id's new row stays a member (round 13)
     vl = _mask_deleted_vecs(vl, _active_vec_tombstones(spark, path, man))
@@ -785,11 +716,6 @@ def compact_ann_index(
     )
 
     man = _load_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"ANN index at {path} predates generations; rebuild with "
-            "build_ann_index (compaction is a no-op for flat layouts)"
-        )
     entries = list(man["generations"])
     old_gens = [g["gen"] for g in entries]
     fold_entries, keep_entries = _split_fold_slice(
@@ -824,9 +750,8 @@ def compact_ann_index(
     )
     fold_cell_counts = _read_gen_cell_counts(spark, _fold_dir)
     # fold the membership artifact alongside — from the folded slice's
-    # own veclists (narrow scan; materialized first for pre-round-13
-    # generations so the fold never propagates the legacy state)
-    vl = _veclist(spark, path, fold_man)
+    # own veclists (narrow scan)
+    vl = _read_artifact(spark, path, "veclist", fold_man, _VECLIST_SCHEMA)
     (
         _mask_deleted_vecs(vl, tomb)
         .select("vec_id", "vb")
@@ -1126,23 +1051,15 @@ def ann_drift_report(path: str, ratio_threshold: float = DRIFT_REBUILD_RATIO) ->
 
 def ann_index_stats(spark, path: str) -> "DataFrame":
     """One-row observability report for an ANN index (round 15, the
-    lexical twin of ``lexical_index_stats``): listed vector count (from
-    the per-generation ``cell_counts`` manifests when every generation
-    carries them — the round-14 instrument — else one masked veclist
-    count), model shape, and the lifecycle counters (generations,
-    tombstones, model_epoch). Manifest-only in the common case; oracling
-    the vector count against a fresh recount of the source embeddings
-    (a0m_index_stats) parity-checks the append accounting."""
+    lexical twin of ``lexical_index_stats``): listed vector count (the
+    per-generation ``cell_counts`` summed by ``_total_cell_counts``),
+    model shape, and the lifecycle counters (generations, tombstones,
+    model_epoch). Pure manifest read; oracling the vector count against
+    a fresh recount of the source embeddings (a0m_index_stats)
+    parity-checks the append accounting."""
     man = _load_manifest(path)
     gens = man["generations"]
-    if gens and all(g.get("cell_counts") for g in gens):
-        nv = sum(
-            sum(int(c) for c in g["cell_counts"].values()) for g in gens
-        )
-    else:
-        vl = _veclist(spark, path, man)
-        vl = _mask_deleted_vecs(vl, _active_vec_tombstones(spark, path, man))
-        nv = vl.count()
+    nv = sum(_total_cell_counts(man).values())
     # literal projection over range(1) — see lexical_index_stats: a
     # 1-row createDataFrame is Python-RDD-backed and join-hostile
     return spark.range(1).select(
@@ -1188,11 +1105,6 @@ def rebuild_ann_index(
     )
 
     man = _load_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"ANN index at {path} predates generations; rebuild with "
-            "build_ann_index"
-        )
     dim = int(man["dim"])
     if cells is None:
         cells = len(man["model"])

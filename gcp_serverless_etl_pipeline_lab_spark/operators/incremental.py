@@ -183,11 +183,9 @@ def _register_probe_cache(frame: DataFrame) -> None:
         reg.append(frame)
 
 
-# hashes v3 (round 14, deletes): generations written since carry the
-# doc_id next to the content hash so an id-only takedown can resolve
-# the k it must stop matching; legacy generations' files lack the
-# column and read as NULL doc_id under this explicit schema (their
-# docs need the text passed to delete_from_index — documented there)
+# hashes carry the doc_id next to the content hash so an id-only
+# takedown can resolve the k it must stop matching (files written before
+# round 14 lack the column; delete_from_index refuses them)
 _HASHES_SCHEMA = "k string, doc_id bigint"
 _GRAMS_SCHEMA = "base_id bigint, g string, gb int"
 _SIZES_SCHEMA = "base_id bigint, sz_b int"
@@ -339,17 +337,6 @@ def _write_manifest(path: str, man: dict) -> None:
 _GENCLAIM_PREFIX = ".genclaim-"
 
 
-class LegacyHashResolutionError(ValueError):
-    """An id-only delete hit documents whose index generations predate
-    per-row-id hash rows (pre-round-14): the content hash to tombstone
-    can only come from the document text, so the caller must re-issue
-    the delete with a (doc_id, text) frame. A DEDICATED type (round-15
-    advice) so the nightly delete stage's corpus-resolution retry
-    triggers ONLY for this condition — not for unrelated ValueErrors
-    (flat-layout/config errors), which previously cost a full merged-
-    corpus read before re-raising."""
-
-
 def _claim_generation(path: str) -> int:
     """Reserve the next generation number with an exclusive-create marker
     (the warehouse's version-claim discipline, sinks._claim_version):
@@ -441,11 +428,23 @@ def _split_fold_slice(
 
 
 def _load_manifest(path: str) -> dict:
+    """The manifest of the text, lexical or ANN index at ``path``. Every
+    reader and writer of the three families loads it here, so this is
+    the one layout check: only the version-2 generational layout is
+    read, and anything else (the round-8 flat layout has no version)
+    raises instead of taking a per-read upgrade path."""
     import json
     import os
 
     with open(os.path.join(path, _MANIFEST)) as fh:
-        return json.load(fh)
+        man = json.load(fh)
+    if "version" not in man or man["version"] != 2:
+        raise ValueError(
+            f"index at {path} uses the pre-append flat layout or an unknown "
+            "manifest version; rebuild it with build_base_index, "
+            "build_lexical_index or build_ann_index"
+        )
+    return man
 
 
 def _read_artifact(
@@ -455,17 +454,16 @@ def _read_artifact(
     man: dict,
     schema: str,
     buckets: tuple[str, list[int]] | None = None,
-) -> DataFrame | None:
+) -> DataFrame:
     """Union of the artifact's COMMITTED generations (manifest-listed
     only — an orphaned gen dir from a crashed append is never read).
-    v1 indexes (round-8 flat layout, no ``version`` key) read the bare
-    artifact dir. The explicit schema makes an EMPTY generation (e.g. an
-    all-capped increment's postings) read as zero rows instead of
-    failing schema inference; partition columns (gb) resolve from dir
-    names as usual. Each slice carries its generation number as ``_gen``
-    (a literal — free) so tombstone masking can scope a delete to the
-    generations it covered (round 14; v1 reads as gen 0): writers that
-    persist an artifact back must select it away.
+    The explicit schema makes an EMPTY generation (e.g. an all-capped
+    increment's postings) read as zero rows instead of failing schema
+    inference; partition columns (gb) resolve from dir names as usual.
+    Each slice carries its generation number as ``_gen`` (a literal —
+    free) so tombstone masking can scope a delete to the generations it
+    covered (round 14): writers that persist an artifact back must
+    select it away.
 
     ``buckets=(col, values)`` reads only those hive-partition dirs of
     each generation: one Hadoop ``FileSystem`` glob per generation finds
@@ -476,20 +474,19 @@ def _read_artifact(
     a job per generation, even though the ``col IN (values)`` filter,
     which stays on the result, prunes most of them afterwards.
 
-    Returns None when a listed generation has no dir for the artifact at
-    all (an index that predates it — the callers' upgrade signal)."""
+    A listed generation with no dir for the artifact at all was written
+    before the artifact existed (the pre-round-12 doclist, the
+    pre-round-13 veclist): that raises, bucketed or not, rather than
+    reading the generation as empty."""
     import os
     import re
 
     from ..functions.local_frames import literal_frame
 
-    if man.get("version", 1) < 2:
-        gens = [(0, os.path.join(path, name))]
-    else:
-        gens = [
-            (int(g["gen"]), os.path.join(path, name, f"gen={g['gen']}"))
-            for g in man["generations"]
-        ]
+    gens = [
+        (int(g["gen"]), os.path.join(path, name, f"gen={g['gen']}"))
+        for g in man["generations"]
+    ]
     hpath = spark._jvm.org.apache.hadoop.fs.Path
     conf = spark._jsc.hadoopConfiguration()
     out = None
@@ -505,7 +502,11 @@ def _read_artifact(
             hits = fs.globStatus(hpath(pat)) if vals else None
             dirs = [os.path.join(d, h.getPath().getName()) for h in hits or []]
         if (buckets is None or not dirs) and not fs.exists(hpath(d)):
-            return None
+            raise ValueError(
+                f"index at {path} lists generation {gen} but has no "
+                f"{name}/gen={gen} dir: it was written before the {name} "
+                "artifact existed; rebuild the index"
+            )
         if not dirs:
             continue
         part = (
@@ -523,7 +524,7 @@ def _read_artifact(
 
 
 def _active_text_tombstones(spark, path: str, man: dict) -> DataFrame | None:
-    """(doc_id, k, max_gen) union of the listed tombstone generations, or
+    """(doc_id, max_gen) union of the listed tombstone generations, or
     None when the index has no active deletes — the text index's twin of
     ``lexindex._active_tombstones``. The frame is delete-volume-sized
     (deletes are rare events), so every mask join rides a small frame
@@ -534,48 +535,32 @@ def _active_text_tombstones(spark, path: str, man: dict) -> DataFrame | None:
     for t in man.get("tombstones", []):
         d = os.path.join(path, "tombstones", f"gen={t['gen']}")
         part = (
-            spark.read.schema("doc_id bigint, k string")
+            spark.read.schema("doc_id bigint")
             .option("basePath", d)
             .parquet(d)
-            .select("doc_id", "k", F.lit(int(t["max_gen"])).alias("max_gen"))
+            .select("doc_id", F.lit(int(t["max_gen"])).alias("max_gen"))
         )
         out = part if out is None else out.unionByName(part)
     return out
 
 
-def _mask_deleted_ids(df: DataFrame, tomb: DataFrame | None) -> DataFrame:
-    """Drop rows whose (base_id, _gen) a tombstone covers — the probe-
-    side view of a text-index delete for the id-keyed artifacts (grams,
-    sizes) until compaction applies it physically."""
+def _mask_deleted_ids(
+    df: DataFrame, tomb: DataFrame | None, key: str = "base_id"
+) -> DataFrame:
+    """Drop rows whose (``key``, _gen) a tombstone covers — the probe-
+    side view of a text-index delete (grams and sizes keyed by
+    ``base_id``, hashes by ``doc_id``) until compaction applies it
+    physically."""
     if tomb is None:
         return df
-    t = tomb.groupBy(F.col("doc_id").alias("base_id")).agg(
-        F.max("max_gen").alias("max_gen")
+    t = tomb.groupBy(F.col("doc_id").alias("_t_id")).agg(
+        F.max("max_gen").alias("_t_max_gen")
     )
     return df.join(
         t,
-        (df["base_id"] == t["base_id"]) & (df["_gen"] <= t["max_gen"]),
+        (df[key] == t["_t_id"]) & (df["_gen"] <= t["_t_max_gen"]),
         "left_anti",
     )
-
-
-def _mask_deleted_hashes(df: DataFrame, tomb: DataFrame | None) -> DataFrame:
-    """Drop covered rows from the hashes artifact. v3 rows (doc_id
-    stored) mask precisely by id; legacy rows (NULL doc_id) mask by the
-    content hash the delete recorded — which also masks a byte-identical
-    TWIN doc living in a legacy generation (over-masking documented at
-    ``delete_from_index``: indistinguishable without per-row ids, and
-    conservative for the dedup guard's purpose)."""
-    if tomb is None:
-        return df
-    t = tomb.select(
-        F.col("doc_id").alias("t_id"), F.col("k").alias("t_k"), "max_gen"
-    )
-    cond = (df["_gen"] <= t["max_gen"]) & (
-        (df["doc_id"] == t["t_id"])
-        | (df["doc_id"].isNull() & (df["k"] == t["t_k"]))
-    )
-    return df.join(t, cond, "left_anti")
 
 
 def _keyed_shingles(batch: DataFrame, n: int) -> DataFrame:
@@ -622,9 +607,10 @@ def exact_dups_vs_index(
         if keyed is not None
         else batch.select("doc_id", F.md5("text").alias("k"))
     )
-    base_k = _mask_deleted_hashes(
+    base_k = _mask_deleted_ids(
         _read_artifact(spark, path, "hashes", man, _HASHES_SCHEMA),
         _active_text_tombstones(spark, path, man),
+        "doc_id",
     )
     return b.join(base_k, "k", "left_semi").select("doc_id")
 
@@ -692,13 +678,12 @@ def near_dups_vs_index(
     # generation-scoped so a re-appended doc's new rows stay live
     _tomb = _active_text_tombstones(spark, path, man)
     g_base = _mask_deleted_ids(g_base, _tomb)
-    if man.get("version", 1) >= 2:
-        # exclude grams that crossed the df-cap in a later generation
-        # (their pre-crossing postings are physically present). The
-        # ledger is small by construction — broadcast anti-join, no
-        # extra shuffle of the postings.
-        capped = _read_artifact(spark, path, "capped", man, _CAPPED_SCHEMA)
-        g_base = g_base.join(F.broadcast(capped), "g", "left_anti")
+    # exclude grams that crossed the df-cap in a later generation (their
+    # pre-crossing postings are physically present). The ledger is small
+    # by construction — broadcast anti-join, no extra shuffle of the
+    # postings.
+    capped = _read_artifact(spark, path, "capped", man, _CAPPED_SCHEMA)
+    g_base = g_base.join(F.broadcast(capped), "g", "left_anti")
     inter = (
         g_new.join(g_base.select("base_id", "g"), "g")
         .groupBy("new_id", "base_id")
@@ -773,18 +758,10 @@ def append_to_index(
     ``compact_index``, which recomputes the ledger from the summed true
     dfs and restores exact cap semantics. Serial appends (the nightly
     loop) are always exact.
-
-    Requires a v2 (generational) index; round-8 flat-layout indexes must
-    be rebuilt once with ``build_base_index``.
     """
     from pyspark.storagelevel import StorageLevel
 
     man = _load_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"index at {path} uses the pre-append flat layout; rebuild it "
-            "with build_base_index to enable appends"
-        )
     applied = {
         g.get("increment_id") for g in man["generations"]
     } | set(man.get("compacted_increments", []))
@@ -930,20 +907,16 @@ def delete_from_index(
     fingerprints persisted forever). Same generation-scoped tombstone
     design as the lexical/ANN twins:
 
-    - ``docs`` is a (doc_id) or (doc_id, text) frame. The asked ids
-      resolve against current membership (live ``sizes`` rows); the
-      content hash each membership row must stop matching comes from the
-      stored v3 ``hashes`` (doc_id column, round 14) — for docs indexed
-      by a PRE-round-14 generation the hash rows carry no doc_id, so the
-      text must be passed (the nightly delete stage reads it from
-      ``merged_dir`` before purging); id-only deletes of such docs raise
-      rather than leave the exact-dup probe still matching.
+    - ``docs`` is a frame whose ``doc_id`` column names the docs to
+      delete (other columns are ignored). The asked ids resolve against
+      current membership (live ``sizes`` rows); the content hash each
+      member must stop matching comes from the stored ``hashes`` rows
+      of the same doc_id. Hash rows without a doc_id (generations
+      written before round 14) cannot be resolved by id, so a delete
+      that meets one raises: rebuild such an index.
     - one ``tombstones/gen=N`` artifact (doc_id, k) plus an atomic
       manifest append commits the delete; every probe masks covered rows
-      (grams/sizes by id, hashes by id or — legacy rows — by content
-      hash, which also masks a byte-identical twin in a legacy
-      generation: indistinguishable without per-row ids, and
-      conservative for the guard's purpose).
+      by (doc_id, generation).
     - generation-scoped ``max_gen`` cover: re-appending a deleted doc_id
       later works — the new generation is above the cover and matches
       normally. ``increment_id`` replays are committed no-ops (False);
@@ -958,29 +931,22 @@ def delete_from_index(
       performance heuristic erring conservative, never a membership
       error.
 
-    Cost: delete-sized membership/hash-resolution probes + one
-    delete-sized write — never an artifact rewrite. Concurrent appends
-    are fenced exactly as in the lexical/ANN deletes (round-14 advice):
-    an append committing between membership resolution and the manifest
-    commit aborts the delete loudly for a re-run."""
+    Cost: delete-sized membership/hash-resolution probes, one
+    checkpoint of the tombstone rows with one aggregate over it (member
+    count and missing-hash guard together), and one delete-sized write
+    — never an artifact rewrite. Concurrent appends are fenced exactly
+    as in the lexical/ANN deletes (round-14 advice): an append
+    committing between membership resolution and the manifest commit
+    aborts the delete loudly for a re-run."""
     import os
 
     man = _load_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"index at {path} uses the pre-append flat layout; rebuild it "
-            "with build_base_index to enable deletes"
-        )
     applied = {
         t.get("increment_id") for t in man.get("tombstones", [])
     } | set(man.get("applied_deletes", []))
     if increment_id is not None and increment_id in applied:
         return False
-    has_text = "text" in docs.columns
-    want = docs.select(
-        F.col("doc_id").cast("long").alias("doc_id"),
-        *([F.md5("text").alias("k_text")] if has_text else []),
-    ).dropDuplicates(["doc_id"])
+    want = docs.select(F.col("doc_id").cast("long").alias("doc_id"))
     tomb_now = _active_text_tombstones(spark, path, man)
     member = (
         _mask_deleted_ids(
@@ -991,44 +957,30 @@ def delete_from_index(
         .distinct()
         .join(want, "doc_id", "left_semi")
     )
-    # resolve each member's content hash: stored v3 rows first, the
-    # caller's text as the fallback for legacy rows
     stored_k = (
-        _mask_deleted_hashes(
+        _mask_deleted_ids(
             _read_artifact(spark, path, "hashes", man, _HASHES_SCHEMA),
             tomb_now,
+            "doc_id",
         )
-        .filter(F.col("doc_id").isNotNull())
         .select("doc_id", "k")
         .join(member, "doc_id", "left_semi")
         .distinct()
     )
-    # tombstone the UNION of every resolved hash for a member (round-15
-    # advice): a doc present in BOTH a pre-round-14 generation (NULL
-    # doc_id hash row, resolvable only via the caller's text) and a v3
-    # generation with DIFFERENT text must stop matching under both
-    # hashes — a single coalesced value would leave the legacy content
-    # hash live and suppress legitimate re-ingest of the old content
-    # forever. Masking is per (doc_id, k) row, so extra hash rows cost
-    # one tombstone row each and nothing else.
-    resolved = stored_k
-    if has_text:
-        text_k = (
-            member.join(want, "doc_id", "left")
-            .filter(F.col("k_text").isNotNull())
-            .select("doc_id", F.col("k_text").alias("k"))
-        )
-        resolved = resolved.unionByName(text_k).distinct()
-    rows = member.join(resolved, "doc_id", "left")
-    tomb_rows = rows.localCheckpoint(eager=True)
-    n_member = tomb_rows.select("doc_id").distinct().count()
-    if n_member == 0:
+    tomb_rows = member.join(stored_k, "doc_id", "left").localCheckpoint(
+        eager=True
+    )
+    row = tomb_rows.agg(
+        F.countDistinct("doc_id").alias("n"),
+        F.count(F.when(F.col("k").isNull(), 1)).alias("no_hash"),
+    ).collect()[0]
+    if row["n"] == 0:
         return False
-    if tomb_rows.filter(F.col("k").isNull()).limit(1).count():
-        raise LegacyHashResolutionError(
-            f"index at {path} holds pre-round-14 generations whose hash "
-            "rows carry no doc_id; pass (doc_id, text) to "
-            "delete_from_index so the content hash can be tombstoned"
+    if row["no_hash"]:
+        raise ValueError(
+            f"index at {path} holds hash rows without a doc_id (written "
+            "before round 14), so the delete cannot resolve their content "
+            "hash; rebuild the index with build_base_index"
         )
     gen = _claim_generation(path)
     tomb_rows.select("doc_id", "k").coalesce(1).write.mode(
@@ -1125,19 +1077,13 @@ def compact_index(
     import os
 
     man = _load_manifest(path)
-    if man.get("version", 1) < 2:
-        raise ValueError(
-            f"index at {path} uses the pre-append flat layout; rebuild it "
-            "with build_base_index (compaction is a no-op for single-"
-            "generation indexes)"
-        )
     max_df = man["max_df"]
     old_gens = [g["gen"] for g in man["generations"]]
     fold_entries, keep_entries = _split_fold_slice(
         man["generations"], max_generations_to_fold
     )
     full = not keep_entries
-    fold_man = {"version": 2, "generations": fold_entries}
+    fold_man = {"generations": fold_entries}
     # tombstones (round-14 deletes) apply PHYSICALLY at fold time: the
     # folded slice lands under a NEW generation number above every
     # cover, so a covered row carried through would un-mask — covered
@@ -1159,8 +1105,10 @@ def compact_index(
     absorbed_gens = {t["gen"] for t in absorbed}
     gen = _claim_generation(path)
 
-    hashes = _mask_deleted_hashes(
-        _read_artifact(spark, path, "hashes", fold_man, _HASHES_SCHEMA), tomb
+    hashes = _mask_deleted_ids(
+        _read_artifact(spark, path, "hashes", fold_man, _HASHES_SCHEMA),
+        tomb,
+        "doc_id",
     ).select("k", "doc_id")
     sizes = _mask_deleted_ids(
         _read_artifact(spark, path, "sizes", fold_man, _SIZES_SCHEMA), tomb
@@ -1354,8 +1302,6 @@ def vacuum_index(path: str, min_age_seconds: float = 86400.0) -> list[str]:
     import time
 
     man = _load_manifest(path)
-    if man.get("version", 1) < 2:
-        return []
     live = {g["gen"] for g in man["generations"]}
     # active tombstones (round-13 deletes) are live artifacts — only
     # retired ones (absorbed by compaction, unlisted) are debris

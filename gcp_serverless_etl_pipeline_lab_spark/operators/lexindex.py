@@ -17,17 +17,17 @@ manifest replace as the one commit point, crash orphans invisible,
   every posting (one extra int) so the probe never touches a
   corpus-sized doc-length table — everything BM25 needs for a matched
   doc rides in the pruned partitions.
-- ``doclist/gen=N`` — one row per indexed document: ``(doc_id)``,
+- ``doclist/gen=N`` — one row per indexed document: ``(doc_id, dl)``,
   hive-partitioned by ``db = pmod(doc_id, DOC_BUCKETS)`` (round 12).
   The membership artifact: "are these doc_ids already indexed?" probes
   read only the asked ids' buckets — never the postings, whose doc_id
   column is |postings|-sized and term-bucketed (every bucket would
   scan). Feeds the nightly driver's cross-increment dedup guard and the
   hybrid-consistency check (streaming/nightly.run_nightly); includes
-  tokenless docs (zero postings but counted in ``n_docs``). Pre-round-12
-  indexes lack it — readers fall back to a postings scan.
-- ``doclist`` rows carry ``dl`` from round 13 (v3) so DELETES subtract
-  exact lengths; pre-v3 rows read dl as NULL with a postings fallback.
+  tokenless docs (zero postings but counted in ``n_docs``). The doc
+  length ``dl`` (round 13) lets a DELETE subtract exact lengths without
+  reading postings. An index whose generations lack the doclist, or
+  whose doclist rows lack ``dl``, is refused (rebuild it).
 - ``tombstones/gen=N`` (round 13) — one row per DELETED doc, same
   doc-bucket layout; each tombstone's manifest entry records the
   generations it covers (``max_gen``), so probes mask dead rows with a
@@ -87,10 +87,10 @@ _POSTINGS_SCHEMA = "term string, doc_id bigint, tf bigint, dl int, tb int"
 # BM25 probe does; positions are opt-in at build time (the artifact is
 # token-count-sized, the one index artifact that is).
 _POSITIONS_SCHEMA = "term string, doc_id bigint, positions array<int>, tb int"
-# doclist v3 (round 13) carries the doc length so DELETES can subtract
-# exact (n_docs, sum_dl) even for tokenless docs (no postings to read
-# dl from); pre-round-13 doclist dirs read dl as NULL and the delete
-# falls back to the doc's postings dl
+# the doclist carries the doc length so DELETES can subtract exact
+# (n_docs, sum_dl) even for tokenless docs (no postings to read dl
+# from); doclist files written before round 13 lack dl, which the
+# delete refuses
 _DOCLIST_SCHEMA = "doc_id bigint, dl int, db int"
 
 
@@ -238,9 +238,8 @@ def build_lexical_index(
     _write_manifest(
         path,
         {
-            # version 2 = the shared generational layout contract: the
-            # cross-index vacuum treats <2 as a flat pre-append layout
-            # and skips it, and this index is generational from birth
+            # version 2 = the shared generational layout contract, the
+            # only layout incremental._load_manifest reads
             "version": 2,
             "term_buckets": TERM_BUCKETS,
             "positions": bool(positions),
@@ -455,11 +454,7 @@ def compact_lexical_index(
             path,
             gen,
         )
-    # a fold that contains any pre-round-12 (doclist-less) generation
-    # must not write a doclist-less fold — that would propagate the
-    # legacy state forever (round-12 advice): materialize the missing
-    # legacy doclists first, so the fold's doclist is always complete
-    dl = _doclist(spark, path, fold_man)
+    dl = _read_artifact(spark, path, "doclist", fold_man, _DOCLIST_SCHEMA)
     (
         _mask_deleted(dl, tomb)
         .select("doc_id", "dl", "db")
@@ -519,21 +514,6 @@ def compact_lexical_index(
     except OSError:
         pass
     return gen
-
-
-def _doclist(spark, path: str, man: dict, dbs: list[int] | None = None) -> DataFrame:
-    """The committed doclist generations of ``man`` — only the ``dbs``
-    doc buckets when given. A listed generation that predates the
-    artifact (pre-round-12 index) is upgraded in place first, once ever
-    (``_materialize_missing_doclists``; round-12 verdict task 4: the old
-    unpruned-postings fallback was also blind to tokenless docs in every
-    LATER generation)."""
-    buckets = None if dbs is None else ("db", dbs)
-    dl = _read_artifact(spark, path, "doclist", man, _DOCLIST_SCHEMA, buckets)
-    if dl is None:
-        _materialize_missing_doclists(spark, path)
-        dl = _read_artifact(spark, path, "doclist", man, _DOCLIST_SCHEMA, buckets)
-    return dl
 
 
 def _active_tombstones(spark, path: str, man: dict) -> DataFrame | None:
@@ -600,7 +580,8 @@ def delete_from_lexical_index(
     training-data pipeline cannot ship without): the asked ids resolve
     against current membership (doc-bucket-pruned, already-deleted docs
     excluded), their exact (count, total dl) comes from the doclist's
-    stored ``dl`` (postings fallback for pre-v3 generations), and one
+    stored ``dl`` (doclist rows without it — written before round 13 —
+    raise: rebuild such an index), and one
     doc-bucketed ``tombstones/gen=N`` artifact plus an atomic manifest
     append commits the delete. Every probe masks tombstoned docs and
     subtracts their mass from N/avgdl, so **probe-after-delete is
@@ -631,10 +612,8 @@ def delete_from_lexical_index(
         F.col(ids.columns[0]).cast("long").alias("doc_id")
     ).distinct()
     member = indexed_doc_ids(spark, path, want)
-    # exact removal mass: dl from the doclist (v3); pre-v3 rows carry
-    # NULL dl and fall back to the doc's postings dl (any row — every
-    # posting carries the doc length)
-    dl = _doclist(spark, path, man)
+    # exact removal mass: dl from the doclist
+    dl = _read_artifact(spark, path, "doclist", man, _DOCLIST_SCHEMA)
     # mask already-deleted doclist rows: a deleted-then-re-added doc has
     # TWO doclist rows and only the live one may contribute its dl
     dl = _mask_deleted(dl, _active_tombstones(spark, path, man))
@@ -650,16 +629,11 @@ def delete_from_lexical_index(
     if d_n == 0:
         return False
     if int(row["nulls"]):
-        pd = (
-            _read_artifact(spark, path, "postings", man, _POSTINGS_SCHEMA)
-            .join(picked.filter(F.col("dl").isNull()).select("doc_id"),
-                  "doc_id", "left_semi")
-            .groupBy("doc_id")
-            .agg(F.max("dl").alias("dl"))
-            .agg(F.sum("dl").alias("s"))
-            .collect()[0]
+        raise ValueError(
+            f"lexical index at {path} holds doclist rows without dl "
+            "(written before round 13), so the delete cannot subtract "
+            "exact lengths; rebuild the index with build_lexical_index"
         )
-        d_s += int(pd["s"] or 0)
     gen = _claim_generation(path)
     (
         member.withColumn("db", _db("doc_id"))
@@ -712,57 +686,6 @@ def delete_from_lexical_index(
     return True
 
 
-def _materialize_missing_doclists(spark, path: str) -> list[int]:
-    """One-time in-place upgrade of a pre-round-12 index: derive the
-    doclist of every listed generation that lacks one from that
-    generation's own postings (distinct doc_id — one narrow-column scan
-    per legacy generation, run ONCE ever, not per probe). Serialized
-    under the manifest lock; each doclist lands via write-to-temp +
-    atomic rename, so a concurrent reader sees either no dir (and blocks
-    on the lock here) or a complete one — a listed generation's dir must
-    never be readable half-written.
-
-    Honest limit: a legacy generation's TOKENLESS docs left no postings,
-    so its derived doclist cannot contain them — exactly as blind as the
-    fallback scan this replaces, but confined to the legacy generations;
-    every post-upgrade append/compact records tokenless docs properly.
-    Returns the generation numbers materialized."""
-    import os
-    import shutil
-
-    with _manifest_lock(path):
-        man = _load_manifest(path)
-        missing = [
-            g["gen"]
-            for g in man["generations"]
-            if not os.path.isdir(os.path.join(path, "doclist", f"gen={g['gen']}"))
-        ]
-        for gen in missing:
-            d = os.path.join(path, "postings", f"gen={gen}")
-            post = (
-                spark.read.schema(_POSTINGS_SCHEMA)
-                .option("basePath", d)
-                .parquet(d)
-            )
-            tmp = os.path.join(path, "doclist", f".tmp-gen={gen}")
-            shutil.rmtree(tmp, ignore_errors=True)
-            (
-                # dl rides along (v3): for legacy docs it is recoverable
-                # from any posting row (every posting carries the doc
-                # length); tokenless legacy docs have no postings and
-                # are not representable here at all — documented limit
-                post.groupBy("doc_id")
-                .agg(F.max("dl").alias("dl"))
-                .withColumn("db", _db("doc_id"))
-                .repartition(DOC_BUCKETS, F.col("db"))
-                .write.mode("overwrite")
-                .partitionBy("db")
-                .parquet(tmp)
-            )
-            os.rename(tmp, os.path.join(path, "doclist", f"gen={gen}"))
-    return missing
-
-
 def indexed_doc_ids(
     spark,
     path: str,
@@ -789,13 +712,9 @@ def indexed_doc_ids(
     hand-run ``compact_lexical_index`` between a mid-night crash and its
     replay.
 
-    Pre-round-12 indexes (no doclist artifact) are upgraded IN PLACE on
-    first probe — ``_materialize_missing_doclists`` derives each legacy
-    generation's doclist from its own postings, once ever — so every
-    probe after the first runs the pruned path, and tokenless docs in
-    post-upgrade generations are always visible (the deleted fallback
-    scanned ALL generations' postings, so one legacy generation made the
-    probe blind to every later generation's tokenless docs too)."""
+    Tokenless docs are members too: the doclist lists every indexed
+    doc, postings or not. A listed generation without a doclist
+    (written before round 12) raises in ``_read_artifact``."""
     man = _load_manifest(path)
     gens = [
         g for g in man["generations"]
@@ -807,7 +726,9 @@ def indexed_doc_ids(
     sub = dict(man, generations=gens)
     want = ids.select(F.col("doc_id").cast("long").alias("doc_id")).distinct()
     dbs = [r["db"] for r in want.select(_db("doc_id").alias("db")).distinct().collect()]
-    dl = _doclist(spark, path, sub, dbs)
+    dl = _read_artifact(
+        spark, path, "doclist", sub, _DOCLIST_SCHEMA, ("db", dbs)
+    )
     # deleted docs are not members (round 13); the mask is scoped by
     # generation so a re-appended doc's new row stays a member
     dl = _mask_deleted(dl, _active_tombstones(spark, path, man))
@@ -1145,12 +1066,11 @@ def add_positions_to_index(
     """In-place positions BACKFILL for an existing non-positional index
     (round-15 verdict task 3): a 100 TB index you'd rather not rebuild
     can start serving phrase queries by deriving a ``positions/gen=N``
-    artifact for every committed generation from the corpus text —
-    the same upgrade discipline as ``_materialize_missing_doclists``
-    (the doclist v2→v3 precedent): write every per-generation artifact
-    first, then flip ``positions: true`` in the manifest under the lock
-    as the ONE commit point. A crash anywhere earlier leaves the flag
-    off (probes unaffected — orphan dirs invisible) and a re-run
+    artifact for every committed generation from the corpus text: write
+    every per-generation artifact first, then flip ``positions: true``
+    in the manifest under the lock as the ONE commit point. A crash
+    anywhere earlier leaves the flag off (probes unaffected — orphan
+    dirs invisible) and a re-run
     overwrites the orphans idempotently; a concurrent append landing
     mid-backfill is fenced loudly (its generation would have no
     positions artifact, silently breaking phrase recall forever).
@@ -1174,7 +1094,7 @@ def add_positions_to_index(
     man = _load_manifest(path)
     if man.get("positions"):
         return []
-    dl = _doclist(spark, path, man)
+    dl = _read_artifact(spark, path, "doclist", man, _DOCLIST_SCHEMA)
     live = _mask_deleted(dl, _active_tombstones(spark, path, man)).select(
         "doc_id", "_gen"
     )

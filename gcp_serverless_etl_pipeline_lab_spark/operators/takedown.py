@@ -19,10 +19,8 @@ residue report. ``scope`` picks the contract being audited:
   scope is the post-compaction audit ("has the fingerprint left the
   disk"), not a delete-correctness check.
 
-Legacy content-hash rows (pre-round-14 text-index generations carry no
-doc_id) are only detectable by content: pass (doc_id, text) and the
-hashes family is additionally probed by md5(text) — id-only audits
-cover every id-keyed artifact and say so in the report.
+Every audited artifact is keyed by id, so an id frame is all an audit
+needs.
 """
 
 from __future__ import annotations
@@ -55,15 +53,13 @@ def verify_forgotten(
     merged_dir: str | None = None,
     scope: str = "served",
     id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Residue report for a takedown: one row per (artifact, doc_id)
     still holding rows for an asked id — EMPTY means fully forgotten at
     the chosen ``scope``. Families audited (each present only when its
     path is configured): lex ``postings`` / ``positions`` (when the
     index stores them) / ``doclist``; ann ``vectors`` / ``veclist``;
-    text ``grams`` / ``sizes`` / ``hashes`` (id-keyed, plus
-    content-keyed when ``ids`` carries text); ``merged`` corpus rows.
+    text ``grams`` / ``sizes`` / ``hashes``; ``merged`` corpus rows.
 
     Cost: delete-sized semi-joins on narrow id columns — the same probe
     class as the deletes themselves; the merged check prunes children
@@ -73,7 +69,6 @@ def verify_forgotten(
     if scope not in ("served", "physical"):
         raise ValueError(f"scope must be 'served' or 'physical', got {scope!r}")
     served = scope == "served"
-    has_text = text_col in ids.columns
     want = ids.select(
         F.col(id_col).cast("long").alias("doc_id")
     ).distinct()
@@ -101,10 +96,9 @@ def verify_forgotten(
         dl = _read_artifact(
             spark, lex_index_path, "doclist", man, lx._DOCLIST_SCHEMA
         )
-        if dl is not None:
-            parts.append(
-                _residue(lx._mask_deleted(dl, tomb), "doc_id", want, "lex:doclist")
-            )
+        parts.append(
+            _residue(lx._mask_deleted(dl, tomb), "doc_id", want, "lex:doclist")
+        )
     if ann_index_path is not None:
         from . import annindex as ax
 
@@ -123,12 +117,11 @@ def verify_forgotten(
         vl = _read_artifact(
             spark, ann_index_path, "veclist", man, ax._VECLIST_SCHEMA
         )
-        if vl is not None:
-            parts.append(
-                _residue(
-                    ax._mask_deleted_vecs(vl, tomb), "vec_id", want, "ann:veclist"
-                )
+        parts.append(
+            _residue(
+                ax._mask_deleted_vecs(vl, tomb), "vec_id", want, "ann:veclist"
             )
+        )
     if text_index_path is not None:
         from . import incremental as inc
 
@@ -157,34 +150,14 @@ def verify_forgotten(
                 inc._mask_deleted_ids(sizes, tomb), "base_id", want, "text:sizes"
             )
         )
-        hm = inc._mask_deleted_hashes(hashes, tomb)
         parts.append(
             _residue(
-                hm.filter(F.col("doc_id").isNotNull()),
+                inc._mask_deleted_ids(hashes, tomb, "doc_id"),
                 "doc_id",
                 want,
                 "text:hashes",
             )
         )
-        if has_text:
-            # legacy rows carry no doc_id — only the content hash can
-            # prove them gone; report them under the ASKED doc's id
-            want_k = ids.select(
-                F.col(id_col).cast("long").alias("doc_id"),
-                F.md5(text_col).alias("k"),
-            ).distinct()
-            parts.append(
-                hm.filter(F.col("doc_id").isNull())
-                .select("k")
-                .join(want_k, "k")
-                .groupBy("doc_id")
-                .agg(F.count(F.lit(1)).alias("n_rows"))
-                .select(
-                    F.lit("text:hashes:content").alias("artifact"),
-                    "doc_id",
-                    "n_rows",
-                )
-            )
     if merged_dir is not None:
         import os
 

@@ -77,34 +77,6 @@ def _merged_children(merged_dir: str) -> list[str]:
     )
 
 
-def _read_merged(
-    spark, merged_dir: str, id_col: str, text_col: str, want_stats=None
-):
-    """(doc_id, text) union of the merged-corpus children, or None when
-    the dir is empty — the text-resolution fallback for deleting docs
-    whose index generations predate per-row ids (round 14).
-    ``want_stats`` (round 15): optional id stats of the docs the caller
-    actually needs (`_id_stats_of` of the delete frame) — children whose
-    recorded stats provably cannot hold any wanted doc are left out of
-    the union, so the legacy-hash resolution reads blast-radius bytes
-    like the purge does instead of the whole corpus."""
-    import os
-
-    stats = _load_child_stats(merged_dir) if want_stats is not None else {}
-    out = None
-    for name in _merged_children(merged_dir):
-        if want_stats is not None and _stats_disjoint(
-            stats.get(name), want_stats
-        ):
-            continue
-        part = spark.read.parquet(os.path.join(merged_dir, name)).select(
-            F.col(id_col).cast("long").alias("doc_id"),
-            F.col(text_col).alias("text"),
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
 # ---- per-child id statistics for the merged corpus (round-15 verdict
 # task 2). Without them, the purge's hit-probe semi-joins EVERY child's
 # id column per delete night — a full-corpus id scan whose cost grows
@@ -380,12 +352,11 @@ def run_nightly(
     forgotten), per increment in crash-stable order **ANN → lexical →
     text** — the REVERSE of the append order, so the serving invariant
     (ANN ⊆ lex) holds at every crash point — then ONE merged-corpus
-    purge for the whole night's increments (after every text leg, so
-    legacy content hashes can still resolve from the corpus copy before
-    it is scrubbed; batched because the purge probes every merged
-    child, a cost worth paying once per night rather than once per
-    increment). Each index leg is replay-idempotent via its manifest
-    ledger, the purge by construction; ``deletes_dir/_applied.json``
+    purge for the whole night's increments, after every index leg
+    (batched because the purge probes every merged child, a cost worth
+    paying once per night rather than once per increment). Each index
+    leg is replay-idempotent via its manifest ledger, the purge by
+    construction; ``deletes_dir/_applied.json``
     (written only after the purge) lets replays skip settled
     increments.
 
@@ -626,33 +597,11 @@ def run_nightly(
                     spark, ids, lex_index_path, increment_id=name
                 )
             if text_index_path is not None:
-                from ..operators.incremental import (
-                    LegacyHashResolutionError,
-                    delete_from_index,
-                )
+                from ..operators.incremental import delete_from_index
 
-                try:
-                    delete_from_index(
-                        spark, ids, text_index_path, increment_id=name
-                    )
-                except LegacyHashResolutionError:
-                    # pre-round-14 generations need the text to resolve
-                    # the content hash — the merged corpus still has it
-                    # (the purge below runs AFTER every text leg)
-                    if merged_dir is None:
-                        raise
-                    docs = _read_merged(
-                        spark, merged_dir, id_col, text_col,
-                        want_stats=_id_stats_of(ids, "doc_id"),
-                    )
-                    if docs is None:
-                        raise
-                    delete_from_index(
-                        spark,
-                        docs.join(ids, "doc_id", "left_semi"),
-                        text_index_path,
-                        increment_id=name,
-                    )
+                delete_from_index(
+                    spark, ids, text_index_path, increment_id=name
+                )
             pending_ids = (
                 ids if pending_ids is None else pending_ids.unionByName(ids)
             )
@@ -701,7 +650,6 @@ def run_nightly(
                 merged_dir=merged_dir,
                 scope="served",
                 id_col=id_col,
-                text_col=text_col,
             )
             rows = residue.limit(20).collect()
             forgotten_residue = len(rows)
@@ -814,10 +762,11 @@ def run_nightly(
             )
     if ann_index_path is not None and lex_index_path is not None:
         from ..operators.annindex import (
+            _VECLIST_SCHEMA,
             _active_vec_tombstones,
             _mask_deleted_vecs,
-            _veclist,
         )
+        from ..operators.incremental import _read_artifact
         from ..operators.lexindex import indexed_doc_ids
 
         ann_man = _load_manifest(ann_index_path)
@@ -834,8 +783,9 @@ def run_nightly(
         else:
             check_gens = []
         if check_gens:
-            vl = _veclist(
-                spark, ann_index_path, dict(ann_man, generations=check_gens)
+            vl = _read_artifact(
+                spark, ann_index_path, "veclist",
+                dict(ann_man, generations=check_gens), _VECLIST_SCHEMA,
             )
             # mask ANN tombstones: a documented takedown deletes ANN
             # first, then lex — between that and ANN compaction the raw

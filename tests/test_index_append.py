@@ -11,11 +11,16 @@ rebuild would have dropped them)."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
 
-from gcp_serverless_etl_pipeline_lab_spark.operators import incremental
+from gcp_serverless_etl_pipeline_lab_spark.operators import (
+    annindex,
+    incremental,
+    lexindex,
+)
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
@@ -147,6 +152,127 @@ def test_append_rejects_v1_flat_layout(spark, tmp_path):
         json.dump({"max_df": 100, "ngram": 3, "gram_buckets": 64}, fh)
     with pytest.raises(ValueError, match="flat layout"):
         incremental.append_to_index(spark, _docs(spark), idx)
+
+
+# ---------------------------------------------------------------- retired layouts
+# Every layout an earlier round wrote and no current writer produces is
+# refused with a ValueError at the point where it first shows up; none
+# is upgraded in place. The v1 cases only write a manifest.
+
+
+def _write_v1_manifest(tmp_path, man: dict) -> str:
+    import json
+
+    idx = str(tmp_path / "v1")
+    os.makedirs(idx)
+    with open(os.path.join(idx, "_MANIFEST.json"), "w") as fh:
+        json.dump(man, fh)
+    return idx
+
+
+def _v1_text(spark, tmp_path):
+    idx = _write_v1_manifest(
+        tmp_path, {"max_df": 100, "ngram": 3, "gram_buckets": 64}
+    )
+    incremental.vacuum_index(idx)
+
+
+def _v1_lex(spark, tmp_path):
+    idx = _write_v1_manifest(
+        tmp_path,
+        {
+            "term_buckets": 64,
+            "generations": [
+                {"gen": 0, "increment_id": None, "n_docs": 1, "sum_dl": 1}
+            ],
+        },
+    )
+    lexindex.lexical_index_stats(spark, idx)
+
+
+def _v1_ann(spark, tmp_path):
+    idx = _write_v1_manifest(tmp_path, {"dim": 2, "model": [[0, [0.0, 0.0]]]})
+    annindex.ann_index_stats(spark, idx)
+
+
+def _emb(spark):
+    return load_table(spark, SF_SMOKE, "embeddings").select(
+        "vec_id", "embedding"
+    )
+
+
+def _some_ids(spark, n):
+    return _docs(spark).orderBy("doc_id").limit(n).select("doc_id")
+
+
+def _lex_without_doclist(spark, tmp_path):
+    idx = str(tmp_path / "lex")
+    lexindex.build_lexical_index(_docs(spark), idx)
+    shutil.rmtree(os.path.join(idx, "doclist"))
+    lexindex.indexed_doc_ids(spark, idx, _some_ids(spark, 3))
+
+
+def _ann_without_veclist(spark, tmp_path):
+    idx = str(tmp_path / "ann")
+    annindex.build_ann_index(
+        _emb(spark), idx, 64, cells=4, iters=2, sample_rate=1.0
+    )
+    shutil.rmtree(os.path.join(idx, "veclist"))
+    annindex.indexed_vec_ids(spark, idx, _emb(spark).select("vec_id").limit(3))
+
+
+def _ann_without_cell_counts(spark, tmp_path):
+    idx = str(tmp_path / "ann")
+    annindex.build_ann_index(
+        _emb(spark), idx, 64, cells=4, iters=2, sample_rate=1.0
+    )
+    man = incremental._load_manifest(idx)
+    for g in man["generations"]:
+        del g["cell_counts"]
+    incremental._write_manifest(idx, man)
+    annindex.ann_index_stats(spark, idx)
+
+
+def _doclist_without_dl(spark, tmp_path):
+    idx = str(tmp_path / "lex")
+    lexindex.build_lexical_index(_docs(spark), idx)
+    d = os.path.join(idx, "doclist", "gen=0")
+    rows = spark.read.parquet(d).select("doc_id", "db").collect()
+    shutil.rmtree(d)
+    spark.createDataFrame(rows, "doc_id bigint, db int").write.partitionBy(
+        "db"
+    ).parquet(d)
+    lexindex.delete_from_lexical_index(spark, _some_ids(spark, 2), idx)
+
+
+def _hashes_without_doc_id(spark, tmp_path):
+    idx = str(tmp_path / "text")
+    incremental.build_base_index(_docs(spark), idx)
+    d = os.path.join(idx, "hashes", "gen=0")
+    rows = spark.read.parquet(d).select("k").collect()
+    spark.createDataFrame(rows, "k string").coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(d)
+    incremental.delete_from_index(spark, _some_ids(spark, 1), idx)
+
+
+_RETIRED_LAYOUTS = {
+    "v1-text": (_v1_text, "flat layout"),
+    "v1-lex": (_v1_lex, "flat layout"),
+    "v1-ann": (_v1_ann, "flat layout"),
+    "no-doclist": (_lex_without_doclist, "no doclist/gen=0 dir"),
+    "no-veclist": (_ann_without_veclist, "no veclist/gen=0 dir"),
+    "no-cell-counts": (_ann_without_cell_counts, "no cell_counts"),
+    "doclist-without-dl": (_doclist_without_dl, "without dl"),
+    "hashes-without-doc-id": (_hashes_without_doc_id, "without a doc_id"),
+}
+
+
+@pytest.mark.parametrize("case", list(_RETIRED_LAYOUTS))
+def test_retired_layouts_raise(spark, tmp_path, case):
+    run, message = _RETIRED_LAYOUTS[case]
+    with pytest.raises(ValueError, match=message):
+        run(spark, tmp_path)
 
 
 def test_appended_probe_still_prunes_gram_buckets(spark, tmp_path):

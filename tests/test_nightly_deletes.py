@@ -87,6 +87,17 @@ def _setup_with_append(spark, tmp_path):
     return corpus, indexed, vids, lex, ann, text, inbox, merged, deletes
 
 
+def _merged_docs(spark, merged):
+    """(doc_id, text) union of the merged-corpus children, or None."""
+    out = None
+    for name in nightly_mod._merged_children(merged):
+        part = spark.read.parquet(os.path.join(merged, name)).select(
+            F.col("doc_id").cast("long").alias("doc_id"), "text"
+        )
+        out = part if out is None else out.unionByName(part)
+    return out
+
+
 def _assert_forgotten(spark, corpus, indexed, vids, lex, ann, text, merged):
     survivors = indexed.filter(~F.col("doc_id").isin(vids))
     # lexical probe == scan over corpus-minus-deleted
@@ -104,7 +115,7 @@ def _assert_forgotten(spark, corpus, indexed, vids, lex, ann, text, merged):
     victims = corpus.filter(F.col("doc_id").isin(vids)).select("doc_id", "text")
     assert incremental.exact_dups_vs_index(spark, victims, text).count() == 0
     # the corpus copy is scrubbed: no victim id, no victim text
-    mdocs = nightly_mod._read_merged(spark, merged, "doc_id", "text")
+    mdocs = _merged_docs(spark, merged)
     if mdocs is not None:
         assert mdocs.filter(F.col("doc_id").isin(vids)).count() == 0
         vtexts = {r["text"] for r in victims.collect()}
@@ -221,37 +232,25 @@ def test_tombstone_pressure_triggers_fold(spark, tmp_path):
     _assert_forgotten(spark, corpus, indexed, vids, lex, ann, text, merged)
 
 
-def test_text_leg_resolves_legacy_hashes_from_merged(spark, tmp_path):
-    """An id-only delete against a text index whose generations predate
-    per-row hash ids resolves the content from the merged corpus (the
-    purge runs AFTER the text leg, so the text is still there)."""
-    corpus = _corpus(spark)
-    docs = corpus.select("doc_id", "text")
-    text = str(tmp_path / "text")
-    merged = str(tmp_path / "merged")
-    deletes = str(tmp_path / "deletes")
-    inbox = str(tmp_path / "inbox")
+def test_delete_of_unindexed_ids_is_recorded_once_and_writes_nothing(
+    spark, tmp_path
+):
+    """A delete increment naming only ids the index never held commits no
+    tombstone, is still recorded as applied, and a replay skips it."""
+    text, inbox, deletes = (
+        str(tmp_path / "text"), str(tmp_path / "inbox"),
+        str(tmp_path / "deletes"),
+    )
     os.makedirs(inbox)
-    incremental.build_base_index(docs, text)
-    # strip doc_id from the stored hashes — the legacy layout
-    hdir = os.path.join(text, "hashes", "gen=0")
-    legacy = spark.read.parquet(hdir).select("k").collect()
-    spark.createDataFrame(legacy, "k string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(hdir)
-    # the merged corpus holds the text (as the nightly loop would have
-    # left it)
-    docs.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(merged, "epoch=0")
+    incremental.build_base_index(
+        spark.createDataFrame(
+            [(1, "a b c d"), (2, "e f g h")], "doc_id bigint, text string"
+        ),
+        text,
     )
-    victim = docs.orderBy("doc_id").limit(1)
-    vid = victim.collect()[0]["doc_id"]
-    _write_delete(spark, deletes, "take=1", [vid])
-    r = run_nightly(
-        spark, inbox, text_index_path=text, merged_dir=merged,
-        deletes_dir=deletes,
-    )
+    _write_delete(spark, deletes, "take=1", [77, 78])
+    r = run_nightly(spark, inbox, text_index_path=text, deletes_dir=deletes)
     assert r["applied_deletes"] == ["take=1"]
-    assert incremental.exact_dups_vs_index(spark, victim, text).count() == 0
-    mdocs = nightly_mod._read_merged(spark, merged, "doc_id", "text")
-    assert mdocs.filter(F.col("doc_id") == vid).count() == 0
+    assert not incremental._load_manifest(text).get("tombstones", [])
+    r = run_nightly(spark, inbox, text_index_path=text, deletes_dir=deletes)
+    assert r["applied_deletes"] == [] and r["skipped_deletes"] == ["take=1"]

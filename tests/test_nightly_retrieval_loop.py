@@ -342,9 +342,7 @@ def test_append_assert_new_doc_ids_guards_the_contract(spark, tmp_path):
     ) is True
 
 
-def test_indexed_doc_ids_membership_and_legacy_upgrade(spark, tmp_path):
-    import shutil
-
+def test_indexed_doc_ids_membership(spark, tmp_path):
     docs = _corpus(spark).select("doc_id", "text")
     half = docs.filter(F.col("doc_id") % 2 == 0)
     idx = str(tmp_path / "lex")
@@ -356,14 +354,3 @@ def test_indexed_doc_ids_membership_and_legacy_upgrade(spark, tmp_path):
     }
     want = {r["doc_id"] for r in half.select("doc_id").collect()}
     assert got == want
-
-    # pre-round-12 index shape (no doclist artifact): round 13 upgrades
-    # it in place on first probe instead of degrading to an unpruned
-    # postings scan — answers match and the artifact now exists
-    shutil.rmtree(os.path.join(idx, "doclist"))
-    got2 = {
-        r["doc_id"]
-        for r in lexindex.indexed_doc_ids(spark, idx, asked).collect()
-    }
-    assert got2 == want
-    assert os.path.isdir(os.path.join(idx, "doclist", "gen=0"))

@@ -1,12 +1,11 @@
 """Round-13 contracts: shared fold-slice tiering policy (+ the
 protected-increment guard), sampled-model nprobe escalation for served
 ANN probes, metadata-filtered retrieval inside both hybrid legs, and
-the in-place doclist upgrade for pre-round-12 lexical indexes."""
+the ANN membership artifact (veclist)."""
 
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import Window
@@ -325,65 +324,3 @@ def test_indexed_vec_ids_membership(spark, tmp_path):
     assert annindex.indexed_vec_ids(spark, idx, asked).count() == emb.count()
     gen = incremental._load_manifest(idx)["generations"][-1]["gen"]
     assert os.path.isdir(os.path.join(idx, "veclist", f"gen={gen}"))
-
-
-def test_legacy_ann_index_upgrades_veclist_in_place(spark, tmp_path):
-    emb = _emb(spark)
-    idx = str(tmp_path / "ann")
-    annindex.build_ann_index(
-        emb, idx, EMB_DIM, cells=4, iters=2, sample_rate=1.0
-    )
-    shutil.rmtree(os.path.join(idx, "veclist"))
-    asked = emb.select("vec_id").limit(9)
-    assert annindex.indexed_vec_ids(spark, idx, asked).count() == 9
-    assert os.path.isdir(os.path.join(idx, "veclist", "gen=0"))
-
-
-# ------------------------------------------------------ doclist upgrade
-
-
-def test_legacy_index_upgrades_doclist_in_place(spark, tmp_path):
-    """A pre-round-12 index (no doclist artifact) used to degrade EVERY
-    membership probe to an unpruned postings scan that was also blind to
-    tokenless docs in post-upgrade generations. First probe now
-    materializes the legacy generations' doclists once; tokenless docs
-    appended afterwards are visible."""
-    docs = _docs(spark)
-    idx = str(tmp_path / "lex")
-    lexindex.build_lexical_index(docs, idx)
-    # simulate the pre-round-12 layout
-    shutil.rmtree(os.path.join(idx, "doclist"))
-    # a post-upgrade append carrying a TOKENLESS doc (empty text)
-    inc = spark.createDataFrame(
-        [(9_000_001, "fresh appended words"), (9_000_002, "")],
-        "doc_id bigint, text string",
-    )
-    assert lexindex.append_lexical_index(spark, inc, idx, "night1") is True
-    ids = spark.createDataFrame(
-        [(9_000_001,), (9_000_002,), (123_456_789,)], "doc_id bigint"
-    )
-    hit = lexindex.indexed_doc_ids(spark, idx, ids)
-    assert {r["doc_id"] for r in hit.collect()} == {9_000_001, 9_000_002}
-    # the upgrade materialized gen=0's doclist on disk (one-time)
-    assert os.path.isdir(os.path.join(idx, "doclist", "gen=0"))
-    # base docs are members too (derived from gen-0 postings)
-    some = docs.select("doc_id").limit(5)
-    assert lexindex.indexed_doc_ids(spark, idx, some).count() == 5
-
-
-def test_partial_fold_over_legacy_generation_writes_doclist(spark, tmp_path):
-    """Round-12 advice: a fold whose slice contains a doclist-less
-    generation must materialize it first, so the fold generation always
-    carries a doclist and the index never re-enters the legacy state."""
-    docs = _docs(spark)
-    idx = str(tmp_path / "lex")
-    lexindex.build_lexical_index(docs.filter(F.col("doc_id") % 2 == 0), idx)
-    shutil.rmtree(os.path.join(idx, "doclist"))
-    lexindex.append_lexical_index(
-        spark, docs.filter(F.col("doc_id") % 2 == 1), idx, "odd"
-    )
-    gen = lexindex.compact_lexical_index(spark, idx)
-    assert os.path.isdir(os.path.join(idx, "doclist", f"gen={gen}"))
-    # membership after the fold runs the pruned path over the fold's list
-    some = docs.select("doc_id").limit(7)
-    assert lexindex.indexed_doc_ids(spark, idx, some).count() == 7

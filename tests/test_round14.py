@@ -273,17 +273,6 @@ def test_cell_counts_recorded_through_lifecycle(spark, tmp_path):
     assert sum(annindex._total_cell_counts(man).values()) == (
         base.count() + inc.count() - 3
     )
-    # a legacy manifest (no counts) reads as no-signal, not a crash
-    from gcp_serverless_etl_pipeline_lab_spark.operators.incremental import (
-        _manifest_lock,
-    )
-
-    with _manifest_lock(ann):
-        man = incremental._load_manifest(ann)
-        for g in man["generations"]:
-            g.pop("cell_counts", None)
-        incremental._write_manifest(ann, man)
-    assert annindex._total_cell_counts(incremental._load_manifest(ann)) is None
 
 
 def test_drift_baseline_ignores_param_mismatched_readings(spark, tmp_path):

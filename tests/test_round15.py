@@ -10,12 +10,8 @@
   without a read; legacy children are read once and backfilled.
 - `deletes_dir/_applied.json` is capped to increments still present
   (verdict task 6).
-- `delete_from_index` tombstones the UNION of all resolved hashes
-  (advice-low): a doc in both a legacy generation (old text) and a v3
-  generation (new text) stops matching under BOTH content hashes.
-- the needs-text legacy path raises a DEDICATED
-  `LegacyHashResolutionError` (advice-low); unrelated ValueErrors
-  propagate out of the nightly delete stage without a corpus read.
+- a flat-layout (config) error propagates out of the nightly delete
+  stage as a ValueError.
 """
 
 from __future__ import annotations
@@ -244,67 +240,14 @@ def test_applied_ledger_capped_to_present_children(spark, tmp_path):
         assert json.load(fh) == ["take=2"]
 
 
-# ---------------------------------------------------------------- hash union
-
-
-def test_delete_tombstones_union_of_legacy_and_v3_hashes(spark, tmp_path):
-    """A doc indexed by a LEGACY generation under old text and by a v3
-    generation under new text must stop matching as already-seen under
-    BOTH contents after one (doc_id, text_old) delete."""
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    idx = str(tmp_path / "text")
-    incremental.build_base_index(docs, idx)
-    # make gen=0 legacy: strip doc_id from its stored hashes
-    hdir = os.path.join(idx, "hashes", "gen=0")
-    legacy = spark.read.parquet(hdir).select("k").collect()
-    spark.createDataFrame(legacy, "k string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(hdir)
-    victim = docs.orderBy("doc_id").limit(1).collect()[0]
-    vid, old_text = victim["doc_id"], victim["text"]
-    new_text = old_text + " revised edition"
-    assert incremental.append_to_index(
-        spark,
-        spark.createDataFrame([(vid, new_text)], "doc_id bigint, text string"),
-        idx,
-        "rev1",
-    ) is True
-    assert incremental.delete_from_index(
-        spark,
-        spark.createDataFrame([(vid, old_text)], "doc_id bigint, text string"),
-        idx,
-        "take",
-    ) is True
-    for txt in (old_text, new_text):
-        probe = spark.createDataFrame(
-            [(vid, txt)], "doc_id bigint, text string"
-        )
-        assert incremental.exact_dups_vs_index(spark, probe, idx).count() == 0, txt
-
-
-# ---------------------------------------------------------------- exception type
-
-
-def test_legacy_needs_text_raises_dedicated_type(spark, tmp_path):
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    idx = str(tmp_path / "text")
-    incremental.build_base_index(docs, idx)
-    hdir = os.path.join(idx, "hashes", "gen=0")
-    legacy = spark.read.parquet(hdir).select("k").collect()
-    spark.createDataFrame(legacy, "k string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(hdir)
-    victim = docs.orderBy("doc_id").limit(1).select("doc_id")
-    with pytest.raises(incremental.LegacyHashResolutionError):
-        incremental.delete_from_index(spark, victim, idx)
+# ---------------------------------------------------------------- layout errors
 
 
 def test_nightly_delete_config_error_propagates_without_corpus_read(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path
 ):
-    """A flat-layout (config) ValueError from delete_from_index must
-    propagate out of the nightly delete stage directly — the corpus
-    resolution retry is only for LegacyHashResolutionError."""
+    """A flat-layout (config) ValueError must propagate out of a nightly
+    run that carries delete increments."""
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     inbox, merged, deletes, text = (
         str(tmp_path / "inbox"), str(tmp_path / "merged"),
@@ -323,20 +266,11 @@ def test_nightly_delete_config_error_propagates_without_corpus_read(
     man = incremental._load_manifest(text)
     man.pop("version", None)
     incremental._write_manifest(text, man)
-    reads = {"n": 0}
-    real = nightly_mod._read_merged
-
-    def counting_read(*a, **k):
-        reads["n"] += 1
-        return real(*a, **k)
-
-    monkeypatch.setattr(nightly_mod, "_read_merged", counting_read)
     with pytest.raises(ValueError, match="flat layout"):
         run_nightly(
             spark, inbox, text_index_path=text, merged_dir=merged,
             deletes_dir=deletes,
         )
-    assert reads["n"] == 0
 
 
 # ---------------------------------------------------------------- observability
@@ -394,19 +328,3 @@ def test_index_stats_track_lifecycle(spark, tmp_path):
     annindex.compact_ann_index(spark, aidx)
     ast = annindex.ann_index_stats(spark, aidx).collect()[0]
     assert ast["n_vectors"] == n_vec - 2 and ast["n_tombstones"] == 0
-
-
-def test_read_merged_prunes_with_stats(spark, tmp_path):
-    merged = str(tmp_path / "merged")
-    _write_child(spark, merged, "night=1", [(i, f"t{i}") for i in range(5)])
-    _write_child(
-        spark, merged, "night=2", [(i, f"t{i}") for i in range(100, 105)]
-    )
-    want = nightly_mod._id_stats_of(_ids_df(spark, [2, 3]), "doc_id")
-    pruned = nightly_mod._read_merged(
-        spark, merged, "doc_id", "text", want_stats=want
-    )
-    got = {r["doc_id"] for r in pruned.collect()}
-    assert got == {0, 1, 2, 3, 4}  # only child night=1 in the union
-    full = nightly_mod._read_merged(spark, merged, "doc_id", "text")
-    assert full.count() == 10

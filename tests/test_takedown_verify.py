@@ -1,8 +1,7 @@
 """verify_forgotten (round-15 verdict task 4): the artifact-residue
 audit as a user-facing operator. Served scope must be empty right after
 a committed takedown; physical scope shows tombstone-masked rows until
-compaction folds them; legacy content-hash rows are detectable when the
-audit carries text; run_nightly(verify_deletes=True) runs the served
+compaction folds them; run_nightly(verify_deletes=True) runs the served
 audit on the night's own takedowns and fails loudly on residue."""
 
 from __future__ import annotations
@@ -128,34 +127,6 @@ def test_audit_reports_partial_takedown(spark, tmp_path):
     fams = {r["artifact"] for r in rep.collect()}
     assert "lex:postings" not in fams and "lex:doclist" not in fams
     assert {"ann:vectors", "ann:veclist", "text:grams", "merged"} <= fams
-
-
-def test_audit_detects_legacy_content_hash_rows(spark, tmp_path):
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
-    idx = str(tmp_path / "text")
-    incremental.build_base_index(docs, idx)
-    hdir = os.path.join(idx, "hashes", "gen=0")
-    legacy = spark.read.parquet(hdir).select("k").collect()
-    spark.createDataFrame(legacy, "k string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(hdir)
-    victim = docs.orderBy("doc_id").limit(1)
-    vid = victim.collect()[0]["doc_id"]
-    # id-only audit cannot see legacy hash rows; a text-carrying one can
-    rep_id = verify_forgotten(
-        spark, victim.select("doc_id"), text_index_path=idx
-    )
-    assert "text:hashes:content" not in {
-        r["artifact"] for r in rep_id.collect()
-    }
-    rep_txt = verify_forgotten(spark, victim, text_index_path=idx)
-    assert ("text:hashes:content", vid) in {
-        (r["artifact"], r["doc_id"]) for r in rep_txt.collect()
-    }
-    # after a text-carrying delete the content row is masked
-    assert incremental.delete_from_index(spark, victim, idx, "take") is True
-    rep_after = verify_forgotten(spark, victim, text_index_path=idx)
-    assert rep_after.count() == 0
 
 
 def test_audit_scope_validation(spark, tmp_path):

@@ -99,28 +99,6 @@ def test_text_delete_then_reingest_works(spark, tmp_path):
     assert {r["base_id"] for r in nd.collect()} == {vid}
 
 
-def test_text_delete_legacy_generation_requires_text(spark, tmp_path):
-    docs = _docs(spark)
-    idx = str(tmp_path / "text")
-    incremental.build_base_index(docs, idx)
-    # simulate a pre-round-14 generation: strip doc_id from the stored
-    # hashes (legacy files carry only k)
-    hdir = os.path.join(idx, "hashes", "gen=0")
-    legacy = spark.read.parquet(hdir).select("k").collect()
-    spark.createDataFrame(legacy, "k string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(hdir)
-    victim = docs.orderBy("doc_id").limit(1)
-    with pytest.raises(ValueError, match="pass .doc_id, text."):
-        incremental.delete_from_index(spark, victim.select("doc_id"), idx)
-    # with the text the delete resolves the hash and fully masks
-    assert incremental.delete_from_index(spark, victim, idx, "take") is True
-    assert incremental.exact_dups_vs_index(spark, victim, idx).count() == 0
-    nd = incremental.near_dups_vs_index(spark, victim, idx, threshold=0.99)
-    vid = victim.collect()[0]["doc_id"]
-    assert vid not in {r["base_id"] for r in nd.collect()}
-
-
 def test_text_compact_applies_tombstones_and_retires(spark, tmp_path):
     docs = _docs(spark)
     idx = str(tmp_path / "text")
