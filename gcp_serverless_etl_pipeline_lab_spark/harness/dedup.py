@@ -437,15 +437,18 @@ def _ensure_cached_index(
     """Build-once cache for persisted indexes (incremental-dedup text
     index, ANN IVF index), keyed by a CONTENT fingerprint of the source
     parquet (path + size + mtime_ns — regenerated fixture data changes
-    the key, so a stale index is never silently probed) plus a
-    build-variant ``tag``. Concurrent first-callers coordinate with
-    build-to-unique-dir + atomic rename; a failed rename trusts the
+    the key, so a stale index is never silently probed), a build-variant
+    ``tag`` and the index layout version (a cache an earlier layout
+    wrote is rebuilt, not refused). Concurrent first-callers coordinate
+    with build-to-unique-dir + atomic rename; a failed rename trusts the
     winner's dir only if its manifest EXISTS, else probes this caller's
     own complete staged build."""
     import hashlib
     import os
     import shutil
     import tempfile
+
+    from ..operators.incremental import _MANIFEST_VERSION
 
     src = os.path.join(sf_dir, table)
     paths = (
@@ -456,7 +459,8 @@ def _ensure_cached_index(
     st = [(p, os.stat(p).st_size, os.stat(p).st_mtime_ns) for p in paths]
     fp = hashlib.md5(repr(st).encode()).hexdigest()[:16]
     idx = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_incr_index_{fp}_{tag}"
+        tempfile.gettempdir(),
+        f"spark_graft_incr_index_{fp}_{tag}_v{_MANIFEST_VERSION}",
     )
     if not os.path.exists(os.path.join(idx, "_MANIFEST.json")):
         stage = tempfile.mkdtemp(prefix="incr_idx_build_")

@@ -209,8 +209,8 @@ def sim_search_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a0e_ann_index_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PERSISTED-IVF serving path (operators/annindex.py): the coarse
     quantizer is trained once and the cell-assigned corpus stored
-    hive-partitioned by cell; the query batch probes the manifest model
-    and scans ONLY its probed cell partitions. Must rank identically to
+    bucketed by cell; the query batch probes the manifest model and
+    scans ONLY the ranges holding its probed cells. Must rank identically to
     sim_search_ivf_trained (same model contract, same tie rules) — the
     shared oracle is the proof that persisting the assignment changed
     nothing. Index cached per corpus fingerprint, like the text-index

@@ -647,7 +647,7 @@ def a0i_lex_doc_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     hybrid-consistency invariant (streaming/nightly.run_nightly). The
     asked set mixes every indexed doc_id with a shifted copy guaranteed
     absent, so both answers are exercised; the probe reads only the
-    asked ids' ``db`` bucket partitions of the doclist artifact (plan
+    asked ids' ``db`` bucket ranges of the doclist artifact (plan
     pinned in tests/test_plans_round12.py), never the postings. The
     oracle is the closed-form truth: the index holds exactly the
     documents table."""
@@ -1029,7 +1029,7 @@ def a0j_ann_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/annindex.indexed_vec_ids over the ``veclist`` artifact —
     the vector twin of a0i_lex_doc_membership). The asked set mixes
     every indexed vec_id with a shifted copy guaranteed absent; the
-    probe reads only the asked ids' ``vb`` bucket partitions of the
+    probe reads only the asked ids' ``vb`` bucket ranges of the
     narrow veclist, never the embedding-carrying cell-partitioned
     vectors (plan pinned in tests/test_plans_round13.py — an id lookup
     prunes nothing on a CELL partitioning, so scanning vectors would
@@ -1418,7 +1418,7 @@ def a0l_phrase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict task 4, operators/lexindex.phrase_topk_from_index): the
     index is built on the even half with ``positions=True`` and the odd
     half appended (the append maintains the positional artifact), then
-    the phrase probe reads ONLY the phrase words' term-bucket partitions
+    the phrase probe reads ONLY the phrase words' term-bucket ranges
     and verifies adjacency with one (doc, start) vote aggregate — word i
     at position p votes for start p-i; a start collecting every slot is
     one occurrence. The oracle re-tokenizes the corpus INDEPENDENTLY in
@@ -2046,7 +2046,7 @@ def a0m_proximity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/lexindex.proximity_matching_docs): documents containing
     ALL of join/filter/vector within an 8-token span — the order-free
     capability between AND semantics and exact phrase ("join near
-    filter"). The probe reads only the terms' term-bucket partitions
+    filter"). The probe reads only the terms' term-bucket ranges
     and verifies the window with ONE range-frame aggregate over the
     matched positions (collect_set(term) over [p, p+7] per doc) — no
     per-term self-joins, no corpus window; cost tracks matched

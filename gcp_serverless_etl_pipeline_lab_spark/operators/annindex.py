@@ -3,19 +3,27 @@ text incremental index (operators/incremental.py).
 
 ``ivf_trained_topk`` trains + assigns per invocation; the operating mode
 for a served corpus is train ONCE, assign ONCE, store the vectors
-PARTITIONED BY CELL, and let every query batch read only the cells it
+BUCKETED BY CELL, and let every query batch read only the cells it
 probes:
 
 - ``build_ann_index`` fits the deterministic k-means coarse quantizer
   (or accepts a prior model), assigns every vector map-side against the
-  literal centroids, and writes ``vectors/`` hive-partitioned by
-  ``cell`` plus the serialized model in ``_MANIFEST.json`` (k x dim
-  rounded floats — JSON round-trips them exactly);
+  literal centroids, and writes ``vectors/`` in the shared bucket-range
+  layout (``incremental._write_ranged``) with the cell as the bucket:
+  each generation's vectors land in range dirs ``r=<cell * g //
+  cells>``, one file per non-empty range sorted by cell, where the
+  granularity ``g`` is sized to the generation's vector count — one
+  file for a nightly append, one dir per cell for a large build. The
+  serialized model (k x dim rounded floats — JSON round-trips them
+  exactly) and each generation's ``g``, non-empty ranges, per-cell
+  counts and the embedding type its vectors are read back with go to
+  ``_MANIFEST.json``;
 - ``query_ann_index`` rebuilds the probe list from the manifest model
   (no training, no corpus scan), collects the <= ``cells``-value probed
   cell list driver-side (a bounded gate, same class as the text index's
-  gram-bucket gate), and scans ONLY those partitions — per-batch cost
-  tracks |queries| x nprobe x cell size, never corpus size.
+  gram-bucket gate), and scans ONLY the ranges holding those cells, by
+  path, with the cell filter kept — per-batch cost tracks |queries| x
+  nprobe x cell size, never corpus size.
 
 Output parity: ``query_ann_index(spark, queries, path, k, nprobe)`` is
 row-identical to ``ivf_trained_topk(corpus, queries, dim, k, nprobe,
@@ -23,8 +31,8 @@ model=<the stored model>)`` — same assignment expression, same probe
 ranking, same tie rules (pinned by tests/test_ann_index.py and the
 ``a0e_ann_index_query`` oracle query).
 
-At 100 TB: the cell partitioning is the pruning unit (raise ``cells``
-so each holds many files); ``append_ann_index`` adds vectors WITHOUT
+At 100 TB: the cell is the pruning unit (raise ``cells`` so each holds
+many files); ``append_ann_index`` adds vectors WITHOUT
 retraining — new arrivals are assigned against the STORED model and
 land as an immutable generation dir committed by one atomic manifest
 replace, the same crash/idempotence discipline as the text index's
@@ -51,7 +59,15 @@ from pyspark.sql import functions as F
 
 from ..functions.local_frames import literal_frame
 
-from .incremental import _load_manifest, _read_artifact, _write_manifest
+from .incremental import (
+    _MANIFEST_VERSION,
+    _granularity,
+    _load_manifest,
+    _read_artifact,
+    _read_gen,
+    _write_manifest,
+    _write_ranged,
+)
 from .similarity import (
     _assign_cell,
     _dot,
@@ -61,11 +77,11 @@ from .similarity import (
 )
 
 # the ANN membership artifact (round-12 verdict task 6): one row per
-# indexed vector, hive-partitioned by vb = pmod(vec_id, VEC_BUCKETS) —
-# the vector twin of the lexical doclist. "Are these vec_ids indexed?"
+# indexed vector, bucketed by vb = pmod(vec_id, VEC_BUCKETS) — the
+# vector twin of the lexical doclist. "Are these vec_ids indexed?"
 # probes read only the asked ids' buckets of this narrow artifact,
-# never the cell-partitioned vectors/ (whose rows carry the embedding
-# payload and whose CELL partitioning prunes nothing for an id lookup —
+# never the cell-bucketed vectors/ (whose rows carry the embedding
+# payload and whose CELL bucketing prunes nothing for an id lookup —
 # every cell would scan). Feeds the nightly hybrid-consistency check at
 # consistency_scope="full", whose cost now tracks asked-set size.
 VEC_BUCKETS = 64
@@ -144,15 +160,17 @@ class ModelEpochChangedError(RuntimeError):
     substring that a reworded error would silently stop matching."""
 
 
-def _mean_assign_msd(df: DataFrame, model) -> float | None:
-    """Mean squared distance of each vector to its NEAREST pinned
-    centroid — the quantization error the IVF probe's recall rides on.
-    One partial-aggregated pass, single-row collect (bounded gate)."""
+def _mean_assign_msd(df: DataFrame, model) -> tuple[float | None, int]:
+    """(mean squared distance of each vector to its NEAREST pinned
+    centroid — the quantization error the IVF probe's recall rides on —,
+    row count). One partial-aggregated pass, single-row collect (bounded
+    gate); the count sizes the generation's cell ranges."""
     darr = "array(" + ", ".join(_sq_dist_expr("embedding", c) for _, c in model) + ")"
     row = df.select(
-        F.avg(F.expr(f"array_min({darr})")).alias("msd")
+        F.avg(F.expr(f"array_min({darr})")).alias("msd"),
+        F.count(F.lit(1)).alias("n"),
     ).collect()[0]
-    return None if row["msd"] is None else float(row["msd"])
+    return None if row["msd"] is None else float(row["msd"]), int(row["n"])
 
 
 def build_ann_index(
@@ -168,20 +186,18 @@ def build_ann_index(
     corpus under ``path``. ``sample_rate`` forwards to training (0.1 =
     the scale-safe hash-Bernoulli sample; 1.0 = the full-corpus model the
     DuckDB oracles mirror)."""
-    import json
-    import os
-
     trained_sr: float | None = None
     if model is None:
         model = kmeans_centroids(
             corpus, dim, k=cells, iters=iters, sample_rate=sample_rate
         )
         trained_sr = float(sample_rate)
-    cell_counts = _write_vectors_gen(corpus, path, 0, model)
+    baseline, n = _mean_assign_msd(corpus, model)
+    layout = _write_vectors_gen(corpus, path, 0, model, n)
     _write_manifest(
         path,
         {
-            "version": 2,
+            "version": _MANIFEST_VERSION,
             "dim": dim,
             "model": [[cid, vec] for cid, vec in model],
             # training coverage (round-12 verdict task 1): what fraction
@@ -197,28 +213,23 @@ def build_ann_index(
             # per-generation cell occupancy (round-14 task 8): the
             # selective-escalation probe reads these driver-side to
             # decide WHICH low-coverage queries escalate
-            "generations": [
-                {"gen": 0, "increment_id": None, "cell_counts": cell_counts}
-            ],
+            "generations": [{"gen": 0, "increment_id": None, **layout}],
             # build-time quantization error — the drift baseline every
             # append's own error is compared against (ann_drift_report)
-            "baseline_msd": _mean_assign_msd(corpus, model),
+            "baseline_msd": baseline,
         },
     )
 
 
 def _write_vectors_gen(
-    vectors: DataFrame, path: str, gen: int, model
+    vectors: DataFrame, path: str, gen: int, model, rows: int
 ) -> dict:
-    """Write one cell-partitioned vector generation (+ its veclist) and
-    return its per-cell row counts (round-14 task 8 — the selective-
-    escalation signal). The counts come from reading the WRITTEN dir
-    back: cell is a partition column and count(*) resolves from parquet
-    footers, so the extra job is metadata-cheap and the recorded counts
-    are exactly what probes will scan."""
-    import os
-
-    spark = vectors.sparkSession
+    """Write one vector generation of ``rows`` vectors, assigned to the
+    model's cells, plus its veclist, and return the generation's manifest
+    fields: ``cell_counts`` (round-14 task 8 — the selective-escalation
+    signal, observed during the write, so the counts are exactly what
+    probes will scan) and the layout fields ``{"g", "ranges"}``."""
+    g = _granularity(rows, VEC_BUCKETS)
     assigned = _assign_cell(
         vectors.select(
             F.col("vec_id").cast("long").alias("vec_id"), "embedding"
@@ -226,43 +237,53 @@ def _write_vectors_gen(
         "embedding",
         model,
     )
-    d = os.path.join(path, "vectors", f"gen={gen}")
-    (
-        assigned.repartition(len(model), F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(d)
-    )
-    _write_veclist_gen(vectors, path, gen)
-    return _read_gen_cell_counts(spark, d)
-
-
-def _read_gen_cell_counts(spark, gen_dir: str) -> dict:
+    cell_counts, ranges = _write_cells(assigned, path, gen, model, g)
     return {
-        str(r["cell"]): int(r["n"])
-        for r in spark.read.option("basePath", gen_dir)
-        .parquet(gen_dir)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
+        "cell_counts": cell_counts,
+        "embedding_type": _embedding_type(assigned),
+        "g": g,
+        "ranges": {
+            "vectors": ranges,
+            "veclist": _write_veclist_gen(vectors, path, gen, g),
+        },
     }
 
 
-def _write_veclist_gen(vectors: DataFrame, path: str, gen: int) -> None:
+def _embedding_type(vectors: DataFrame) -> str:
+    """The embedding column's type, recorded per generation: its vectors
+    are read back with it, so no read infers a schema with a job, and
+    generations appended with another element type (float vs double)
+    each read as written."""
+    return vectors.schema["embedding"].dataType.simpleString()
+
+
+def _write_cells(
+    assigned: DataFrame, path: str, gen: int, model, g: int
+) -> tuple[dict, list[int]]:
+    """The cell-assigned vectors of one generation, bucketed by cell
+    (``len(model)`` buckets; a null embedding's sentinel cell -1 gets its
+    own range), and their per-cell row counts, observed during the
+    write."""
+    cells = [int(cid) for cid, _ in model] + [-1]
+    ranges, got = _write_ranged(
+        assigned.select("vec_id", "embedding", "cell"),
+        path, "vectors", gen, "cell", len(model), g,
+        [F.count_if(F.col("cell") == c).alias(f"cell{c}") for c in cells],
+    )
+    counts = {str(c): int(got.get(f"cell{c}") or 0) for c in cells}
+    return {c: n for c, n in counts.items() if n}, ranges
+
+
+def _write_veclist_gen(vectors: DataFrame, path: str, gen: int, g: int) -> list[int]:
     """Membership rows (vec_id, vb) for one slice — written alongside
     every vector generation (build/append/rebuild/compact), committed by
     the same manifest flip that lists the generation."""
-    import os
-
-    (
+    return _write_ranged(
         vectors.select(F.col("vec_id").cast("long").alias("vec_id"))
         .distinct()
-        .withColumn("vb", _vb("vec_id"))
-        .repartition(VEC_BUCKETS, F.col("vb"))
-        .write.mode("overwrite")
-        .partitionBy("vb")
-        .parquet(os.path.join(path, "veclist", f"gen={gen}"))
-    )
+        .withColumn("vb", _vb("vec_id")),
+        path, "veclist", gen, "vb", VEC_BUCKETS, g,
+    )[0]
 
 
 def append_ann_index(
@@ -302,18 +323,19 @@ def append_ann_index(
     } | set(man.get("compacted_increments", []))
     if increment_id is not None and increment_id in applied:
         return False
-    if increment.limit(1).count() == 0:
-        return False
-    model = [(int(cid), [float(x) for x in vec]) for cid, vec in man["model"]]
+    _, model = _model_of(man)
     model_epoch = int(man.get("model_epoch", 0))
-    gen = _claim_generation(path)  # manifests share the generations shape
-    cell_counts = _write_vectors_gen(increment, path, gen, model)
     # the increment's own quantization error against the PINNED model —
     # one aggregate over the increment (cost tracks increment size),
     # recorded with the generation so ann_drift_report can flag when the
     # data has drifted away from the centroids (recall decays silently
-    # otherwise; the model is never retrained by appends)
-    drift_msd = _mean_assign_msd(increment, model)
+    # otherwise; the model is never retrained by appends). Its row count
+    # is the emptiness gate and sizes the generation's ranges.
+    drift_msd, n = _mean_assign_msd(increment, model)
+    if n == 0:
+        return False
+    gen = _claim_generation(path)  # manifests share the generations shape
+    layout = _write_vectors_gen(increment, path, gen, model, n)
     with _manifest_lock(path):
         cur = _load_manifest(path)
         applied_now = {
@@ -347,7 +369,7 @@ def append_ann_index(
                 "gen": gen,
                 "increment_id": increment_id,
                 "drift_msd": drift_msd,
-                "cell_counts": cell_counts,
+                **layout,
             }
         )
         _write_manifest(path, cur)
@@ -360,29 +382,33 @@ def append_ann_index(
 
 def load_ann_model(path: str) -> tuple[int, list[tuple[int, list[float]]]]:
     """(dim, centroid model) from the index manifest."""
-    man = _load_manifest(path)
+    return _model_of(_load_manifest(path))
+
+
+def _model_of(man: dict) -> tuple[int, list[tuple[int, list[float]]]]:
     return int(man["dim"]), [
         (int(cid), [float(x) for x in vec]) for cid, vec in man["model"]
     ]
 
 
-def _read_vectors(spark, path: str, man: dict) -> DataFrame:
+def _read_vectors(
+    spark, path: str, man: dict, cells: list[int] | None = None
+) -> DataFrame:
     """Union of the committed vector generations (manifest-listed only —
-    crashed appends' orphans are never read). Each slice carries its
-    generation number as ``_gen`` (a literal) so tombstone masking can
-    scope deletes to the generations they covered (round 13 — a vec_id
-    re-appended after its delete lands in a higher generation and
-    serves unmasked)."""
-    import os
-
-    root = os.path.join(path, "vectors")
+    crashed appends' orphans are never read), or with ``cells`` only the
+    cell ranges holding those cells. Each generation is read with the
+    embedding type its entry records, so no read infers a schema with a
+    job, and the union widens mixed element types as schema inference
+    did. Each slice carries its generation number as ``_gen`` (a
+    literal) so tombstone masking can scope deletes to the generations
+    they covered (round 13 — a vec_id re-appended after its delete lands
+    in a higher generation and serves unmasked)."""
     out = None
-    for g in man["generations"]:
-        d = os.path.join(root, f"gen={g['gen']}")
-        part = (
-            spark.read.option("basePath", d)
-            .parquet(d)
-            .withColumn("_gen", F.lit(int(g["gen"])))
+    for ent in man["generations"]:
+        part = _read_artifact(
+            spark, path, "vectors", dict(man, generations=[ent]),
+            f"vec_id bigint, embedding {ent['embedding_type']}, cell int",
+            None if cells is None else ("cell", len(man["model"]), cells),
         )
         out = part if out is None else out.unionByName(part)
     return out
@@ -392,17 +418,12 @@ def _active_vec_tombstones(spark, path: str, man: dict) -> DataFrame | None:
     """(vec_id, max_gen) union of the listed tombstone generations, or
     None — the ANN twin of ``lexindex._active_tombstones``; the frame is
     delete-volume-sized (deletes are rare) so the mask join broadcasts."""
-    import os
-
     out = None
     for t in man.get("tombstones", []):
-        d = os.path.join(path, "tombstones", f"gen={t['gen']}")
-        part = (
-            spark.read.schema("vec_id bigint, vb int")
-            .option("basePath", d)
-            .parquet(d)
-            .select("vec_id", F.lit(int(t["max_gen"])).alias("max_gen"))
-        )
+        part = _read_gen(spark, path, "tombstones", t, "vec_id bigint, vb int")
+        if part is None:
+            continue
+        part = part.select("vec_id", F.lit(int(t["max_gen"])).alias("max_gen"))
         out = part if out is None else out.unionByName(part)
     if out is None:
         return None
@@ -454,16 +475,15 @@ def delete_from_ann_index(
         F.col(ids.columns[0]).cast("long").alias("vec_id")
     ).distinct()
     member = indexed_vec_ids(spark, path, want)
-    if member.limit(1).count() == 0:
+    d_n = member.count()
+    if d_n == 0:
         return False
     gen = _claim_generation(path)
-    (
-        member.withColumn("vb", _vb("vec_id"))
-        .repartition(1, F.col("vb"))
-        .write.mode("overwrite")
-        .partitionBy("vb")
-        .parquet(os.path.join(path, "tombstones", f"gen={gen}"))
-    )
+    granularity = _granularity(d_n, VEC_BUCKETS)
+    ranges = _write_ranged(
+        member.withColumn("vb", _vb("vec_id")),
+        path, "tombstones", gen, "vb", VEC_BUCKETS, granularity,
+    )[0]
     with _manifest_lock(path):
         cur = _load_manifest(path)
         applied_now = {
@@ -492,6 +512,8 @@ def delete_from_ann_index(
                 "gen": gen,
                 "increment_id": increment_id,
                 "max_gen": max(g["gen"] for g in cur["generations"]),
+                "g": granularity,
+                "ranges": {"tombstones": ranges},
             }
         )
         _write_manifest(path, cur)
@@ -511,7 +533,7 @@ def indexed_vec_ids(
 ) -> DataFrame:
     """Which of ``ids`` (a 1-column (vec_id) frame) are already in the
     ANN index — the vector twin of ``lexindex.indexed_doc_ids``, reading
-    only the asked ids' ``vb`` bucket partitions of the veclist (the
+    only the veclist ranges holding the asked ids' ``vb`` buckets (the
     bucket list is a ≤VEC_BUCKETS-value driver-side collect over the
     IDS — bounded gate), never the embedding-carrying vectors/. Probe
     cost tracks |ids| x bucket share, not index size.
@@ -534,7 +556,7 @@ def indexed_vec_ids(
     vbs = [r["vb"] for r in want.select(_vb("vec_id").alias("vb")).distinct().collect()]
     vl = _read_artifact(
         spark, path, "veclist", dict(man, generations=gens), _VECLIST_SCHEMA,
-        ("vb", vbs),
+        ("vb", VEC_BUCKETS, vbs),
     )
     # deleted vectors are not members; the mask is generation-scoped so
     # a re-appended vec_id's new row stays a member (round 13)
@@ -553,7 +575,7 @@ def query_ann_index(
     filter_pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k per query against the stored index: probe list from the
-    manifest model, partition-pruned scan of the probed cells only
+    manifest model, a scan of the ranges holding the probed cells only
     (every committed generation; appended vectors are served the moment
     their manifest commit lands).
 
@@ -592,7 +614,7 @@ def query_ann_index(
     from pyspark.sql import Window
 
     man = _load_manifest(path)
-    dim, model = load_ann_model(path)
+    dim, model = _model_of(man)
     nprobe_eff = _effective_nprobe(man, nprobe, auto_escalate)
     q = queries.select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
@@ -630,11 +652,10 @@ def query_ann_index(
         .select("query_id", "qe", "cell")
     )
     # bounded driver-side gate (<= len(model) values): the scan below
-    # carries a partition filter on exactly the probed cells
+    # reads only the ranges holding the probed cells, by path, and keeps
+    # the cell filter
     probed = [r["cell"] for r in probes.select("cell").distinct().collect()]
-    vec = _read_vectors(spark, path, man)
-    if len(probed) < len(model):
-        vec = vec.filter(F.col("cell").isin(probed))
+    vec = _read_vectors(spark, path, man, probed)
     # tombstone mask (round-13 deletes) — deleted vectors never rank
     vec = _mask_deleted_vecs(vec, _active_vec_tombstones(spark, path, man))
     if filter_ids is not None:
@@ -684,7 +705,7 @@ def compact_ann_index(
     The vectors are already cell-assigned and the model is PINNED, so
     compaction is a pure rewrite — no re-assignment, no training, no
     driver data: one shuffle-by-cell of the unioned generations into a
-    fresh cell-partitioned generation dir. Query-after-compact is
+    fresh cell-bucketed generation dir. Query-after-compact is
     row-identical to query-before (pinned by tests and the
     ``a0g_ann_index_compact`` oracle).
 
@@ -739,27 +760,22 @@ def compact_ann_index(
         if t["gen"] in absorbed_gens and t.get("increment_id") is not None
     }
     gen = _claim_generation(path)
-    vec = _mask_deleted_vecs(_read_vectors(spark, path, fold_man), tomb)
-    _fold_dir = os.path.join(path, "vectors", f"gen={gen}")
-    (
-        vec.select("vec_id", "embedding", "cell")
-        .repartition(len(man["model"]), F.col("cell"))
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(_fold_dir)
+    # the folded generations' recorded occupancy bounds the fold's rows
+    granularity = _granularity(
+        sum(_total_cell_counts(fold_man).values()), VEC_BUCKETS
     )
-    fold_cell_counts = _read_gen_cell_counts(spark, _fold_dir)
+    _, model_t = _model_of(man)
+    vec = _mask_deleted_vecs(_read_vectors(spark, path, fold_man), tomb)
+    fold_cell_counts, vec_ranges = _write_cells(
+        vec, path, gen, model_t, granularity
+    )
     # fold the membership artifact alongside — from the folded slice's
     # own veclists (narrow scan)
     vl = _read_artifact(spark, path, "veclist", fold_man, _VECLIST_SCHEMA)
-    (
-        _mask_deleted_vecs(vl, tomb)
-        .select("vec_id", "vb")
-        .repartition(VEC_BUCKETS, F.col("vb"))
-        .write.mode("overwrite")
-        .partitionBy("vb")
-        .parquet(os.path.join(path, "veclist", f"gen={gen}"))
-    )
+    vl_ranges = _write_ranged(
+        _mask_deleted_vecs(vl, tomb).select("vec_id", "vb"),
+        path, "veclist", gen, "vb", VEC_BUCKETS, granularity,
+    )[0]
     # drift must SURVIVE compaction (round-11 verdict task 3): the folded
     # generation records (a) a fresh overall quantization error of the
     # whole folded population — one extra aggregate over vectors the fold
@@ -769,10 +785,7 @@ def compact_ann_index(
     # are exactly as far from the centroids as before — folding moved
     # files, not data), so ann_drift_report considers both; only a
     # retrain (rebuild_ann_index, fresh baseline) clears the flag.
-    model_t = [
-        (int(cid), [float(x) for x in v]) for cid, v in man["model"]
-    ]
-    fold_msd = _mean_assign_msd(vec.select("vec_id", "embedding"), model_t)
+    fold_msd, _ = _mean_assign_msd(vec.select("vec_id", "embedding"), model_t)
     carried = [
         m
         for g in fold_entries
@@ -813,6 +826,9 @@ def compact_ann_index(
             "increment_id": None,
             "drift_msd": fold_msd,
             "cell_counts": fold_cell_counts,
+            "embedding_type": _embedding_type(vec),
+            "g": granularity,
+            "ranges": {"vectors": vec_ranges, "veclist": vl_ranges},
         }
         if carried:
             entry["carried_max_drift_msd"] = max(carried)
@@ -1121,8 +1137,8 @@ def rebuild_ann_index(
     model = kmeans_centroids(
         vec, dim, k=cells, iters=iters, sample_rate=sample_rate
     )
-    rebuild_cell_counts = _write_vectors_gen(vec, path, gen, model)
-    baseline = _mean_assign_msd(vec, model)
+    baseline, n = _mean_assign_msd(vec, model)
+    layout = _write_vectors_gen(vec, path, gen, model, n)
     applied = [
         g["increment_id"]
         for g in man["generations"]
@@ -1165,13 +1181,7 @@ def rebuild_ann_index(
                 }
             )
             cur["tombstones"] = []
-        cur["generations"] = [
-            {
-                "gen": gen,
-                "increment_id": None,
-                "cell_counts": rebuild_cell_counts,
-            }
-        ]
+        cur["generations"] = [{"gen": gen, "increment_id": None, **layout}]
         _write_manifest(path, cur)
     try:
         os.remove(os.path.join(path, f"{_GENCLAIM_PREFIX}{gen}"))

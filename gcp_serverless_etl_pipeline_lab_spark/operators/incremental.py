@@ -30,10 +30,10 @@ artifacts — the increment never touches base TEXT again, only the
 compact index:
 
 - the exact probe scans one narrow hash column;
-- the near probe reads ONLY the gram-bucket partitions the batch's own
-  grams hash into (static partition pruning from a <=64-value driver
-  list), so a small nightly batch reads a small slice of the postings —
-  per-batch cost tracks BATCH size, not base size;
+- the near probe reads ONLY the gram-bucket ranges holding the buckets
+  the batch's own grams hash into (static pruning from a <=64-value
+  driver list), so a small nightly batch reads a small slice of the
+  postings — per-batch cost tracks BATCH size, not base size;
 - output is bit-identical to the recompute path by construction (same
   shingler, same df-cap rule, sizes from the same full shingle sets) —
   pinned by the ``a0d_incremental_index`` oracle query and
@@ -126,6 +126,14 @@ def near_dups_vs_base(
 
 INDEX_GRAM_BUCKETS = 64
 _MANIFEST = "_MANIFEST.json"
+# the generational layout every builder writes and the only one
+# _load_manifest reads: bucketed artifacts land in per-generation bucket
+# RANGE dirs sized to the generation's rows (see _write_ranged)
+_MANIFEST_VERSION = 3
+# rows one range file of a generation is sized to hold (~1-2 MB of index
+# rows): a nightly delta writes one file per artifact, and a generation
+# of more than 32 x this many rows keeps one dir per bucket
+RANGE_ROWS = 1 << 16
 
 # Active probe-cache registry (see probe_cache_scope). A contextvar, not a
 # module global, so concurrent probe scopes (e.g. two streaming queries in
@@ -183,9 +191,8 @@ def _register_probe_cache(frame: DataFrame) -> None:
         reg.append(frame)
 
 
-# hashes carry the doc_id next to the content hash so an id-only
-# takedown can resolve the k it must stop matching (files written before
-# round 14 lack the column; delete_from_index refuses them)
+# hashes carry the doc_id next to the content hash, so a takedown masks
+# a deleted doc's hash rows by id like its grams and sizes
 _HASHES_SCHEMA = "k string, doc_id bigint"
 _GRAMS_SCHEMA = "base_id bigint, g string, gb int"
 _SIZES_SCHEMA = "base_id bigint, sz_b int"
@@ -197,6 +204,71 @@ def _gb(col: str):
     return F.pmod(F.xxhash64(col), F.lit(INDEX_GRAM_BUCKETS)).cast("int")
 
 
+def _granularity(rows: int, buckets: int) -> int:
+    """The number of bucket ranges a generation of ``rows`` rows is
+    split into: the smallest power of two that keeps each range at or
+    under ``RANGE_ROWS`` rows, capped at ``buckets`` (one range per
+    bucket, the layout of a large build)."""
+    g = 1
+    while g < buckets and g * RANGE_ROWS < rows:
+        g *= 2
+    return min(g, buckets)
+
+
+def _observed(obs) -> dict:
+    """``obs``'s metrics, or {} when no row reached the observed node:
+    adaptive execution drops an empty stage together with its metrics
+    node, which leaves an empty metrics row ``Observation.get`` cannot
+    convert."""
+    return obs.get if obs._jo.getRow().length() else {}
+
+
+def _write_ranged(
+    df: DataFrame,
+    path: str,
+    name: str,
+    gen: int,
+    col: str,
+    buckets: int,
+    g: int,
+    metrics=(),
+) -> tuple[list[int], dict]:
+    """Write one generation of a bucketed artifact under
+    ``<path>/<name>/gen=<gen>``: each row lands in range dir
+    ``r = floor(<col> * g / buckets)`` (``g`` capped at ``buckets``),
+    one file per non-empty range, rows sorted by ``col`` so parquet's
+    row-group statistics prune a bucket filter inside the file. At
+    ``g = buckets`` every bucket has its own dir.
+
+    Returns the non-empty ranges, which the manifest entry records so
+    readers build their scan paths without listing, and the values of
+    the extra aggregate ``metrics``; both are observed during the write
+    and cost no job of their own."""
+    import os
+
+    from pyspark.sql import Observation
+
+    g = min(g, buckets)
+    obs = Observation()
+    (
+        df.withColumn("r", F.floor(F.col(col) * g / buckets).cast("int"))
+        .observe(obs, F.collect_set("r").alias("_ranges"), *metrics)
+        .repartition(g, "r")
+        .sortWithinPartitions("r", col)
+        .write.mode("overwrite")
+        .partitionBy("r")
+        .parquet(os.path.join(path, name, f"gen={gen}"))
+    )
+    got = _observed(obs)
+    return sorted(got.pop("_ranges", [])), got
+
+
+def _write_one_file(df: DataFrame, d: str) -> None:
+    """An unbucketed artifact generation as one file (a shuffle into one
+    task, so the frame's own stages keep their parallelism)."""
+    df.repartition(1).write.mode("overwrite").parquet(d)
+
+
 def build_base_index(
     base: DataFrame,
     path: str,
@@ -204,30 +276,38 @@ def build_base_index(
     n: int = 3,
 ) -> None:
     """Shingle and sign ``base`` ONCE; persist the probe artifacts under
-    ``path`` as GENERATION 0 of an appendable index (v2 layout —
+    ``path`` as GENERATION 0 of an appendable index (version-3 layout —
     ``append_to_index`` adds later generations without touching these):
 
-    - ``hashes/gen=0``  — md5(text) of every base doc (exact-dup probe);
-    - ``grams/gen=0``   — (base_id, g) postings, df-capped at build time
-      with the same rule as ``near_dups_vs_base`` and hive-partitioned by
-      ``gb = pmod(xxhash64(g), INDEX_GRAM_BUCKETS)`` so probes prune to
-      the buckets their own grams occupy;
+    - ``hashes/gen=0``  — (md5(text), doc_id) of every base doc (exact-dup
+      probe), one file;
+    - ``grams/gen=0``   — (base_id, g, gb) postings, df-capped at build
+      time with the same rule as ``near_dups_vs_base``, where ``gb =
+      pmod(xxhash64(g), INDEX_GRAM_BUCKETS)``. Rows land in gram-bucket
+      RANGE dirs ``r=<gb * g_gen // INDEX_GRAM_BUCKETS>``, one file per
+      non-empty range sorted by ``gb``; the generation's granularity
+      ``g_gen`` (a power of two up to INDEX_GRAM_BUCKETS) is sized to its
+      shingle count (``_granularity``), so a nightly append writes one
+      file while a large build keeps one dir per bucket. The manifest
+      entry records ``g`` and the non-empty ranges, so probes read only
+      the ranges their own grams' buckets fall in, by path, and keep the
+      ``gb IN (...)`` row filter;
     - ``sizes/gen=0``   — full (uncapped) shingle-set size per base doc,
-      the union-size denominator;
+      the union-size denominator, one file;
     - ``gramdf/gen=0``  — TRUE document frequency of every gram,
-      including over-cap grams (gb-partitioned) — what lets an append
-      decide whether old+new df crosses the cap without rescanning base
-      text;
+      including over-cap grams (gb-ranged like the postings) — what lets
+      an append decide whether old+new df crosses the cap without
+      rescanning base text;
     - ``capped/gen=0``  — grams whose cumulative df exceeds ``max_df``
       (small by construction: at most total_occurrences/max_df entries,
-      the same bound as cap_document_frequency's hot list). Probes
-      anti-join it; at build time it is redundant (those postings were
-      never written) but appends extend it when a gram CROSSES the cap,
-      excluding the physically-present older postings.
+      the same bound as cap_document_frequency's hot list), one file.
+      Probes anti-join it; at build time it is redundant (those postings
+      were never written) but appends extend it when a gram CROSSES the
+      cap, excluding the physically-present older postings.
 
     ``max_df``/``n`` land in ``_MANIFEST.json`` so probes and appends
     replay the exact build contract; at 100 TB raise INDEX_GRAM_BUCKETS
-    and let each bucket hold many files — the partition count, not the
+    and let each bucket hold many files — the bucket count, not the
     file count, is the pruning unit.
 
     The shingle frame is persisted (MEMORY_AND_DISK) across its
@@ -251,7 +331,7 @@ def build_base_index(
             grams = grams.join(F.broadcast(hot), "g", "left_anti")
         else:
             hot = df_tab.filter(F.lit(False)).select("g")
-        _write_generation(
+        layout = _write_generation(
             path,
             0,
             hashes=base.select(
@@ -269,11 +349,11 @@ def build_base_index(
         _write_manifest(
             path,
             {
-                "version": 2,
+                "version": _MANIFEST_VERSION,
                 "max_df": max_df,
                 "ngram": n,
                 "gram_buckets": INDEX_GRAM_BUCKETS,
-                "generations": [{"gen": 0, "increment_id": None}],
+                "generations": [{"gen": 0, "increment_id": None, **layout}],
             },
         )
         # manifest replace is the commit point (see _write_manifest); a
@@ -291,34 +371,35 @@ def _write_generation(
     sizes: DataFrame,
     gramdf: DataFrame,
     capped: DataFrame,
-) -> None:
-    """Write one immutable generation of every artifact. mode=overwrite
-    so a CRASHED prior attempt at the same generation number is replaced
-    wholesale on retry (generations become visible only via the manifest
-    commit, so a half-written gen dir is never read)."""
+) -> dict:
+    """Write one immutable generation of every artifact and return its
+    layout fields for the manifest entry, ``{"g", "ranges"}``.
+    mode=overwrite so a CRASHED prior attempt at the same generation
+    number is replaced wholesale on retry (generations become visible
+    only via the manifest commit, so a half-written gen dir is never
+    read).
+
+    hashes, sizes and capped are one file each. The sizes write goes
+    first and observes the generation's shingle total, an upper bound on
+    its postings and gramdf rows, which sizes the gram-bucket ranges of
+    both (``_write_ranged``) without a job of its own."""
     import os
 
-    hashes.write.mode("overwrite").parquet(
-        os.path.join(path, "hashes", f"gen={gen}")
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    _write_one_file(
+        sizes.observe(obs, F.sum("sz_b").alias("n")),
+        os.path.join(path, "sizes", f"gen={gen}"),
     )
-    (
-        grams.repartition(INDEX_GRAM_BUCKETS, F.col("gb"))
-        .write.mode("overwrite")
-        .partitionBy("gb")
-        .parquet(os.path.join(path, "grams", f"gen={gen}"))
-    )
-    sizes.write.mode("overwrite").parquet(
-        os.path.join(path, "sizes", f"gen={gen}")
-    )
-    (
-        gramdf.repartition(INDEX_GRAM_BUCKETS, F.col("gb"))
-        .write.mode("overwrite")
-        .partitionBy("gb")
-        .parquet(os.path.join(path, "gramdf", f"gen={gen}"))
-    )
-    capped.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "capped", f"gen={gen}")
-    )
+    g = _granularity(int(_observed(obs).get("n") or 0), INDEX_GRAM_BUCKETS)
+    _write_one_file(hashes, os.path.join(path, "hashes", f"gen={gen}"))
+    ranges = {
+        name: _write_ranged(df, path, name, gen, "gb", INDEX_GRAM_BUCKETS, g)[0]
+        for name, df in (("grams", grams), ("gramdf", gramdf))
+    }
+    _write_one_file(capped, os.path.join(path, "capped", f"gen={gen}"))
+    return {"g": g, "ranges": ranges}
 
 
 def _write_manifest(path: str, man: dict) -> None:
@@ -430,21 +511,60 @@ def _split_fold_slice(
 def _load_manifest(path: str) -> dict:
     """The manifest of the text, lexical or ANN index at ``path``. Every
     reader and writer of the three families loads it here, so this is
-    the one layout check: only the version-2 generational layout is
-    read, and anything else (the round-8 flat layout has no version)
-    raises instead of taking a per-read upgrade path."""
+    the one layout check: only the version-3 generational layout is
+    read. Anything else raises instead of taking a per-read upgrade
+    path: the round-8 flat layout (no version) and the version-2 layout,
+    whose bucketed artifacts sit in one dir per bucket in every
+    generation and whose manifest records no ranges to read them by."""
     import json
     import os
 
     with open(os.path.join(path, _MANIFEST)) as fh:
         man = json.load(fh)
-    if "version" not in man or man["version"] != 2:
+    if man.get("version") != _MANIFEST_VERSION:
         raise ValueError(
-            f"index at {path} uses the pre-append flat layout or an unknown "
-            "manifest version; rebuild it with build_base_index, "
-            "build_lexical_index or build_ann_index"
+            f"index at {path} uses the pre-append flat layout, the "
+            "version-2 bucket-dir layout or an unknown manifest version; "
+            "rebuild it with build_base_index, build_lexical_index or "
+            "build_ann_index"
         )
     return man
+
+
+def _read_gen(
+    spark,
+    path: str,
+    name: str,
+    entry: dict,
+    schema: str,
+    buckets: tuple[str, int, list[int]] | None = None,
+) -> DataFrame | None:
+    """One generation (or tombstone) entry's slice of an artifact, or
+    None when none of its rows can match. A bucketed artifact (one the
+    entry lists under ``ranges``) is read from the range dirs the entry
+    records, by path: with ``buckets=(col, n_buckets, values)`` only the
+    ranges those buckets fall in at the entry's granularity ``g``, and
+    the scan carries them as its partition filter. An unbucketed
+    artifact is its generation dir, one file."""
+    import os
+
+    d = os.path.join(path, name, f"gen={entry['gen']}")
+    ranges = entry.get("ranges", {}).get(name)
+    if ranges is None:
+        return spark.read.schema(schema).option("basePath", d).parquet(d)
+    if buckets is not None:
+        _, nb, vals = buckets
+        g = min(int(entry["g"]), nb)
+        ranges = sorted({b * g // nb for b in vals} & set(ranges))
+    if not ranges:
+        return None
+    return (
+        spark.read.schema(f"{schema}, r int")
+        .option("basePath", d)
+        .parquet(*[os.path.join(d, f"r={r}") for r in ranges])
+        .filter(F.col("r").isin(ranges))
+        .drop("r")
+    )
 
 
 def _read_artifact(
@@ -453,74 +573,43 @@ def _read_artifact(
     name: str,
     man: dict,
     schema: str,
-    buckets: tuple[str, list[int]] | None = None,
+    buckets: tuple[str, int, list[int]] | None = None,
 ) -> DataFrame:
     """Union of the artifact's COMMITTED generations (manifest-listed
     only — an orphaned gen dir from a crashed append is never read).
     The explicit schema makes an EMPTY generation (e.g. an all-capped
-    increment's postings) read as zero rows instead of failing schema
-    inference; partition columns (gb) resolve from dir names as usual.
-    Each slice carries its generation number as ``_gen`` (a literal —
-    free) so tombstone masking can scope a delete to the generations it
-    covered (round 14): writers that persist an artifact back must
-    select it away.
+    increment's postings) read as zero rows and spares Spark a
+    schema-inference job. Each slice carries its generation number as
+    ``_gen`` (a literal — free) so tombstone masking can scope a delete
+    to the generations it covered (round 14): writers that persist an
+    artifact back must select it away.
 
-    ``buckets=(col, values)`` reads only those hive-partition dirs of
-    each generation: one Hadoop ``FileSystem`` glob per generation finds
-    the ones that exist, ``basePath`` stays at the generation dir, and a
-    generation holding none of them is skipped (all skipped: an empty
-    frame). Reading a whole generation instead makes Spark list its
-    bucket dirs (64, above the 32-path parallel-discovery threshold) with
-    a job per generation, even though the ``col IN (values)`` filter,
-    which stays on the result, prunes most of them afterwards.
-
-    A listed generation with no dir for the artifact at all was written
-    before the artifact existed (the pre-round-12 doclist, the
-    pre-round-13 veclist): that raises, bucketed or not, rather than
-    reading the generation as empty."""
-    import os
-    import re
-
+    Scan paths come from the manifest, never from a glob or a listing
+    of bucket dirs (``_read_gen``): a bucketed artifact's generation is
+    read from the bucket-range dirs its entry records, and
+    ``buckets=(col, n_buckets, values)`` narrows each generation to the
+    ranges those buckets fall in at its own granularity, skipping a
+    generation that holds none of them (all skipped: an empty frame).
+    The ``col IN (values)`` row filter stays on the result, so a range
+    holding other buckets too answers exactly as a per-bucket dir did.
+    A nightly-sized generation is one range dir, so no read of one
+    starts Spark's parallel listing job (over 32 paths); only a large
+    generation read whole still lists its up to 64 range dirs with
+    one."""
     from ..functions.local_frames import literal_frame
 
-    gens = [
-        (int(g["gen"]), os.path.join(path, name, f"gen={g['gen']}"))
-        for g in man["generations"]
-    ]
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    conf = spark._jsc.hadoopConfiguration()
     out = None
-    for gen, d in gens:
-        fs = hpath(d).getFileSystem(conf)
-        dirs = [d]
-        if buckets is not None:
-            col, vals = buckets
-            # escape glob metacharacters of the index path itself
-            pat = re.sub(r"([\\\[\]{}*?])", r"\\\1", d) + (
-                f"/{col}={{{','.join(str(v) for v in sorted(set(vals)))}}}"
-            )
-            hits = fs.globStatus(hpath(pat)) if vals else None
-            dirs = [os.path.join(d, h.getPath().getName()) for h in hits or []]
-        if (buckets is None or not dirs) and not fs.exists(hpath(d)):
-            raise ValueError(
-                f"index at {path} lists generation {gen} but has no "
-                f"{name}/gen={gen} dir: it was written before the {name} "
-                "artifact existed; rebuild the index"
-            )
-        if not dirs:
+    for ent in man["generations"]:
+        part = _read_gen(spark, path, name, ent, schema, buckets)
+        if part is None:
             continue
-        part = (
-            spark.read.schema(schema)
-            .option("basePath", d)
-            .parquet(*dirs)
-            .withColumn("_gen", F.lit(gen))
-        )
+        part = part.withColumn("_gen", F.lit(int(ent["gen"])))
         out = part if out is None else out.unionByName(part)
-    if buckets is None:
-        return out
     if out is None:
         out = literal_frame(spark, f"{schema}, _gen int", [])
-    return out.filter(F.col(buckets[0]).isin(list(buckets[1])))
+    if buckets is None:
+        return out
+    return out.filter(F.col(buckets[0]).isin(list(buckets[2])))
 
 
 def _active_text_tombstones(spark, path: str, man: dict) -> DataFrame | None:
@@ -529,16 +618,10 @@ def _active_text_tombstones(spark, path: str, man: dict) -> DataFrame | None:
     ``lexindex._active_tombstones``. The frame is delete-volume-sized
     (deletes are rare events), so every mask join rides a small frame
     AQE broadcasts."""
-    import os
-
     out = None
     for t in man.get("tombstones", []):
-        d = os.path.join(path, "tombstones", f"gen={t['gen']}")
-        part = (
-            spark.read.schema("doc_id bigint")
-            .option("basePath", d)
-            .parquet(d)
-            .select("doc_id", F.lit(int(t["max_gen"])).alias("max_gen"))
+        part = _read_gen(spark, path, "tombstones", t, "doc_id bigint").select(
+            "doc_id", F.lit(int(t["max_gen"])).alias("max_gen")
         )
         out = part if out is None else out.unionByName(part)
     return out
@@ -624,7 +707,7 @@ def near_dups_vs_index(
 ) -> DataFrame:
     """``near_dups_vs_base`` against the stored postings: the batch is
     shingled fresh; the base side is READ, never recomputed, and only the
-    gram-bucket partitions the batch's grams hash into are scanned (the
+    gram-bucket ranges holding the batch's grams are scanned (the
     <=``gram_buckets``-value bucket list is collected driver-side — a
     bounded gate, same class as the 1-row gates). The df-cap is enforced
     physically at build/append time plus the capped-grams anti-join (a
@@ -670,9 +753,9 @@ def near_dups_vs_index(
         .distinct()
         .collect()
     ]
-    g_base = _read_artifact(spark, path, "grams", man, _GRAMS_SCHEMA)
-    if len(gbs) < nb:
-        g_base = g_base.filter(F.col("gb").isin(gbs))
+    g_base = _read_artifact(
+        spark, path, "grams", man, _GRAMS_SCHEMA, ("gb", nb, gbs)
+    )
     # mask deleted docs' postings and sizes (round 14) — a taken-down
     # doc must stop near-matching future ingests; the mask is
     # generation-scoped so a re-appended doc's new rows stay live
@@ -791,9 +874,9 @@ def append_to_index(
     try:
         nb = int(man["gram_buckets"])
         gbs = [r["gb"] for r in inc_df.select("gb").distinct().collect()]
-        old_df = _read_artifact(spark, path, "gramdf", man, _GRAMDF_SCHEMA)
-        if len(gbs) < nb:
-            old_df = old_df.filter(F.col("gb").isin(gbs))
+        old_df = _read_artifact(
+            spark, path, "gramdf", man, _GRAMDF_SCHEMA, ("gb", nb, gbs)
+        )
         # semi-join against the increment's gram set BEFORE the sum:
         # within the pruned buckets only the grams this increment
         # actually touches need their cumulative df — the aggregate's
@@ -835,7 +918,7 @@ def append_to_index(
             else:
                 newly_capped = merged.filter(F.lit(False)).select("g")
                 post_inc = inc_grams
-            _write_generation(
+            layout = _write_generation(
                 path,
                 gen,
                 hashes=increment.select(
@@ -878,7 +961,7 @@ def append_to_index(
                         "claim was lost mid-append — retry the append"
                     )
                 cur["generations"].append(
-                    {"gen": gen, "increment_id": increment_id}
+                    {"gen": gen, "increment_id": increment_id, **layout}
                 )
                 _write_manifest(path, cur)
             try:
@@ -909,14 +992,12 @@ def delete_from_index(
 
     - ``docs`` is a frame whose ``doc_id`` column names the docs to
       delete (other columns are ignored). The asked ids resolve against
-      current membership (live ``sizes`` rows); the content hash each
-      member must stop matching comes from the stored ``hashes`` rows
-      of the same doc_id. Hash rows without a doc_id (generations
-      written before round 14) cannot be resolved by id, so a delete
-      that meets one raises: rebuild such an index.
-    - one ``tombstones/gen=N`` artifact (doc_id, k) plus an atomic
-      manifest append commits the delete; every probe masks covered rows
-      by (doc_id, generation).
+      current membership (live ``sizes`` rows); every probe masks the
+      hashes, postings and sizes of a deleted doc by its doc_id, so the
+      delete never reads the hashes.
+    - one ``tombstones/gen=N`` file of (doc_id) plus an atomic manifest
+      append commits the delete; every probe masks covered rows by
+      (doc_id, generation).
     - generation-scoped ``max_gen`` cover: re-appending a deleted doc_id
       later works — the new generation is above the cover and matches
       normally. ``increment_id`` replays are committed no-ops (False);
@@ -931,14 +1012,15 @@ def delete_from_index(
       performance heuristic erring conservative, never a membership
       error.
 
-    Cost: delete-sized membership/hash-resolution probes, one
-    checkpoint of the tombstone rows with one aggregate over it (member
-    count and missing-hash guard together), and one delete-sized write
-    — never an artifact rewrite. Concurrent appends are fenced exactly
+    Cost: one delete-sized membership probe, one checkpoint of the
+    member ids that observes their count, and one delete-sized write —
+    never an artifact rewrite. Concurrent appends are fenced exactly
     as in the lexical/ANN deletes (round-14 advice): an append
     committing between membership resolution and the manifest commit
     aborts the delete loudly for a re-run."""
     import os
+
+    from pyspark.sql import Observation
 
     man = _load_manifest(path)
     applied = {
@@ -957,35 +1039,14 @@ def delete_from_index(
         .distinct()
         .join(want, "doc_id", "left_semi")
     )
-    stored_k = (
-        _mask_deleted_ids(
-            _read_artifact(spark, path, "hashes", man, _HASHES_SCHEMA),
-            tomb_now,
-            "doc_id",
-        )
-        .select("doc_id", "k")
-        .join(member, "doc_id", "left_semi")
-        .distinct()
-    )
-    tomb_rows = member.join(stored_k, "doc_id", "left").localCheckpoint(
+    obs = Observation()
+    tomb_rows = member.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
         eager=True
     )
-    row = tomb_rows.agg(
-        F.countDistinct("doc_id").alias("n"),
-        F.count(F.when(F.col("k").isNull(), 1)).alias("no_hash"),
-    ).collect()[0]
-    if row["n"] == 0:
+    if not _observed(obs).get("n"):
         return False
-    if row["no_hash"]:
-        raise ValueError(
-            f"index at {path} holds hash rows without a doc_id (written "
-            "before round 14), so the delete cannot resolve their content "
-            "hash; rebuild the index with build_base_index"
-        )
     gen = _claim_generation(path)
-    tomb_rows.select("doc_id", "k").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "tombstones", f"gen={gen}"))
+    _write_one_file(tomb_rows, os.path.join(path, "tombstones", f"gen={gen}"))
     with _manifest_lock(path):
         cur = _load_manifest(path)
         applied_now = {
@@ -1169,7 +1230,7 @@ def compact_index(
             spark, path, "capped", man, _CAPPED_SCHEMA
         ).select("g")
         grams = grams.join(global_capped, "g", "left_anti")
-    _write_generation(
+    layout = _write_generation(
         path,
         gen,
         hashes=hashes,
@@ -1219,7 +1280,7 @@ def compact_index(
                 if t["gen"] not in absorbed_gens
             ]
         cur["generations"] = keep_entries + [
-            {"gen": gen, "increment_id": None}
+            {"gen": gen, "increment_id": None, **layout}
         ]
         _write_manifest(path, cur)
     try:

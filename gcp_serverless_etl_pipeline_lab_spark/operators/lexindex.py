@@ -11,14 +11,23 @@ discipline as the sibling indexes — immutable ``gen=N`` dirs, atomic
 manifest replace as the one commit point, crash orphans invisible,
 ``increment_id`` replays committed no-ops, shared ``vacuum_index``):
 
+Every bucketed artifact shares one layout (``incremental._write_ranged``):
+a generation's rows land in bucket RANGE dirs ``r=<bucket * g //
+buckets>``, one file per non-empty range with rows sorted by bucket,
+where the generation's granularity ``g`` (a power of two up to the
+bucket count) is sized to its token count. A nightly delta is one file
+per artifact; a large build keeps ``g = 64``, one dir per bucket. The
+generation's manifest entry records ``g`` and the non-empty ranges of
+each artifact.
+
 - ``postings/gen=N`` — one row per (term, doc) pair: ``(term, doc_id,
-  tf, dl)``, hive-partitioned by ``tb = pmod(xxhash64(term),
+  tf, dl, tb)``, bucketed by ``tb = pmod(xxhash64(term),
   TERM_BUCKETS)``. The document length ``dl`` is DENORMALIZED onto
   every posting (one extra int) so the probe never touches a
   corpus-sized doc-length table — everything BM25 needs for a matched
-  doc rides in the pruned partitions.
-- ``doclist/gen=N`` — one row per indexed document: ``(doc_id, dl)``,
-  hive-partitioned by ``db = pmod(doc_id, DOC_BUCKETS)`` (round 12).
+  doc rides in the pruned ranges.
+- ``doclist/gen=N`` — one row per indexed document: ``(doc_id, dl,
+  db)``, bucketed by ``db = pmod(doc_id, DOC_BUCKETS)`` (round 12).
   The membership artifact: "are these doc_ids already indexed?" probes
   read only the asked ids' buckets — never the postings, whose doc_id
   column is |postings|-sized and term-bucketed (every bucket would
@@ -26,8 +35,7 @@ manifest replace as the one commit point, crash orphans invisible,
   hybrid-consistency check (streaming/nightly.run_nightly); includes
   tokenless docs (zero postings but counted in ``n_docs``). The doc
   length ``dl`` (round 13) lets a DELETE subtract exact lengths without
-  reading postings. An index whose generations lack the doclist, or
-  whose doclist rows lack ``dl``, is refused (rebuild it).
+  reading postings.
 - ``tombstones/gen=N`` (round 13) — one row per DELETED doc, same
   doc-bucket layout; each tombstone's manifest entry records the
   generations it covers (``max_gen``), so probes mask dead rows with a
@@ -37,24 +45,28 @@ manifest replace as the one commit point, crash orphans invisible,
   absorbed ones. Takedown cost = one bounded membership probe + one
   delete-sized write — never a postings rewrite.
 - ``_MANIFEST.json`` — per-generation corpus stats ``{n_docs, sum_dl}``
-  (tiny driver-side integers): N and avgdl come from summing manifest
-  entries, zero scan. ``df`` per term is counted over the PRUNED
-  postings at probe time — BM25 only ever needs df for the query's own
-  terms, so a separate df artifact would buy nothing.
+  (tiny driver-side integers) beside the layout fields: N and avgdl
+  come from summing manifest entries, zero scan. ``df`` per term is
+  counted over the PRUNED postings at probe time — BM25 only ever needs
+  df for the query's own terms, so a separate df artifact would buy
+  nothing.
 
-Probe cost at 100 TB: |query terms| bucket partitions of the postings
-(≤ terms/TERM_BUCKETS of the index, and a targeted probe's terms have
+Probe cost at 100 TB: |query terms| bucket ranges of the postings per
+generation (at ``g = 64`` exactly the query's buckets, ≤
+terms/TERM_BUCKETS of the index, and a targeted probe's terms have
 bounded df), one window + one aggregate over matched rows, TakeOrdered
 for top-k. No corpus scan, no doc-length join, no full-vocabulary
 anything. Building a probe fires no Spark job: the bucket list is
 computed on the driver over an inline VALUES relation
-(``_term_buckets``), and only those bucket dirs are listed — one glob
-per generation (``incremental._read_artifact``), where reading a whole
-generation dir would make Spark list its 64 bucket dirs with a
-parallel-discovery job. Score parity with ``retrieval.bm25_topk`` is EXACT (same
-integer tf/df/dl, same manifest-exact avgdl = sum/count, same
-round-4 discipline) — pinned by tests/test_lexindex.py and the
-``a0h_hybrid_from_index`` oracle.
+(``_term_buckets``), and each generation's scan paths are the range
+dirs its manifest entry records for those buckets
+(``incremental._read_artifact``) — no glob, no listing job; the
+``tb IN (...)`` row filter then drops the other buckets of a shared
+range, inside the file through parquet's row-group statistics. Score
+parity with ``retrieval.bm25_topk`` is EXACT (same integer tf/df/dl,
+same manifest-exact avgdl = sum/count, same round-4 discipline) —
+pinned by tests/test_lexindex.py and the ``a0h_hybrid_from_index``
+oracle.
 
 Tokenization contract: whitespace split, empty tokens dropped from the
 postings but COUNTED in ``dl`` (``size(split(text, ' '))``) — exactly
@@ -68,11 +80,15 @@ from pyspark.sql import functions as F
 
 from ..functions.local_frames import literal_frame
 from .incremental import (
+    _MANIFEST_VERSION,
     _claim_generation,
+    _granularity,
     _load_manifest,
     _manifest_lock,
     _read_artifact,
+    _read_gen,
     _write_manifest,
+    _write_ranged,
 )
 
 TERM_BUCKETS = 64
@@ -89,8 +105,7 @@ _POSTINGS_SCHEMA = "term string, doc_id bigint, tf bigint, dl int, tb int"
 _POSITIONS_SCHEMA = "term string, doc_id bigint, positions array<int>, tb int"
 # the doclist carries the doc length so DELETES can subtract exact
 # (n_docs, sum_dl) even for tokenless docs (no postings to read dl
-# from); doclist files written before round 13 lack dl, which the
-# delete refuses
+# from)
 _DOCLIST_SCHEMA = "doc_id bigint, dl int, db int"
 
 
@@ -154,16 +169,13 @@ def _positions_of(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def _write_positions_gen(positions: DataFrame, path: str, gen: int) -> None:
-    import os
-
-    (
-        positions.select("term", "doc_id", "positions", "tb")
-        .repartition(TERM_BUCKETS, F.col("tb"))
-        .write.mode("overwrite")
-        .partitionBy("tb")
-        .parquet(os.path.join(path, "positions", f"gen={gen}"))
-    )
+def _write_positions_gen(
+    positions: DataFrame, path: str, gen: int, g: int
+) -> list[int]:
+    return _write_ranged(
+        positions.select("term", "doc_id", "positions", "tb"),
+        path, "positions", gen, "tb", TERM_BUCKETS, g,
+    )[0]
 
 
 def _corpus_stats(docs: DataFrame, text_col: str) -> tuple[int, int]:
@@ -176,30 +188,32 @@ def _corpus_stats(docs: DataFrame, text_col: str) -> tuple[int, int]:
     return int(row["n"]), int(row["s"] or 0)
 
 
-def _write_postings_gen(postings: DataFrame, path: str, gen: int) -> None:
-    import os
-
-    (
-        postings.select("term", "doc_id", "tf", "dl", "tb")
-        .repartition(TERM_BUCKETS, F.col("tb"))
-        .write.mode("overwrite")
-        .partitionBy("tb")
-        .parquet(os.path.join(path, "postings", f"gen={gen}"))
-    )
+def _write_postings_gen(
+    postings: DataFrame, path: str, gen: int, g: int
+) -> list[int]:
+    return _write_ranged(
+        postings.select("term", "doc_id", "tf", "dl", "tb"),
+        path, "postings", gen, "tb", TERM_BUCKETS, g,
+    )[0]
 
 
 def _write_doclist_gen(
-    docs: DataFrame, path: str, gen: int, id_col: str, text_col: str
-) -> None:
+    doclist: DataFrame, path: str, gen: int, g: int
+) -> list[int]:
+    return _write_ranged(
+        doclist.select("doc_id", "dl", "db"), path, "doclist", gen, "db",
+        DOC_BUCKETS, g,
+    )[0]
+
+
+def _doclist_of(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Membership rows (doc_id, dl, db) for one corpus slice — EVERY doc
     of the slice (tokenless ones included: they carry no postings but
     are in ``n_docs``, and the membership question is about documents,
     not terms). ``dl`` uses the same accounting as the postings (empty
     tokens counted), so a later DELETE can subtract the doc's exact
     length from ``sum_dl`` without touching the postings."""
-    import os
-
-    (
+    return (
         docs.select(
             F.col(id_col).cast("long").alias("doc_id"),
             F.size(F.split(F.col(text_col), " ", -1)).cast("int").alias("dl"),
@@ -207,11 +221,36 @@ def _write_doclist_gen(
         .groupBy("doc_id")
         .agg(F.max("dl").alias("dl"))
         .withColumn("db", _db("doc_id"))
-        .repartition(DOC_BUCKETS, F.col("db"))
-        .write.mode("overwrite")
-        .partitionBy("db")
-        .parquet(os.path.join(path, "doclist", f"gen={gen}"))
     )
+
+
+def _write_slice(
+    docs: DataFrame,
+    path: str,
+    gen: int,
+    id_col: str,
+    text_col: str,
+    positions: bool,
+    sum_dl: int,
+) -> dict:
+    """Write the postings, doclist and (``positions``) positions of one
+    corpus slice as generation ``gen`` and return the entry's layout
+    fields ``{"g", "ranges"}``. The granularity comes from the slice's
+    token count, an upper bound on its postings rows."""
+    g = _granularity(sum_dl, TERM_BUCKETS)
+    ranges = {
+        "postings": _write_postings_gen(
+            _postings_of(docs, id_col, text_col), path, gen, g
+        ),
+        "doclist": _write_doclist_gen(
+            _doclist_of(docs, id_col, text_col), path, gen, g
+        ),
+    }
+    if positions:
+        ranges["positions"] = _write_positions_gen(
+            _positions_of(docs, id_col, text_col), path, gen, g
+        )
+    return {"g": g, "ranges": ranges}
 
 
 def build_lexical_index(
@@ -230,17 +269,14 @@ def build_lexical_index(
     (``phrase_topk_from_index``) verify adjacency against. Opt-in
     because it is token-count-sized (the postings are distinct-(term,
     doc)-sized); once set, every append and fold maintains it."""
-    _write_postings_gen(_postings_of(docs, id_col, text_col), path, 0)
-    _write_doclist_gen(docs, path, 0, id_col, text_col)
-    if positions:
-        _write_positions_gen(_positions_of(docs, id_col, text_col), path, 0)
     n_docs, sum_dl = _corpus_stats(docs, text_col)
+    layout = _write_slice(docs, path, 0, id_col, text_col, positions, sum_dl)
     _write_manifest(
         path,
         {
-            # version 2 = the shared generational layout contract, the
-            # only layout incremental._load_manifest reads
-            "version": 2,
+            # the shared generational layout contract, the only layout
+            # incremental._load_manifest reads
+            "version": _MANIFEST_VERSION,
             "term_buckets": TERM_BUCKETS,
             "positions": bool(positions),
             "generations": [
@@ -249,6 +285,7 @@ def build_lexical_index(
                     "increment_id": None,
                     "n_docs": n_docs,
                     "sum_dl": sum_dl,
+                    **layout,
                 }
             ],
         },
@@ -291,7 +328,10 @@ def append_lexical_index(
     } | set(man.get("compacted_increments", []))
     if increment_id is not None and increment_id in applied:
         return False
-    if increment.limit(1).count() == 0:
+    # the stats aggregate doubles as the emptiness gate and sizes the
+    # generation's bucket ranges
+    n_docs, sum_dl = _corpus_stats(increment, text_col)
+    if n_docs == 0:
         return False
     if assert_new_doc_ids:
         dup = indexed_doc_ids(spark, path, increment.select(
@@ -306,13 +346,10 @@ def append_lexical_index(
                 "(indexed_doc_ids gives the overlap)"
             )
     gen = _claim_generation(path)
-    _write_postings_gen(_postings_of(increment, id_col, text_col), path, gen)
-    _write_doclist_gen(increment, path, gen, id_col, text_col)
-    if man.get("positions"):
-        _write_positions_gen(
-            _positions_of(increment, id_col, text_col), path, gen
-        )
-    n_docs, sum_dl = _corpus_stats(increment, text_col)
+    layout = _write_slice(
+        increment, path, gen, id_col, text_col, bool(man.get("positions")),
+        sum_dl,
+    )
     from .incremental import _GENCLAIM_PREFIX
 
     with _manifest_lock(path):
@@ -337,6 +374,7 @@ def append_lexical_index(
                 "increment_id": increment_id,
                 "n_docs": n_docs,
                 "sum_dl": sum_dl,
+                **layout,
             }
         )
         _write_manifest(path, cur)
@@ -432,19 +470,25 @@ def compact_lexical_index(
     n_docs -= sum(int(t["n_docs_removed"]) for t in absorbed)
     sum_dl -= sum(int(t["sum_dl_removed"]) for t in absorbed)
     gen = _claim_generation(path)
-    _write_postings_gen(
-        _mask_deleted(
-            _read_artifact(spark, path, "postings", fold_man, _POSTINGS_SCHEMA),
-            tomb,
-        ),
-        path,
-        gen,
-    )
+    granularity = _granularity(sum_dl, TERM_BUCKETS)
+    ranges = {
+        "postings": _write_postings_gen(
+            _mask_deleted(
+                _read_artifact(
+                    spark, path, "postings", fold_man, _POSTINGS_SCHEMA
+                ),
+                tomb,
+            ),
+            path,
+            gen,
+            granularity,
+        )
+    }
     if man.get("positions"):
         # the positional artifact folds alongside, under the same
         # tombstone mask (positions rows are (doc_id, _gen)-keyed like
         # postings, so the one mask covers both)
-        _write_positions_gen(
+        ranges["positions"] = _write_positions_gen(
             _mask_deleted(
                 _read_artifact(
                     spark, path, "positions", fold_man, _POSITIONS_SCHEMA
@@ -453,15 +497,16 @@ def compact_lexical_index(
             ),
             path,
             gen,
+            granularity,
         )
-    dl = _read_artifact(spark, path, "doclist", fold_man, _DOCLIST_SCHEMA)
-    (
-        _mask_deleted(dl, tomb)
-        .select("doc_id", "dl", "db")
-        .repartition(DOC_BUCKETS, F.col("db"))
-        .write.mode("overwrite")
-        .partitionBy("db")
-        .parquet(os.path.join(path, "doclist", f"gen={gen}"))
+    ranges["doclist"] = _write_doclist_gen(
+        _mask_deleted(
+            _read_artifact(spark, path, "doclist", fold_man, _DOCLIST_SCHEMA),
+            tomb,
+        ),
+        path,
+        gen,
+        granularity,
     )
     applied = [
         g["increment_id"]
@@ -506,6 +551,8 @@ def compact_lexical_index(
                 "increment_id": None,
                 "n_docs": n_docs,
                 "sum_dl": sum_dl,
+                "g": granularity,
+                "ranges": ranges,
             }
         ]
         _write_manifest(path, cur)
@@ -524,18 +571,12 @@ def _active_tombstones(spark, path: str, man: dict) -> DataFrame | None:
     dead, rows appended later (a re-added doc) are live. The set is
     delete-volume-sized — deletes are rare events, so the mask join
     rides a small frame AQE broadcasts."""
-    import os
-
-    ents = man.get("tombstones", [])
     out = None
-    for t in ents:
-        d = os.path.join(path, "tombstones", f"gen={t['gen']}")
-        part = (
-            spark.read.schema("doc_id bigint, db int")
-            .option("basePath", d)
-            .parquet(d)
-            .select("doc_id", F.lit(int(t["max_gen"])).alias("max_gen"))
-        )
+    for t in man.get("tombstones", []):
+        part = _read_gen(spark, path, "tombstones", t, "doc_id bigint, db int")
+        if part is None:
+            continue
+        part = part.select("doc_id", F.lit(int(t["max_gen"])).alias("max_gen"))
         out = part if out is None else out.unionByName(part)
     if out is None:
         return None
@@ -580,8 +621,7 @@ def delete_from_lexical_index(
     training-data pipeline cannot ship without): the asked ids resolve
     against current membership (doc-bucket-pruned, already-deleted docs
     excluded), their exact (count, total dl) comes from the doclist's
-    stored ``dl`` (doclist rows without it — written before round 13 —
-    raise: rebuild such an index), and one
+    stored ``dl`` in the same doc-bucket-pruned read, and one
     doc-bucketed ``tombstones/gen=N`` artifact plus an atomic manifest
     append commits the delete. Every probe masks tombstoned docs and
     subtracts their mass from N/avgdl, so **probe-after-delete is
@@ -611,37 +651,26 @@ def delete_from_lexical_index(
     want = ids.select(
         F.col(ids.columns[0]).cast("long").alias("doc_id")
     ).distinct()
-    member = indexed_doc_ids(spark, path, want)
-    # exact removal mass: dl from the doclist
-    dl = _read_artifact(spark, path, "doclist", man, _DOCLIST_SCHEMA)
-    # mask already-deleted doclist rows: a deleted-then-re-added doc has
-    # TWO doclist rows and only the live one may contribute its dl
-    dl = _mask_deleted(dl, _active_tombstones(spark, path, man))
-    picked = member.join(
-        dl.select("doc_id", "dl"), "doc_id", "left"
+    # the members with their exact removal mass: the live doclist rows of
+    # the asked ids (a deleted-then-re-added doc has TWO doclist rows and
+    # only the live one may contribute its dl)
+    picked = (
+        _live_doclist(spark, path, man, want)
+        .join(want, "doc_id", "left_semi")
+        .select("doc_id", "dl")
     )
     row = picked.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum("dl").alias("s"),
-        F.count(F.when(F.col("dl").isNull(), 1)).alias("nulls"),
+        F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
     ).collect()[0]
     d_n, d_s = int(row["n"]), int(row["s"] or 0)
     if d_n == 0:
         return False
-    if int(row["nulls"]):
-        raise ValueError(
-            f"lexical index at {path} holds doclist rows without dl "
-            "(written before round 13), so the delete cannot subtract "
-            "exact lengths; rebuild the index with build_lexical_index"
-        )
     gen = _claim_generation(path)
-    (
-        member.withColumn("db", _db("doc_id"))
-        .repartition(1, F.col("db"))
-        .write.mode("overwrite")
-        .partitionBy("db")
-        .parquet(os.path.join(path, "tombstones", f"gen={gen}"))
-    )
+    granularity = _granularity(d_n, DOC_BUCKETS)
+    ranges = _write_ranged(
+        picked.select("doc_id", _db("doc_id").alias("db")),
+        path, "tombstones", gen, "db", DOC_BUCKETS, granularity,
+    )[0]
     with _manifest_lock(path):
         cur = _load_manifest(path)
         applied_now = {
@@ -676,6 +705,8 @@ def delete_from_lexical_index(
                 "max_gen": max(g["gen"] for g in cur["generations"]),
                 "n_docs_removed": d_n,
                 "sum_dl_removed": d_s,
+                "g": granularity,
+                "ranges": {"tombstones": ranges},
             }
         )
         _write_manifest(path, cur)
@@ -694,11 +725,10 @@ def indexed_doc_ids(
 ) -> DataFrame:
     """Which of ``ids`` (a 1-column (doc_id) frame) are ALREADY indexed —
     the nightly driver's cross-increment dedup guard and the hybrid-
-    consistency probe. Reads only the asked ids' ``db`` bucket partitions
-    of the doclist (the bucket list is a ≤DOC_BUCKETS-value driver-side
-    collect over the IDS, computed before the read so that only those
-    bucket dirs are listed — no per-generation listing job), so probe
-    cost tracks |ids| x bucket share, never index size.
+    consistency probe. Reads only the doclist ranges holding the asked
+    ids' ``db`` buckets (``_live_doclist``; the bucket list is computed
+    before the read, so scan paths come from the manifest — no listing
+    job), so probe cost tracks |ids| x bucket share, never index size.
 
     ``exclude_increment_id``: skip the generation that THIS increment
     itself committed — a crash-replay re-resolves an increment whose lex
@@ -713,8 +743,7 @@ def indexed_doc_ids(
     replay.
 
     Tokenless docs are members too: the doclist lists every indexed
-    doc, postings or not. A listed generation without a doclist
-    (written before round 12) raises in ``_read_artifact``."""
+    doc, postings or not."""
     man = _load_manifest(path)
     gens = [
         g for g in man["generations"]
@@ -723,16 +752,22 @@ def indexed_doc_ids(
     ]
     if not gens:
         return ids.select(F.col("doc_id").cast("long").alias("doc_id")).limit(0)
-    sub = dict(man, generations=gens)
     want = ids.select(F.col("doc_id").cast("long").alias("doc_id")).distinct()
+    dl = _live_doclist(spark, path, dict(man, generations=gens), want)
+    return want.join(dl.select("doc_id"), "doc_id", "left_semi")
+
+
+def _live_doclist(spark, path: str, man: dict, want: DataFrame) -> DataFrame:
+    """The doclist rows of ``man``'s generations in the doc buckets of
+    ``want``'s ids (a ≤DOC_BUCKETS-value driver-side collect over the
+    IDS, so only the ranges holding those buckets are read), with
+    deleted docs masked. The mask is scoped by generation, so a
+    re-appended doc's new row stays live (round 13)."""
     dbs = [r["db"] for r in want.select(_db("doc_id").alias("db")).distinct().collect()]
     dl = _read_artifact(
-        spark, path, "doclist", sub, _DOCLIST_SCHEMA, ("db", dbs)
+        spark, path, "doclist", man, _DOCLIST_SCHEMA, ("db", DOC_BUCKETS, dbs)
     )
-    # deleted docs are not members (round 13); the mask is scoped by
-    # generation so a re-appended doc's new row stays a member
-    dl = _mask_deleted(dl, _active_tombstones(spark, path, man))
-    return want.join(dl.select("doc_id"), "doc_id", "left_semi")
+    return _mask_deleted(dl, _active_tombstones(spark, path, man))
 
 
 def bm25_topk_from_index(
@@ -747,14 +782,14 @@ def bm25_topk_from_index(
 ) -> DataFrame:
     """``retrieval.bm25_topk`` served from the stored postings — result-
     identical (same schema (doc_id, n_terms, score), same integer
-    inputs, same rounding), but the only data read is the ≤|terms|
-    bucket partitions the query's terms hash into (static partition
+    inputs, same rounding), but the only data read is the bucket ranges
+    holding the ≤|terms| buckets the query's terms hash into (static
     pruning from a bucket list computed over the TERMS, not the corpus,
-    on the driver with no Spark job — ``_term_buckets``). Only those
-    bucket dirs are listed, one glob per generation, and a generation
-    holding none of them is skipped, so building the probe fires no job
-    at all. Per-query cost tracks matched-postings size, never corpus
-    size. N/avgdl come from the manifest's per-generation stats; df per
+    on the driver with no Spark job — ``_term_buckets``). The scan paths
+    of each generation's ranges come from its manifest entry, and a
+    generation holding none of them is skipped, so building the probe
+    fires no job at all. Per-query cost tracks matched-postings size,
+    never corpus size. N/avgdl come from the manifest's per-generation stats; df per
     query term is a count-window over the pruned postings.
 
     ``filter_ids`` (round-12 verdict task 2 — metadata-filtered
@@ -782,10 +817,10 @@ def bm25_topk_from_index(
     # is also what the scan-based bm25_topk and the DuckDB oracle compute
     avgdl = float(sum_dl) / float(n_docs)
     # bucket list from the query terms themselves, on the driver with no
-    # job; only those bucket dirs are listed and read
+    # job; only the ranges holding those buckets are read
     post = _read_artifact(
         spark, path, "postings", man, _POSTINGS_SCHEMA,
-        ("tb", _term_buckets(spark, terms)),
+        ("tb", TERM_BUCKETS, _term_buckets(spark, terms)),
     ).filter(F.col("term").isin(list(terms)))
     # tombstone mask BEFORE the df window: df is a surviving-docs fact
     post = _mask_deleted(post, _active_tombstones(spark, path, man))
@@ -833,8 +868,8 @@ def phrase_topk_from_index(
     index built with ``positions=True``.
 
     Plan shape — the same build-once-serve-many discipline as the BM25
-    probe: the only data read is the <=|terms| term-bucket partitions
-    the phrase's words hash into (static partition pruning from a
+    probe: the only data read is the term-bucket ranges holding the
+    <=|terms| buckets the phrase's words hash into (static pruning from a
     driver-side bucket list computed over the WORDS, pinned in
     tests/test_plans_round14.py); candidates are the matched positions
     rows only, so per-query cost tracks the phrase terms' total
@@ -886,7 +921,7 @@ def phrase_matching_docs(
     )
     pos = _read_artifact(
         spark, path, "positions", man, _POSITIONS_SCHEMA,
-        ("tb", _term_buckets(spark, terms)),
+        ("tb", TERM_BUCKETS, _term_buckets(spark, terms)),
     ).filter(F.col("term").isin(terms))
     pos = _mask_deleted(pos, _active_tombstones(spark, path, man))
     votes = (
@@ -956,7 +991,7 @@ def proximity_matching_docs(
     BM25/hybrid probes for proximity-constrained relevance ranking.
 
     Plan shape: the same build-once-serve-many contract as the phrase
-    probe — only the query terms' term-bucket partitions are read
+    probe — only the query terms' term-bucket ranges are read
     (static pruning from a driver-side bucket list), candidates are the
     matched positions rows only, and the window check is ONE range-frame
     window aggregate over those rows (collect_set(term) over
@@ -980,7 +1015,7 @@ def proximity_matching_docs(
         )
     pos = _read_artifact(
         spark, path, "positions", man, _POSITIONS_SCHEMA,
-        ("tb", _term_buckets(spark, terms)),
+        ("tb", TERM_BUCKETS, _term_buckets(spark, terms)),
     ).filter(F.col("term").isin(list(set(terms))))
     pos = _mask_deleted(pos, _active_tombstones(spark, path, man))
     occ = pos.select("doc_id", "term", F.explode("positions").alias("p"))
@@ -1034,7 +1069,7 @@ def proximity_matching_docs_batch(
         raise ValueError("proximity_matching_docs_batch needs non-empty terms")
     pos = _read_artifact(
         spark, path, "positions", man, _POSITIONS_SCHEMA,
-        ("tb", _term_buckets(spark, terms)),
+        ("tb", TERM_BUCKETS, _term_buckets(spark, terms)),
     ).filter(F.col("term").isin(terms))
     pos = _mask_deleted(pos, _active_tombstones(spark, path, man))
     occ = (
@@ -1115,15 +1150,22 @@ def add_positions_to_index(
         )
     tagged = live.join(docs, "doc_id").localCheckpoint(eager=True)
     try:
-        gens = [int(g["gen"]) for g in man["generations"]]
-        for gen in gens:
-            _write_positions_gen(
+        # each generation's positions take the granularity its postings
+        # were written with
+        ranges = {
+            int(g["gen"]): _write_positions_gen(
                 _positions_of(
-                    tagged.filter(F.col("_gen") == gen), "doc_id", "text"
+                    tagged.filter(F.col("_gen") == int(g["gen"])),
+                    "doc_id",
+                    "text",
                 ),
                 path,
-                gen,
+                int(g["gen"]),
+                int(g["g"]),
             )
+            for g in man["generations"]
+        }
+        gens = list(ranges)
         with _manifest_lock(path):
             cur = _load_manifest(path)
             if {g["gen"] for g in cur["generations"]} != set(gens):
@@ -1131,6 +1173,8 @@ def add_positions_to_index(
                     f"concurrent append landed during positions backfill "
                     f"of {path}; re-run add_positions_to_index"
                 )
+            for g in cur["generations"]:
+                g["ranges"]["positions"] = ranges[g["gen"]]
             cur["positions"] = True
             _write_manifest(path, cur)
         return gens
@@ -1185,7 +1229,7 @@ def phrase_matching_docs_batch(
         raise ValueError("phrase_matching_docs_batch needs non-empty phrases")
     pos = _read_artifact(
         spark, path, "positions", man, _POSITIONS_SCHEMA,
-        ("tb", _term_buckets(spark, terms)),
+        ("tb", TERM_BUCKETS, _term_buckets(spark, terms)),
     ).filter(F.col("term").isin(terms))
     pos = _mask_deleted(pos, _active_tombstones(spark, path, man))
     votes = (
@@ -1518,7 +1562,7 @@ def hybrid_topk_rrf_batch(
     ]
     post = _read_artifact(
         spark, lex_path, "postings", man, _POSTINGS_SCHEMA,
-        ("tb", _term_buckets(spark, terms)),
+        ("tb", TERM_BUCKETS, _term_buckets(spark, terms)),
     ).filter(F.col("term").isin(terms))
     # tombstone mask before ANY statistics (deleted docs are gone from
     # df too); then df over the UNFILTERED-by-metadata pruned postings —

@@ -459,14 +459,21 @@ def run_nightly(
             inc = inc.join(
                 seen.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
             )
+        from pyspark.sql import Observation
+
         from ..operators.bpetrain import (
             _checkpointed_rdd_id,
             _unpersist_rdd_ids,
         )
+        from ..operators.incremental import _observed
 
-        inc = inc.localCheckpoint(eager=True)
+        # the increment's row count is observed by the checkpoint job
+        obs = Observation()
+        inc = inc.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(
+            eager=True
+        )
         _inc_rdd = _checkpointed_rdd_id(inc)
-        n_inc = inc.count()
+        n_inc = int(_observed(obs).get("n") or 0)
         n_dup += max(raw.select(id_col).distinct().count() - n_inc, 0)
         if merged_dir is not None and n_inc > 0 and not (
             lex_done and ann_done and text_done

@@ -1,5 +1,5 @@
 """Persisted IVF index (operators/annindex.py): build-once-query-many
-parity with the per-invocation ivf_trained_topk, cell partition pruning,
+parity with the per-invocation ivf_trained_topk, cell-range pruning,
 and vacuum of orphaned text-index generations (operators/incremental.py
 vacuum_index)."""
 
@@ -17,6 +17,7 @@ from gcp_serverless_etl_pipeline_lab_spark.operators import (
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
+from index_pins import assert_scans_consistent, bucket_scans, plan_of
 
 
 def _corpus_queries(spark):
@@ -48,14 +49,19 @@ def test_stored_index_matches_per_invocation_ivf(spark, tmp_path):
 
 def test_query_scan_prunes_to_probed_cells(spark, tmp_path):
     """A single query probes nprobe cells; the stored-vector scan must
-    carry a partition filter on exactly those cells."""
+    filter on exactly those cells and name, as its partition filter,
+    exactly the ranges that hold them."""
     corpus, queries = _corpus_queries(spark)
     idx = str(tmp_path / "ann")
     annindex.build_ann_index(corpus, idx, 64, cells=8, iters=2, sample_rate=1.0)
     one = queries.orderBy("vec_id").limit(1)
     df = annindex.query_ann_index(spark, one, idx, k=5, nprobe=2)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "cell" in plan
+    plan = plan_of(df)
+    (scan,) = bucket_scans(plan, "cell")
+    assert len(scan[1]) == 2, scan
+    assert_scans_consistent(
+        plan, incremental._load_manifest(idx), "vectors", "cell", 8
+    )
     assert df.count() == 5
 
 
@@ -141,7 +147,7 @@ def test_ann_orphaned_generation_is_invisible(spark, tmp_path):
     # crashed append: generation written, manifest never flipped
     _, model = annindex.load_ann_model(idx)
     ghost = corpus.select((F.col("vec_id") + 900_000).alias("vec_id"), "embedding")
-    annindex._write_vectors_gen(ghost, idx, 1, model)
+    annindex._write_vectors_gen(ghost, idx, 1, model, ghost.count())
     after = sorted(
         map(tuple, annindex.query_ann_index(spark, queries, idx, 5, 2).collect())
     )
@@ -217,14 +223,8 @@ def test_ann_probe_plan_flat_in_generation_count(spark, tmp_path):
     def n_vector_scans(df):
         # each generation is its own FileScan; Spark truncates Location
         # strings (long tmp paths), so identify vector scans by the cell
-        # partition filter only they carry
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        return sum(
-            1
-            for line in plan.splitlines()
-            if "FileScan" in line
-            and "cell#" in line.partition("PartitionFilters: [")[2]
-        )
+        # filter only they carry
+        return len(bucket_scans(plan_of(df), "cell"))
 
     q = queries.limit(2)
     assert n_vector_scans(annindex.query_ann_index(spark, q, idx, 5, 2)) == 4

@@ -12,6 +12,7 @@ from gcp_serverless_etl_pipeline_lab_spark.operators import incremental
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
+from index_pins import assert_scans_consistent, bucket_scans, plan_of
 
 MAX_DF = 1000
 
@@ -100,17 +101,22 @@ def test_index_reused_across_batches_without_rebuild(spark, tmp_path):
 
 def test_probe_prunes_gram_buckets_for_small_batch(spark, tmp_path):
     """A small batch's grams occupy a strict subset of the hash buckets;
-    the probe plan must carry the bucket filter (partition pruning — the
-    flat-cost lever: a tiny nightly batch reads a slice of the postings,
-    not all of them)."""
+    the probe plan must filter on them and read only the ranges holding
+    them (the flat-cost lever: a tiny nightly batch reads a slice of the
+    postings, not all of them)."""
     base = _base(spark)
     idx = str(tmp_path / "idx")
     incremental.build_base_index(base, idx, max_df=MAX_DF)
     tiny = base.filter(F.col("doc_id") == base.agg(F.min("doc_id")).collect()[0][0])
     tiny = tiny.select((F.col("doc_id") + 3_000_000).alias("doc_id"), "text")
     df = incremental.near_dups_vs_index(spark, tiny, idx)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "gb" in plan and "PartitionFilters: [" in plan
+    plan = plan_of(df)
+    ((_, gbs),) = bucket_scans(plan, "gb")
+    assert 0 < len(gbs) < incremental.INDEX_GRAM_BUCKETS
+    assert_scans_consistent(
+        plan, incremental._load_manifest(idx), "grams", "gb",
+        incremental.INDEX_GRAM_BUCKETS,
+    )
     # and the pruned probe still finds the exact-resubmitted doc as a
     # jaccard-1.0 near match of its source
     rows = df.collect()

@@ -11,7 +11,6 @@ rebuild would have dropped them)."""
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,6 +23,7 @@ from gcp_serverless_etl_pipeline_lab_spark.operators import (
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
+from index_pins import assert_scans_consistent, bucket_scans, plan_of
 
 # small cap so that merging the increment pushes a real set of grams
 # over it — the crossing path is the one a lazy append would get wrong
@@ -157,7 +157,9 @@ def test_append_rejects_v1_flat_layout(spark, tmp_path):
 # ---------------------------------------------------------------- retired layouts
 # Every layout an earlier round wrote and no current writer produces is
 # refused with a ValueError at the point where it first shows up; none
-# is upgraded in place. The v1 cases only write a manifest.
+# is upgraded in place. The v1 and v2 cases only write a manifest: v2
+# kept one dir per bucket in every generation and recorded no bucket
+# ranges to read them by.
 
 
 def _write_v1_manifest(tmp_path, man: dict) -> str:
@@ -205,22 +207,6 @@ def _some_ids(spark, n):
     return _docs(spark).orderBy("doc_id").limit(n).select("doc_id")
 
 
-def _lex_without_doclist(spark, tmp_path):
-    idx = str(tmp_path / "lex")
-    lexindex.build_lexical_index(_docs(spark), idx)
-    shutil.rmtree(os.path.join(idx, "doclist"))
-    lexindex.indexed_doc_ids(spark, idx, _some_ids(spark, 3))
-
-
-def _ann_without_veclist(spark, tmp_path):
-    idx = str(tmp_path / "ann")
-    annindex.build_ann_index(
-        _emb(spark), idx, 64, cells=4, iters=2, sample_rate=1.0
-    )
-    shutil.rmtree(os.path.join(idx, "veclist"))
-    annindex.indexed_vec_ids(spark, idx, _emb(spark).select("vec_id").limit(3))
-
-
 def _ann_without_cell_counts(spark, tmp_path):
     idx = str(tmp_path / "ann")
     annindex.build_ann_index(
@@ -233,38 +219,51 @@ def _ann_without_cell_counts(spark, tmp_path):
     annindex.ann_index_stats(spark, idx)
 
 
-def _doclist_without_dl(spark, tmp_path):
-    idx = str(tmp_path / "lex")
-    lexindex.build_lexical_index(_docs(spark), idx)
-    d = os.path.join(idx, "doclist", "gen=0")
-    rows = spark.read.parquet(d).select("doc_id", "db").collect()
-    shutil.rmtree(d)
-    spark.createDataFrame(rows, "doc_id bigint, db int").write.partitionBy(
-        "db"
-    ).parquet(d)
-    lexindex.delete_from_lexical_index(spark, _some_ids(spark, 2), idx)
+def _v2_text(spark, tmp_path):
+    idx = _write_v1_manifest(
+        tmp_path,
+        {
+            "version": 2, "max_df": 100, "ngram": 3, "gram_buckets": 64,
+            "generations": [{"gen": 0, "increment_id": None}],
+        },
+    )
+    incremental.vacuum_index(idx)
 
 
-def _hashes_without_doc_id(spark, tmp_path):
-    idx = str(tmp_path / "text")
-    incremental.build_base_index(_docs(spark), idx)
-    d = os.path.join(idx, "hashes", "gen=0")
-    rows = spark.read.parquet(d).select("k").collect()
-    spark.createDataFrame(rows, "k string").coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(d)
-    incremental.delete_from_index(spark, _some_ids(spark, 1), idx)
+def _v2_lex(spark, tmp_path):
+    idx = _write_v1_manifest(
+        tmp_path,
+        {
+            "version": 2, "term_buckets": 64, "positions": False,
+            "generations": [
+                {"gen": 0, "increment_id": None, "n_docs": 1, "sum_dl": 1}
+            ],
+        },
+    )
+    lexindex.lexical_index_stats(spark, idx)
+
+
+def _v2_ann(spark, tmp_path):
+    idx = _write_v1_manifest(
+        tmp_path,
+        {
+            "version": 2, "dim": 2, "model": [[0, [0.0, 0.0]]],
+            "generations": [
+                {"gen": 0, "increment_id": None, "cell_counts": {"0": 1}}
+            ],
+        },
+    )
+    annindex.ann_index_stats(spark, idx)
 
 
 _RETIRED_LAYOUTS = {
     "v1-text": (_v1_text, "flat layout"),
     "v1-lex": (_v1_lex, "flat layout"),
     "v1-ann": (_v1_ann, "flat layout"),
-    "no-doclist": (_lex_without_doclist, "no doclist/gen=0 dir"),
-    "no-veclist": (_ann_without_veclist, "no veclist/gen=0 dir"),
+    "v2-text": (_v2_text, "version-2 bucket-dir layout"),
+    "v2-lex": (_v2_lex, "version-2 bucket-dir layout"),
+    "v2-ann": (_v2_ann, "version-2 bucket-dir layout"),
     "no-cell-counts": (_ann_without_cell_counts, "no cell_counts"),
-    "doclist-without-dl": (_doclist_without_dl, "without dl"),
-    "hashes-without-doc-id": (_hashes_without_doc_id, "without a doc_id"),
 }
 
 
@@ -277,7 +276,8 @@ def test_retired_layouts_raise(spark, tmp_path, case):
 
 def test_appended_probe_still_prunes_gram_buckets(spark, tmp_path):
     """Static bucket pruning must survive the multi-generation union —
-    each generation's scan carries the partition filter."""
+    each generation's scan reads only the ranges holding the batch's
+    gram buckets and filters on them."""
     base, inc, _ = _split(spark)
     idx = str(tmp_path / "idx")
     incremental.build_base_index(base, idx, max_df=MAX_DF)
@@ -286,9 +286,12 @@ def test_appended_probe_still_prunes_gram_buckets(spark, tmp_path):
         (F.col("doc_id") + 3_000_000).alias("doc_id"), "text"
     )
     df = incremental.near_dups_vs_index(spark, one, idx)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("PartitionFilters: [") >= 2  # both generations
-    assert "gb" in plan
+    plan = plan_of(df)
+    assert len(bucket_scans(plan, "gb")) == 2  # both generations
+    assert_scans_consistent(
+        plan, incremental._load_manifest(idx), "grams", "gb",
+        incremental.INDEX_GRAM_BUCKETS,
+    )
 
 
 def test_compact_folds_generations_preserves_probes_drops_dead_postings(
@@ -305,7 +308,9 @@ def test_compact_folds_generations_preserves_probes_drops_dead_postings(
     # probe-parity: compacted == multi-generation == rebuild
     assert _probe_all(spark, batch, idx) == before
     man = incremental._load_manifest(idx)
-    assert man["generations"] == [{"gen": 2, "increment_id": None}]
+    assert [(g["gen"], g["increment_id"]) for g in man["generations"]] == [
+        (2, None)
+    ]
     assert man["compacted_increments"] == ["inc-1"]
     # old generation dirs REMAIN on disk (an in-flight reader holding the
     # pre-flip manifest may still be scanning them) but are unlisted...

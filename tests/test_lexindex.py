@@ -13,6 +13,7 @@ from gcp_serverless_etl_pipeline_lab_spark.operators import incremental, lexinde
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
+from index_pins import assert_scans_pruned, plan_of
 
 TERMS = ["join", "filter", "vector"]
 
@@ -96,15 +97,18 @@ def test_compact_folds_generations_pure_rewrite(spark, tmp_path):
 
 
 def test_probe_plan_prunes_to_term_buckets(spark, tmp_path):
-    """The probe must carry a partition filter on the query terms' tb
-    buckets — the lever that keeps per-query cost tracking matched
-    postings, not corpus size."""
+    """The probe must read only the ranges holding the query terms' tb
+    buckets and filter on exactly those buckets — the lever that keeps
+    per-query cost tracking matched postings, not corpus size."""
     docs = _docs(spark)
     idx = str(tmp_path / "lex")
     lexindex.build_lexical_index(docs, idx)
     df = lexindex.bm25_topk_from_index(spark, idx, TERMS, k=10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [" in plan and "tb" in plan
+    plan = plan_of(df)
+    assert_scans_pruned(
+        plan, lexindex._load_manifest(idx), "postings", "tb",
+        lexindex.TERM_BUCKETS, lexindex._term_buckets(spark, TERMS),
+    )
     # and no scan of the documents table sneaks in
     assert "documents" not in plan
 

@@ -74,11 +74,11 @@ def test_backfill_crash_before_flip_is_replayable(spark, tmp_path, monkeypatch):
     real = lexindex._write_positions_gen
     calls = {"n": 0}
 
-    def crashy(positions, path, gen):
+    def crashy(positions, path, gen, g):
         calls["n"] += 1
         if calls["n"] == 2:
             raise RuntimeError("simulated crash")
-        real(positions, path, gen)
+        return real(positions, path, gen, g)
 
     monkeypatch.setattr(lexindex, "_write_positions_gen", crashy)
     with pytest.raises(RuntimeError, match="simulated crash"):
@@ -112,13 +112,14 @@ def test_backfill_concurrent_append_fence(spark, tmp_path, monkeypatch):
     real = lexindex._write_positions_gen
     state = {"fired": False}
 
-    def append_mid_backfill(positions, path, gen):
-        real(positions, path, gen)
+    def append_mid_backfill(positions, path, gen, g):
+        ranges = real(positions, path, gen, g)
         if not state["fired"]:
             state["fired"] = True
             assert lexindex.append_lexical_index(
                 spark, late, idx, "late"
             ) is True
+        return ranges
 
     monkeypatch.setattr(lexindex, "_write_positions_gen", append_mid_backfill)
     with pytest.raises(RuntimeError, match="concurrent append"):

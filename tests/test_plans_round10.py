@@ -10,6 +10,7 @@ from gcp_serverless_etl_pipeline_lab_spark.harness import QUERIES
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
+from index_pins import bucket_scans
 
 
 def _plan(df) -> str:
@@ -74,10 +75,5 @@ def test_ann_compacted_index_single_scan_pin(spark, tmp_path):
     annindex.compact_ann_index(spark, idx)
     df = annindex.query_ann_index(spark, emb.limit(2), idx, 5, 2)
     plan = _plan(df)
-    scans = sum(
-        1
-        for line in plan.splitlines()
-        if "FileScan" in line
-        and "cell#" in line.partition("PartitionFilters: [")[2]
-    )
+    scans = len(bucket_scans(plan, "cell"))
     assert scans == 1, f"compacted probe unions {scans} vector scans"

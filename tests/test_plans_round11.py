@@ -10,18 +10,36 @@ from gcp_serverless_etl_pipeline_lab_spark.harness import QUERIES
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
+from index_pins import (
+    assert_scans_consistent,
+    assert_scans_pruned,
+    plan_of as _plan,
+    pushes_terms,
+)
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+def _indexes(spark):
+    """The lexical and ANN indexes both a0h queries serve from, with
+    their manifests."""
+    from gcp_serverless_etl_pipeline_lab_spark.harness.text import _hybrid_indexes
+    from gcp_serverless_etl_pipeline_lab_spark.operators.incremental import (
+        _load_manifest,
+    )
+
+    lex, ann = _hybrid_indexes(spark, SF_SMOKE)
+    return _load_manifest(lex), _load_manifest(ann)
 
 
 def test_hybrid_from_index_never_scans_corpus(spark):
     """The whole point of serving from the persisted indexes: the hybrid
     query plan must read ONLY index artifacts — no documents scan (no
     corpus token explode) and no embeddings scan beyond the 1-row query
-    lookup; the postings scan must carry a term-bucket partition filter
-    and the vector scan a cell partition filter."""
+    lookup; the postings scan must read only the ranges holding the
+    query terms' buckets and filter on exactly those buckets, and the
+    vector scan likewise for its probed cells."""
+    from gcp_serverless_etl_pipeline_lab_spark.harness.text import _BM25_TERMS
+    from gcp_serverless_etl_pipeline_lab_spark.operators import lexindex
+
     df = QUERIES["a0h_hybrid_from_index"].builder(spark, SF_SMOKE)
     plan = _plan(df)
     scan_lines = [ln for ln in plan.splitlines() if "FileScan" in ln]
@@ -31,12 +49,12 @@ def test_hybrid_from_index_never_scans_corpus(spark):
     assert not any("documents" in ln for ln in scan_lines), (
         "hybrid-from-index scans the documents table"
     )
-    assert any(
-        "tb#" in ln.partition("PartitionFilters: [")[2] for ln in scan_lines
-    ), "postings scan carries no term-bucket partition filter"
-    assert any(
-        "cell#" in ln.partition("PartitionFilters: [")[2] for ln in scan_lines
-    ), "vector scan carries no cell partition filter"
+    lex_man, ann_man = _indexes(spark)
+    assert_scans_pruned(
+        plan, lex_man, "postings", "tb", lexindex.TERM_BUCKETS,
+        lexindex._term_buckets(spark, list(_BM25_TERMS)),
+    )
+    assert_scans_consistent(plan, ann_man, "vectors", "cell", len(ann_man["model"]))
 
 
 def test_hybrid_batch_legs_are_bounded(spark):
@@ -48,9 +66,8 @@ def test_hybrid_batch_legs_are_bounded(spark):
     plan = _plan(df)
     scan_lines = [ln for ln in plan.splitlines() if "FileScan" in ln]
     assert not any("documents" in ln for ln in scan_lines)
-    assert any(
-        "tb#" in ln.partition("PartitionFilters: [")[2] for ln in scan_lines
-    )
+    lex_man, _ = _indexes(spark)
+    assert_scans_consistent(plan, lex_man, "postings", "tb", 64)
     assert "partitionBy=[query_id" in plan.replace(" ", "") or (
         "windowspecdefinition(query_id" in plan
     ), "rank windows are not partitioned by query_id"
@@ -66,12 +83,14 @@ def test_bm25_probe_reads_only_matched_buckets(spark, tmp_path):
     docs = load_table(spark, SF_SMOKE, "documents").select("doc_id", "text")
     idx = str(tmp_path / "lex")
     lexindex.build_lexical_index(docs, idx)
-    df = lexindex.bm25_topk_from_index(spark, idx, ["join", "vector"], k=5)
+    terms = ["join", "vector"]
+    df = lexindex.bm25_topk_from_index(spark, idx, terms, k=5)
     plan = _plan(df)
-    assert "PartitionFilters: [" in plan and "tb#" in plan
-    assert "PushedFilters: [" in plan and "In(term" in plan, (
-        "term filter not pushed to the postings scan"
+    assert_scans_pruned(
+        plan, lexindex._load_manifest(idx), "postings", "tb",
+        lexindex.TERM_BUCKETS, lexindex._term_buckets(spark, terms),
     )
+    assert pushes_terms(plan, terms), "term filter not pushed to the postings scan"
 
 
 def test_deep_bpe_apply_routes_to_join_back(spark):

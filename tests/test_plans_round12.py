@@ -11,10 +11,7 @@ from gcp_serverless_etl_pipeline_lab_spark.operators import lexindex
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+from index_pins import assert_scans_pruned, plan_of as _plan
 
 
 def test_indexed_doc_ids_prunes_doclist_and_skips_postings(spark, tmp_path):
@@ -26,14 +23,16 @@ def test_indexed_doc_ids_prunes_doclist_and_skips_postings(spark, tmp_path):
     idx = str(tmp_path / "lex")
     lexindex.build_lexical_index(docs, idx)
     # ask about ids landing in few buckets: multiples of 128 hit only
-    # db = 0 (128 % 64 == 0) — the pruned plan reads one partition list
+    # db = 0 (128 % 64 == 0) — the pruned plan reads the one range
+    # holding it
     asked = spark.range(0, 512, 128).select(F.col("id").alias("doc_id"))
     df = lexindex.indexed_doc_ids(spark, idx, asked)
     plan = _plan(df)
     scan_lines = [ln for ln in plan.splitlines() if "FileScan" in ln]
-    assert any(
-        "db#" in ln.partition("PartitionFilters: [")[2] for ln in scan_lines
-    ), "doclist scan carries no doc-bucket partition filter"
+    assert_scans_pruned(
+        plan, lexindex._load_manifest(idx), "doclist", "db",
+        lexindex.DOC_BUCKETS, [0],
+    )
     assert not any("postings" in ln for ln in scan_lines), (
         "membership probe scans the postings"
     )

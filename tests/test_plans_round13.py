@@ -1,5 +1,5 @@
 """Plan pins for the round-13 additions — metadata-filtered retrieval
-must keep both legs' partition pruning (term buckets on the postings,
+must keep both legs' bucket-range pruning (term buckets on the postings,
 cells on the vectors): the allowed-set filter is a semi-join on the
 candidate stream, never a reason to widen the scan."""
 
@@ -11,13 +11,16 @@ from gcp_serverless_etl_pipeline_lab_spark.operators import annindex, lexindex
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
+from index_pins import (
+    assert_scans_consistent,
+    assert_scans_pruned,
+    bucket_scans,
+    plan_of as _plan,
+    pushes_terms,
+)
 
 EMB_DIM = 64
 TERMS = ["join", "filter", "vector"]
-
-
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
 
 
 def test_filtered_bm25_keeps_term_bucket_pruning(spark, tmp_path):
@@ -29,12 +32,13 @@ def test_filtered_bm25_keeps_term_bucket_pruning(spark, tmp_path):
         spark, idx, TERMS, k=10, filter_ids=allowed
     )
     plan = _plan(df)
-    # scan identity via the partition-filter column, not the file path —
+    # scan identity via the bucket-filter column, not the file path —
     # plan toString elides long paths under pytest's tmp dirs
-    assert "PartitionFilters: [tb#" in plan, (
-        "filtered BM25 probe lost the term-bucket partition filter"
+    assert_scans_pruned(
+        plan, lexindex._load_manifest(idx), "postings", "tb",
+        lexindex.TERM_BUCKETS, lexindex._term_buckets(spark, TERMS),
     )
-    assert "PushedFilters: [In(term" in plan, (
+    assert pushes_terms(plan, TERMS), (
         "term predicate no longer pushed to the postings scan"
     )
 
@@ -55,15 +59,15 @@ def test_filtered_ann_keeps_cell_pruning(spark, tmp_path):
         spark, queries, idx, k=5, nprobe=2, filter_ids=allowed
     )
     plan = _plan(df)
-    assert "PartitionFilters: [cell#" in plan, (
-        "filtered ANN probe lost the cell partition filter"
+    assert_scans_consistent(
+        plan, annindex._load_manifest(idx), "vectors", "cell", 8
     )
 
 
 def test_vec_membership_probe_prunes_buckets_and_skips_vectors(spark, tmp_path):
     """The ANN membership probe must read the veclist pruned to the
     asked ids' vb buckets and never touch the embedding-carrying
-    vectors/ (cell partitioning prunes nothing for an id lookup)."""
+    vectors/ (cell bucketing prunes nothing for an id lookup)."""
     emb = load_table(spark, SF_SMOKE, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -71,15 +75,14 @@ def test_vec_membership_probe_prunes_buckets_and_skips_vectors(spark, tmp_path):
     annindex.build_ann_index(
         emb, idx, EMB_DIM, cells=8, iters=2, sample_rate=1.0
     )
-    # multiples of 128 land in vb=0 only — a one-value partition list
+    # multiples of 128 land in vb=0 only — one bucket, one range
     asked = spark.range(0, 512, 128).select(F.col("id").alias("vec_id"))
     df = annindex.indexed_vec_ids(spark, idx, asked)
     plan = _plan(df)
-    import re
-
-    assert re.search(r"PartitionFilters: \[[^\]]*vb#", plan), (
-        "membership probe lost the vec-bucket partition filter"
+    assert_scans_pruned(
+        plan, annindex._load_manifest(idx), "veclist", "vb",
+        annindex.VEC_BUCKETS, [0],
     )
-    assert "embedding" not in plan and "cell#" not in plan, (
+    assert "embedding" not in plan and not bucket_scans(plan, "cell"), (
         "membership probe touches the vectors artifact"
     )

@@ -1,24 +1,24 @@
 """Plan pins for the round-14 additions — the phrase probe must keep
-term-bucket partition pruning (its cost contract: matched positions of
-the phrase's words, never corpus size), and the conjunctive hybrid's
+term-bucket range pruning (its cost contract: matched positions of the
+phrase's words, never corpus size), and the conjunctive hybrid's
 lexical leg must keep the BM25 probe's pruning unchanged."""
 
 from __future__ import annotations
-
-import re
-
-from pyspark.sql import functions as F
 
 from gcp_serverless_etl_pipeline_lab_spark.operators import lexindex
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
+from index_pins import assert_scans_pruned, plan_of as _plan, pushes_terms
 
 TERMS = ["join", "filter", "vector"]
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+def _pruned(spark, plan, idx, artifact, terms):
+    assert_scans_pruned(
+        plan, lexindex._load_manifest(idx), artifact, "tb",
+        lexindex.TERM_BUCKETS, lexindex._term_buckets(spark, terms),
+    )
 
 
 def test_phrase_probe_keeps_term_bucket_pruning(spark, tmp_path):
@@ -27,10 +27,8 @@ def test_phrase_probe_keeps_term_bucket_pruning(spark, tmp_path):
     lexindex.build_lexical_index(docs, idx, positions=True)
     df = lexindex.phrase_topk_from_index(spark, idx, ["window", "join"], k=10)
     plan = _plan(df)
-    assert re.search(r"PartitionFilters: \[[^\]]*tb#", plan), (
-        "phrase probe lost the term-bucket partition filter"
-    )
-    assert "PushedFilters: [In(term" in plan, (
+    _pruned(spark, plan, idx, "positions", ["window", "join"])
+    assert pushes_terms(plan, ["window", "join"]), (
         "phrase-term predicate no longer pushed to the positions scan"
     )
     # the phrase probe reads the positional artifact only — tf/dl belong
@@ -48,5 +46,5 @@ def test_conjunctive_bm25_keeps_pruning(spark, tmp_path):
         spark, idx, TERMS, k=10, match_all_terms=True
     )
     plan = _plan(df)
-    assert "PartitionFilters: [tb#" in plan
-    assert "PushedFilters: [In(term" in plan
+    _pruned(spark, plan, idx, "postings", TERMS)
+    assert pushes_terms(plan, TERMS)

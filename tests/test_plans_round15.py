@@ -1,12 +1,10 @@
 """Plan pins for the round-15 additions — the phrase-constrained hybrid
-must keep BOTH legs' partition pruning under the phrase semi-join
+must keep BOTH legs' bucket-range pruning under the phrase semi-join
 (term buckets on postings AND positions, cells on vectors), and the
 batch phrase probe must read the positions artifact ONCE per
 generation for the whole batch, not once per phrase."""
 
 from __future__ import annotations
-
-import re
 
 from pyspark.sql import functions as F
 
@@ -14,13 +12,24 @@ from gcp_serverless_etl_pipeline_lab_spark.operators import annindex, lexindex
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
+from index_pins import (
+    assert_scans_consistent,
+    assert_scans_pruned,
+    bucket_scans,
+    plan_of as _plan,
+    pushes_terms,
+    ranges_for,
+)
 
 EMB_DIM = 64
 TERMS = ["join", "filter", "vector"]
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+def _pruned(spark, plan, idx, artifact, terms):
+    assert_scans_pruned(
+        plan, lexindex._load_manifest(idx), artifact, "tb",
+        lexindex.TERM_BUCKETS, lexindex._term_buckets(spark, terms),
+    )
 
 
 def test_hybrid_phrase_keeps_both_legs_pruned(spark, tmp_path):
@@ -39,15 +48,26 @@ def test_hybrid_phrase_keeps_both_legs_pruned(spark, tmp_path):
         spark, lex, ann, TERMS, q, k=10, phrase=["window", "join"]
     )
     plan = _plan(df)
-    # every parquet leg stays partition-pruned: postings + positions on
-    # tb, vectors on cell
-    assert len(re.findall(r"PartitionFilters: \[[^\]]*tb#", plan)) >= 2, (
-        "phrase-constrained hybrid lost term-bucket pruning on a lex leg"
-    )
-    assert "PartitionFilters: [cell#" in plan, (
-        "phrase-constrained hybrid lost ANN cell pruning"
-    )
-    assert "PushedFilters: [In(term" in plan, (
+    # every parquet leg stays range-pruned: the positions scan to the
+    # phrase words' buckets, the postings scan to the query terms', the
+    # vectors to the probed cells
+    (gen0,) = lexindex._load_manifest(lex)["generations"]
+    legs = {
+        frozenset(lexindex._term_buckets(spark, words)): artifact
+        for artifact, words in (
+            ("positions", ["window", "join"]), ("postings", TERMS)
+        )
+    }
+    scans = bucket_scans(plan, "tb")
+    # the phrase's matching set feeds both legs, so positions may scan
+    # once per leg
+    assert {legs[frozenset(b)] for _, b in scans} == {
+        "positions", "postings"
+    }, "phrase-constrained hybrid lost term-bucket pruning on a lex leg"
+    for ranges, buckets in scans:
+        assert ranges == ranges_for(gen0, legs[frozenset(buckets)], 64, buckets)
+    assert_scans_consistent(plan, annindex._load_manifest(ann), "vectors", "cell", 8)
+    assert pushes_terms(plan, TERMS) and pushes_terms(plan, ["window", "join"]), (
         "term predicates no longer pushed under the phrase semi-join"
     )
 
@@ -72,12 +92,14 @@ def test_batch_phrase_probe_scans_positions_once_per_generation(
     # positions is the ONLY per-corpus artifact in the plan: one scan
     # per generation for the whole batch (2 gens here), NOT per phrase
     # (3 phrases x 2 gens = 6 would mean the batch re-scans per phrase)
-    n_scans = len(re.findall(r"PartitionFilters: \[[^\]]*tb#", plan))
+    n_scans = len(bucket_scans(plan, "tb"))
     assert n_scans == 2, (
         f"batch phrase probe has {n_scans} positions scans; expected one "
         "per generation (2)"
     )
-    assert "PushedFilters: [In(term" in plan
+    words = ["window", "join", "the", "filter"]
+    _pruned(spark, plan, idx, "positions", words)
+    assert pushes_terms(plan, words)
 
 
 def test_batch_phrase_probe_keeps_bucket_pruning(spark, tmp_path):
@@ -89,9 +111,7 @@ def test_batch_phrase_probe_keeps_bucket_pruning(spark, tmp_path):
     )
     df = lexindex.phrase_matching_docs_batch(spark, idx, phrases)
     plan = _plan(df)
-    assert re.search(r"PartitionFilters: \[[^\]]*tb#", plan), (
-        "batch phrase probe lost the term-bucket partition filter"
-    )
+    _pruned(spark, plan, idx, "positions", ["window", "join"])
 
 
 def test_proximity_probe_keeps_term_bucket_pruning(spark, tmp_path):
@@ -100,9 +120,7 @@ def test_proximity_probe_keeps_term_bucket_pruning(spark, tmp_path):
     lexindex.build_lexical_index(docs, idx, positions=True)
     df = lexindex.proximity_matching_docs(spark, idx, TERMS, window=8)
     plan = _plan(df)
-    assert re.search(r"PartitionFilters: \[[^\]]*tb#", plan), (
-        "proximity probe lost the term-bucket partition filter"
-    )
-    assert "PushedFilters: [In(term" in plan
+    _pruned(spark, plan, idx, "positions", TERMS)
+    assert pushes_terms(plan, TERMS)
     # positions only — the postings' tf column must not be scanned
     assert "tf#" not in plan

@@ -1,8 +1,8 @@
 """Job-floor pins for the index probes: building a BM25 or phrase probe
-fires no Spark job (the term-bucket gate runs on the driver and only the
-gated bucket dirs are listed), the postings scan's file index holds only
-those bucket dirs, and the hybrid probe evaluates its 1-row query frame
-exactly once."""
+fires no Spark job (the term-bucket gate runs on the driver and the
+scan paths come from the manifest), the postings scan's file index
+holds only the range dirs of the gated buckets, and the hybrid probe
+evaluates its 1-row query frame exactly once."""
 
 from __future__ import annotations
 
@@ -17,6 +17,7 @@ from gcp_serverless_etl_pipeline_lab_spark.operators import annindex, lexindex
 from gcp_serverless_etl_pipeline_lab_spark.sources.tables import load_table
 
 from conftest import SF_SMOKE
+from index_pins import ranges_for
 
 TERMS = ["join", "vector"]
 
@@ -80,14 +81,19 @@ def test_postings_scan_lists_only_gated_bucket_dirs(spark, indexes):
     scans = re.findall(r"InMemoryFileIndex\((\d+) paths\)\[([^,\]]+)", plan)
     assert len(scans) == 2, plan  # one scan per generation
     for n, first in scans:
-        assert re.search(r"/postings/gen=\d+/tb=\d+$", first), first
+        assert re.search(r"/postings/gen=\d+/r=\d+$", first), first
     listed = sum(int(n) for n, _ in scans)
-    existing = sum(
-        os.path.isdir(os.path.join(lex, "postings", f"gen={g}", f"tb={b}"))
-        for g in (0, 1)
-        for b in buckets
+    man = lexindex._load_manifest(lex)
+    gated = [
+        ranges_for(g, "postings", lexindex.TERM_BUCKETS, buckets)
+        for g in man["generations"]
+    ]
+    assert listed == sum(map(len, gated)) <= len(buckets) * 2
+    assert all(
+        os.path.isdir(os.path.join(lex, "postings", f"gen={g['gen']}", f"r={r}"))
+        for g, ranges in zip(man["generations"], gated)
+        for r in ranges
     )
-    assert listed == existing <= len(buckets) * 2
 
 
 def test_hybrid_evaluates_python_backed_query_once(spark, indexes):

@@ -1,8 +1,8 @@
 """Index probes over sparse generations: an appended one-doc generation
-holds only a few term-bucket dirs, so a probe's gated buckets may exist
-in some generations, in none of one, or in none at all. Every case must
-answer exactly as the scan twins over the surviving corpus, and the
-hybrid probe keeps its 1-row query contract."""
+holds postings in only a few term buckets, so a probe's gated buckets
+may hold rows in some generations, in none of one, or in none at all.
+Every case must answer exactly as the scan twins over the surviving
+corpus, and the hybrid probe keeps its 1-row query contract."""
 
 from __future__ import annotations
 
@@ -53,9 +53,10 @@ def _buckets(spark, words) -> dict[str, int]:
     return {r["term"]: r["tb"] for r in rows}
 
 
-def _dirs(lex: str, gen: int) -> set[int]:
+def _held_buckets(spark, lex: str, gen: int) -> set[int]:
+    """The term buckets generation ``gen`` holds postings in."""
     d = os.path.join(lex, "postings", f"gen={gen}")
-    return {int(n.split("=")[1]) for n in os.listdir(d) if n.startswith("tb=")}
+    return {r["tb"] for r in spark.read.parquet(d).select("tb").distinct().collect()}
 
 
 def _rows(df):
@@ -99,9 +100,9 @@ def _phrase_scan(live: dict[int, str], phrase: str, k: int) -> list[tuple]:
 
 
 QUERIES = {
-    # every bucket dir exists in gen 0, none in the one-doc gen 1
+    # both buckets hold postings in gen 0, none in the one-doc gen 1
     "none_in_appended": ["lazy", "cat"],
-    # one term lives in gen 1, the other's bucket has no gen-1 dir
+    # one term lives in gen 1, the other's bucket holds no gen-1 posting
     "some_in_appended": ["quick", "brown"],
 }
 
@@ -109,7 +110,7 @@ QUERIES = {
 def test_sparse_generation_probes_equal_scan_twins(spark, sparse):
     lex, ann, live_df, live = sparse
     tb = _buckets(spark, ["lazy", "cat", "quick", "brown"])
-    gen1 = _dirs(lex, 1)
+    gen1 = _held_buckets(spark, lex, 1)
     assert not {tb["lazy"], tb["cat"]} & gen1
     assert tb["quick"] in gen1 and tb["brown"] not in gen1
     docs = live_df.select("doc_id", "text")
@@ -133,9 +134,9 @@ def test_sparse_generation_probes_equal_scan_twins(spark, sparse):
         assert got == _phrase_scan(live, phrase, 5), phrase
 
 
-def test_terms_without_any_bucket_dir_return_empty(spark, sparse):
+def test_terms_without_any_bucket_posting_return_empty(spark, sparse):
     lex, ann, live_df, live = sparse
-    present = _dirs(lex, 0) | _dirs(lex, 1)
+    present = _held_buckets(spark, lex, 0) | _held_buckets(spark, lex, 1)
     candidates = [f"absent{i}" for i in range(200)]
     terms = [w for w, b in _buckets(spark, candidates).items() if b not in present][:2]
     assert len(terms) == 2
